@@ -54,9 +54,32 @@ def _step(n: int, mean: float, last: float, price: float,
     return n, mean, last, mean + phi * (last - mean)
 
 
+def _forecast_group(symbol: Any, pdfs: Iterator[pd.DataFrame],
+                    state: Tuple[int, float, float], phi: float
+                    ) -> Tuple[Tuple[int, float, float], pd.DataFrame]:
+    """Step one symbol's rows of a micro-batch through the AR(1) in
+    event-time order; returns the new state and the forecast rows.
+
+    Spark hands a group over in Arrow chunks of at most
+    `spark.sql.execution.arrow.maxRecordsPerBatch` rows whose order
+    across chunks is arbitrary, so the chunks are concatenated and
+    sorted once (stably: equal times keep their arrival order)."""
+    pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+        "event_time", kind="stable")
+    n, mean, last = state
+    out = []
+    for row in pdf.itertuples(index=False):
+        price = float(row.price)
+        n, mean, last, fc = _step(n, mean, last, price, phi)
+        out.append((symbol, row.event_time, price, fc))
+    return (n, mean, last), pd.DataFrame(
+        out, columns=[f.name for f in FORECAST_SCHEMA])
+
+
 def make_forecast_fn(phi: float = DEFAULT_PHI, phi_map=None):
     """Row-at-a-time online update inside each micro-batch (the reference
-    updates per element); rows are processed in event-time order.
+    updates per element); a symbol's rows are processed in event-time
+    order across all of the micro-batch's Arrow chunks.
 
     ``phi_map``: optional per-symbol phi — pass a broadcast of
     model_registry.phi_by_symbol(bundle) (or a plain dict) so the
@@ -68,16 +91,11 @@ def make_forecast_fn(phi: float = DEFAULT_PHI, phi_map=None):
         (symbol,) = key
         lookup = getattr(phi_map, "value", phi_map)  # broadcast or dict
         sym_phi = (lookup or {}).get(symbol, phi)
-        n, mean, last = state.get if state.exists else (0, 0.0, 0.0)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("event_time")
-            for row in pdf.itertuples(index=False):
-                price = float(row.price)
-                n, mean, last, fc = _step(n, mean, last, price, sym_phi)
-                out.append((symbol, row.event_time, price, fc))
-        state.update((n, mean, last))
-        yield pd.DataFrame(out, columns=[f.name for f in FORECAST_SCHEMA])
+        new, out = _forecast_group(
+            symbol, pdfs, state.get if state.exists else (0, 0.0, 0.0),
+            sym_phi)
+        state.update(new)
+        yield out
 
     return fn
 
@@ -122,18 +140,11 @@ def online_forecast_tws(prices: DataFrame, phi: float = DEFAULT_PHI,
             lookup = getattr(phi_map, "value", phi_map)
             sym_phi = (lookup or {}).get(symbol, phi)
             st = self._st.get() if self._st.exists() else None
-            n, mean, last = st if st is not None else (0, 0.0, 0.0)
-            out = []
-            for pdf in rows:
-                pdf = pdf.sort_values("event_time")
-                for row in pdf.itertuples(index=False):
-                    price = float(row.price)
-                    n, mean, last, fc = _step(n, mean, last, price,
-                                              sym_phi)
-                    out.append((symbol, row.event_time, price, fc))
-            self._st.update((n, mean, last))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FORECAST_SCHEMA])
+            new, out = _forecast_group(
+                symbol, rows, st if st is not None else (0, 0.0, 0.0),
+                sym_phi)
+            self._st.update(new)
+            yield out
 
         def close(self) -> None:
             pass

@@ -6,13 +6,26 @@ import glob
 import json
 import os
 
+import pandas as pd
 import pytest
+from conftest import conf_gates
 from pyspark.sql import functions as F
 
 from big_data_crypto_sentiment_spark.jobs.batch_job import run_batch
-from big_data_crypto_sentiment_spark.jobs.speed_layer import start_speed_layer
+from big_data_crypto_sentiment_spark.jobs.speed_layer import (
+    SHUFFLE_PARTITIONS,
+    start_speed_layer,
+)
 from big_data_crypto_sentiment_spark.jobs.train import main as train_main
 from big_data_crypto_sentiment_spark.queries._util import table
+from big_data_crypto_sentiment_spark.streaming import (
+    online_forecast,
+    replay_dir,
+    start_jsonl_sink,
+)
+from big_data_crypto_sentiment_spark.streaming.stateful import (
+    reference_forecast_series,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,28 +61,48 @@ def test_batch_job_incremental_two_runs(spark, tmp_path):
     assert "date" in joined.columns
 
 
-def test_speed_layer_five_sinks(spark, tmp_path):
+def _speed_roles(spark):
+    """events sf0.001 as the speed layer's tweet and price inputs."""
     ev = table(spark, SF_DIR, "events")
+    tweets = (ev.filter(F.col("props").isNotNull())
+                .select(F.col("ts").alias("event_time"),
+                        F.col("event_type").alias("symbol"),
+                        F.col("props").alias("text")))
+    prices = (ev.filter(F.col("value").isNotNull())
+                .select(F.col("ts").alias("event_time"),
+                        F.col("event_type").alias("symbol"),
+                        F.col("value").alias("price")))
+    return tweets, prices
+
+
+def _write_speed_inputs(spark, tmp_path):
     t_dir, p_dir = str(tmp_path / "t"), str(tmp_path / "p")
-    (ev.filter(F.col("props").isNotNull())
-       .select(F.col("ts").alias("event_time"),
-               F.col("event_type").alias("symbol"),
-               F.col("props").alias("text"))
-       .coalesce(1).write.parquet(t_dir))
-    (ev.filter(F.col("value").isNotNull())
-       .select(F.col("ts").alias("event_time"),
-               F.col("event_type").alias("symbol"),
-               F.col("value").alias("price"))
-       .coalesce(1).write.parquet(p_dir))
-    out = str(tmp_path / "out")
-    queries = start_speed_layer(spark, t_dir, p_dir, out,
-                                window="30 minutes")
+    tweets, prices = _speed_roles(spark)
+    tweets.coalesce(1).write.parquet(t_dir)
+    prices.coalesce(1).write.parquet(p_dir)
+    return t_dir, p_dir
+
+
+def _drain(queries):
     try:
         for q in queries:
             q.processAllAvailable()
     finally:
         for q in queries:
             q.stop()
+
+
+def _offset_log_conf(checkpoint, batch_id):
+    """The session conf a streaming query recorded for one micro-batch:
+    line 1 of the offset log entry is its metadata JSON."""
+    with open(os.path.join(checkpoint, "offsets", str(batch_id))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_speed_layer_five_sinks(spark, tmp_path):
+    t_dir, p_dir = _write_speed_inputs(spark, tmp_path)
+    out = str(tmp_path / "out")
+    _drain(start_speed_layer(spark, t_dir, p_dir, out, window="30 minutes"))
     n_tweets = spark.read.parquet(t_dir).count()
     n_prices = spark.read.parquet(p_dir).count()
     assert spark.read.parquet(os.path.join(out, "raw_tweets")).count() == n_tweets
@@ -82,6 +115,86 @@ def test_speed_layer_five_sinks(spark, tmp_path):
     # sentiment sink rows carry the enrichment column
     with open(glob.glob(f"{out}/tweet_sentiment/*.jsonl")[0]) as f:
         assert "sentiment_score" in json.loads(next(f))
+
+
+def test_speed_layer_state_partitions_follow_parallelism(spark, tmp_path):
+    """A fresh speed layer records the session's default parallelism,
+    not the session's shuffle-partition conf, as the state-partition
+    count of both stateful queries; the session's own value survives
+    the call, also when the call raises (and then no query is left
+    running)."""
+    t_dir, p_dir = _write_speed_inputs(spark, tmp_path)
+    cores = str(spark.sparkContext.defaultParallelism)
+    assert cores != "8"  # local[4]: the two counts are distinguishable
+    out = str(tmp_path / "out")
+    with conf_gates(spark, {SHUFFLE_PARTITIONS: "8"}):
+        _drain(start_speed_layer(spark, t_dir, p_dir, out,
+                                 window="30 minutes"))
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == "8"
+        for name in ("price_forecasts", "prices_with_tweets"):
+            conf = _offset_log_conf(
+                os.path.join(out, "_checkpoints", name), 0)
+            assert conf[SHUFFLE_PARTITIONS] == cores, name
+
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            start_speed_layer(spark, t_dir, str(tmp_path / "missing"),
+                              str(tmp_path / "out_missing"))
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == "8"
+        # the last query fails after four have started: they are stopped
+        with pytest.raises(Exception):
+            start_speed_layer(spark, t_dir, p_dir,
+                              str(tmp_path / "out_bad"),
+                              window="not a duration")
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == "8"
+        assert not spark.streams.active
+
+
+def test_speed_layer_resumes_forecast_checkpoint(spark, tmp_path):
+    """A forecast checkpoint created on the session's 8 shuffle
+    partitions (the job's earlier behaviour) resumes through
+    start_speed_layer on those 8, with its per-symbol state: the
+    forecasts over both input chunks equal the sequential reference
+    over all rows."""
+    tweets, prices = _speed_roles(spark)
+    t_dir, p_dir = str(tmp_path / "t"), str(tmp_path / "p")
+    tweets.coalesce(1).write.parquet(t_dir)
+    cut = pd.Timestamp("2024-01-15")
+    first = prices.filter(F.col("event_time") < F.lit(cut))
+    second = prices.filter(F.col("event_time") >= F.lit(cut))
+    first.coalesce(1).write.parquet(p_dir)
+    out = str(tmp_path / "out")
+    sink = os.path.join(out, "price_forecasts")
+    ck = os.path.join(out, "_checkpoints", "price_forecasts")
+    stream = replay_dir(spark, p_dir, spark.read.parquet(p_dir).schema)
+    with conf_gates(spark, {SHUFFLE_PARTITIONS: "8"}):
+        _drain([start_jsonl_sink(online_forecast(stream), sink, ck)])
+        assert 0 < _count_jsonl(sink) == first.count()
+
+        second.coalesce(1).write.mode("append").parquet(p_dir)
+        _drain(start_speed_layer(spark, t_dir, p_dir, out,
+                                 window="30 minutes"))
+    assert _offset_log_conf(ck, 0)[SHUFFLE_PARTITIONS] == "8"
+    assert _offset_log_conf(ck, 1)[SHUFFLE_PARTITIONS] == "8"
+
+    key = ["symbol", "event_time"]
+    got = pd.DataFrame([json.loads(line)
+                        for p in glob.glob(f"{sink}/*.jsonl")
+                        for line in open(p)])
+    got["event_time"] = pd.to_datetime(got["event_time"])
+    got = got.sort_values(key).reset_index(drop=True)
+    want = (reference_forecast_series(prices.toPandas())
+            .sort_values(key).reset_index(drop=True))
+    assert len(got) == len(want)
+    pd.testing.assert_series_equal(got["next_price_forecast"],
+                                   want["next_price_forecast"],
+                                   rtol=1e-12)
+    # the state carried over: from an empty state the second chunk's
+    # forecasts come out different
+    fresh = (reference_forecast_series(second.toPandas())
+             .sort_values(key)["next_price_forecast"].to_numpy())
+    resumed = got.loc[want["event_time"] >= cut, "next_price_forecast"]
+    assert len(fresh) == len(resumed) > 0
+    assert (resumed.to_numpy() != fresh).any()
 
 
 def test_train_job_writes_bundle(spark, tmp_path, capsys):

@@ -5,6 +5,7 @@ append-mode emission semantics, and the multi-sink fan-out."""
 
 import pandas as pd
 import pytest
+from conftest import conf_gates
 from pyspark.sql import functions as F
 
 from big_data_crypto_sentiment_spark.operators.windowed_join import (
@@ -156,6 +157,52 @@ def test_stateful_online_forecast_matches_sequential_reference(
     raw = (prices_role(spark, SF_DIR)
            .select("symbol", "event_time", "price").toPandas())
     want = (reference_forecast_series(raw, phi=0.8)
+            .sort_values(["symbol", "event_time"]).reset_index(drop=True))
+    assert len(got) == len(want)
+    pd.testing.assert_series_equal(got["next_price_forecast"],
+                                   want["next_price_forecast"],
+                                   rtol=1e-12)
+
+
+def test_online_forecast_orders_rows_across_arrow_chunks(spark, tmp_path):
+    """A symbol's rows in one micro-batch reach the forecast function in
+    Arrow chunks of maxRecordsPerBatch rows; with 16-row chunks and
+    event times shuffled within each input file, the AR(1) must still
+    step through all of a micro-batch's rows in event-time order."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    n = 200  # rows per symbol, 100 per input file
+    rows = pd.concat([
+        pd.DataFrame({
+            "symbol": sym,
+            "event_time": pd.Timestamp("2024-01-01 12:00:00")
+            + pd.to_timedelta(np.arange(n), unit="s"),
+            "price": 100.0 + rng.normal(size=n).cumsum()})
+        for sym in ("btc", "eth")], ignore_index=True)
+    src = str(tmp_path / "src")
+    schema = "symbol string, event_time timestamp, price double"
+    for i, chunk in enumerate(np.array_split(
+            rows.sort_values("event_time").index, 2)):
+        shuffled = rows.loc[chunk].sample(frac=1, random_state=i)
+        spark.createDataFrame(shuffled, schema).coalesce(1) \
+             .write.mode("append").parquet(src)
+    with conf_gates(spark,
+                    {"spark.sql.execution.arrow.maxRecordsPerBatch": "16"}):
+        out = online_forecast(replay_dir(spark, src,
+                                         spark.read.parquet(src).schema))
+        q = (out.writeStream.format("memory").queryName("forecasts_chunked")
+                .outputMode("append")
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .start())
+        try:
+            q.processAllAvailable()
+            got = (spark.table("forecasts_chunked").toPandas()
+                   .sort_values(["symbol", "event_time"])
+                   .reset_index(drop=True))
+        finally:
+            q.stop()
+    want = (reference_forecast_series(rows)
             .sort_values(["symbol", "event_time"]).reset_index(drop=True))
     assert len(got) == len(want)
     pd.testing.assert_series_equal(got["next_price_forecast"],
