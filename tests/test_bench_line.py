@@ -59,7 +59,8 @@ def test_pinned_entries_survive_even_when_fast(monkeypatch):
 def test_pins_file_names_are_registry_or_artifact_entries():
     """The committed pin list must stay consistent with the bench's
     own entry universe (registry names + artifact: entries), or a
-    stale pin would silently waste line budget."""
+    stale pin would silently waste line budget — and must name every
+    artifact: entry."""
     sys.path.insert(0, "/root/repo")
     import bench
     from big_data_crypto_sentiment_spark.queries import all_queries
@@ -71,6 +72,9 @@ def test_pins_file_names_are_registry_or_artifact_entries():
     art = {n for n, _ in bench.artifact_thunks(None, "")}
     for n in pins:
         assert n in universe or n in art, n
+    # every artifact entry is pinned: a new one must reach the line
+    # even when its build is fast
+    assert not art - set(pins), sorted(art - set(pins))
 
 
 def test_tiny_limit_still_valid_json():

@@ -4,93 +4,36 @@ The tier dispatch in resize_images / extract_media_features /
 extract_audio_features / sample_frame_pixels catches exactly
 (NotImplementedError, ValueError) — any other exception type escaping
 a decoder fails the whole Spark task on one adversarial row (the r11
-ADVICE bug class). These tests pin seven leaks found by targeted
-review + mutation fuzzing in r12, each previously raising
-struct.error / IndexError / RecursionError:
+ADVICE bug class). These tests pin leaks found by targeted review +
+mutation fuzzing in r12, each previously raising IndexError /
+RecursionError:
 
-1. PNG with a CRC-valid IHDR chunk of the wrong length (the CRC is
-   attacker-controlled, so the CRC gate does not help) — struct.error.
-2. JPEG SOF segment with an empty/short body — IndexError.
-3. JPEG DQT segment shorter than its table — IndexError.
-4. JPEG DHT whose 16-entry counts field is cut short — IndexError
-   (the sum(counts) > len(symbols) gate alone misses this shape).
-5. GIF truncated between a local color table and the LZW minimum code
+1. GIF truncated between a local color table and the LZW minimum code
    size byte — IndexError.
-6. MP4 tkhd box with size 8 (no body) at the end of the payload —
+2. MP4 tkhd box with size 8 (no body) at the end of the payload —
    IndexError.
-7. Deeply-nested moov/trak (MP4) or `rec ` LIST (AVI) containers —
-   RecursionError from the recursive box walks (both now use explicit
+3. Deeply-nested moov/trak (MP4) or `rec ` LIST (AVI) containers —
+   RecursionError from recursive box walks (the walks use explicit
    continuation stacks that preserve the document-order visit the
-   "first tkhd with real dimensions wins" rule and the AVI frame-span
-   ordering depend on).
+   "first tkhd with real dimensions wins" rule depends on).
 
-Plus a seeded mutation-fuzz smoke over every decode entry point.
+Plus the Avro reader's bounded-failure pins and a seeded mutation-fuzz
+smoke over every decode entry point (tools/fuzz_decoders.py's corpus).
 """
 
 import random
 import struct
-import zlib
 
-import numpy as np
 import pytest
 
+import tools.fuzz_decoders as FZ
 from big_data_crypto_sentiment_spark.operators.multimodal import (
-    _avi_mjpeg_frames,
     _decode_mp4,
-    decode_gif_frames,
     decode_gif_pixels,
-    decode_image_pixels,
-    decode_jpeg_pixels,
     decode_media,
-    decode_png_pixels,
-    decode_video_frames,
-    decode_wav_samples,
-    encode_png,
 )
 
 OK_TYPES = (ValueError, NotImplementedError)
-
-
-def _png_chunk(ctype, data):
-    return (struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-
-def test_png_wrong_length_ihdr_is_valueerror():
-    # CRC-valid 5-byte IHDR: the struct.unpack(">IIBBBBB") call used
-    # to raise struct.error, which the resize tiering doesn't catch
-    payload = (b"\x89PNG\r\n\x1a\n"
-               + _png_chunk(b"IHDR", b"\x00" * 5)
-               + _png_chunk(b"IDAT", zlib.compress(b"\x00"))
-               + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="IHDR length"):
-        decode_png_pixels(payload)
-
-
-def test_jpeg_empty_sof_body_is_valueerror():
-    with pytest.raises(ValueError, match="SOF body"):
-        decode_jpeg_pixels(b"\xff\xd8\xff\xc0\x00\x02\xff\xd9")
-
-
-def test_jpeg_short_sof_component_list_is_valueerror():
-    # ncomp=3 declared but zero component descriptors present
-    body = bytes([8]) + struct.pack(">HH", 8, 8) + bytes([3])
-    seg = b"\xff\xc0" + struct.pack(">H", 2 + len(body)) + body
-    with pytest.raises(ValueError, match="SOF body"):
-        decode_jpeg_pixels(b"\xff\xd8" + seg + b"\xff\xd9")
-
-
-def test_jpeg_truncated_dqt_is_valueerror():
-    with pytest.raises(ValueError, match="DQT truncated"):
-        decode_jpeg_pixels(b"\xff\xd8\xff\xdb\x00\x04\x00\x01\xff\xd9")
-
-
-def test_jpeg_short_dht_counts_is_valueerror():
-    # counts field cut to 10 of its 16 bytes: sum(counts)=0 passes the
-    # old symbol-shortage gate, then counts[10] used to IndexError
-    seg = b"\xff\xc4\x00\x0d\x00" + bytes(10)
-    with pytest.raises(ValueError, match="DHT truncated"):
-        decode_jpeg_pixels(b"\xff\xd8" + seg + b"\xff\xd9")
 
 
 def test_gif_truncated_before_lzw_code_size_is_valueerror():
@@ -126,7 +69,7 @@ def test_deeply_nested_avi_rec_lists_do_not_recurse():
             + inner
     avi = b"RIFF" + struct.pack("<I", 4 + len(inner)) + b"AVI " + inner
     with pytest.raises(ValueError):
-        _avi_mjpeg_frames(avi)
+        decode_media(avi, "video")
 
 
 def test_mp4_first_video_track_still_wins_after_stack_rewrite():
@@ -148,53 +91,6 @@ def test_mp4_first_video_track_still_wins_after_stack_rewrite():
     assert (meta["width"], meta["height"]) == (32, 24)
 
 
-def test_avi_frame_spans_stay_in_document_order_across_rec_lists():
-    # movi: [frame a][LIST rec [frame b][frame c]][frame d] — the spans
-    # must come back a, b, c, d (pre-order), not a, d, b, c
-    def chunk(cid, body):
-        return (cid + struct.pack("<I", len(body)) + body
-                + (b"\x00" if len(body) & 1 else b""))
-
-    def lst(ltype, body):
-        return chunk(b"LIST", ltype + body)
-
-    frames = [b"\xff\xd8" + bytes([i]) * 3 for i in range(4)]
-    avih = struct.pack("<I", 40000) + b"\x00" * 12 \
-        + struct.pack("<I", 4) + b"\x00" * 12 \
-        + struct.pack("<II", 8, 8) + b"\x00" * 16
-    movi = (chunk(b"00dc", frames[0])
-            + lst(b"rec ", chunk(b"00dc", frames[1])
-                  + chunk(b"00dc", frames[2]))
-            + chunk(b"00dc", frames[3]))
-    body = b"AVI " + lst(b"hdrl", chunk(b"avih", avih)) \
-        + lst(b"movi", movi)
-    avi = b"RIFF" + struct.pack("<I", len(body)) + body
-    spans, interval = _avi_mjpeg_frames(avi)
-    assert interval == 40
-    assert [avi[a:b] for a, b in spans] == frames
-
-
-def test_jpeg_sos_component_count_gated():
-    # ns=0 (scan[0] would IndexError) and ns > frame components (the
-    # sequential single-component path would misread the stream) are
-    # both spec-invalid — ValueError at the header, found by mutation
-    # fuzz on a non-interleaved seed
-    def seg(marker, body):
-        return marker + struct.pack(">H", 2 + len(body)) + body
-
-    dqt = seg(b"\xff\xdb", bytes([0]) + bytes([1] * 64))
-    dht_dc = seg(b"\xff\xc4", bytes([0x00, 1] + [0] * 15 + [0]))
-    dht_ac = seg(b"\xff\xc4", bytes([0x10, 1] + [0] * 15 + [0]))
-    sof = seg(b"\xff\xc0", bytes([8]) + struct.pack(">HH", 8, 8)
-              + bytes([1, 1, 0x11, 0]))
-    for sos_body in (bytes([0, 0, 63, 0]),
-                     bytes([2, 1, 0x00, 1, 0x00, 0, 63, 0])):
-        payload = (b"\xff\xd8" + dqt + dht_dc + dht_ac + sof
-                   + seg(b"\xff\xda", sos_body) + b"\x00\xff\xd9")
-        with pytest.raises(ValueError, match="component count"):
-            decode_jpeg_pixels(payload)
-
-
 def test_gif_lzw_code_size_over_11_is_valueerror():
     # LZW codes cap at 12 bits, so mcs > 11 is structurally impossible;
     # a crafted mcs byte of 46 used to hang the executor building a
@@ -205,27 +101,6 @@ def test_gif_lzw_code_size_over_11_is_valueerror():
          + bytes([46, 2, 0x44, 0x8E, 0]) + b"\x3b")
     with pytest.raises(ValueError, match="minimum code size"):
         decode_gif_pixels(g)
-
-
-def test_jpeg_dc_category_over_15_is_valueerror():
-    # a corrupt DHT may map a code to ANY symbol byte; a DC magnitude
-    # category over 15 used to drive read_bits(s) into a Python int
-    # too large for the coefficient arrays (OverflowError escaped the
-    # tier dispatch) — found by mutation fuzz on a valid baseline JPEG
-    def seg(marker, body):
-        return marker + struct.pack(">H", 2 + len(body)) + body
-
-    dqt = seg(b"\xff\xdb", bytes([0]) + bytes([1] * 64))
-    # single 1-bit code 0 -> symbol 200 (an absurd DC category)
-    dht_dc = seg(b"\xff\xc4", bytes([0x00, 1] + [0] * 15 + [200]))
-    dht_ac = seg(b"\xff\xc4", bytes([0x10, 1] + [0] * 15 + [0]))
-    sof = seg(b"\xff\xc0", bytes([8]) + struct.pack(">HH", 8, 8)
-              + bytes([1, 1, 0x11, 0]))
-    sos = seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 63, 0]))
-    payload = (b"\xff\xd8" + dqt + dht_dc + dht_ac + sof + sos
-               + b"\x00\x00\x00\x00" + b"\xff\xd9")
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(payload)
 
 
 def test_avro_reader_adversarial_bytes_raise_valueerror():
@@ -294,83 +169,13 @@ def test_mutation_fuzz_smoke_only_contract_exceptions_escape():
     """Seeded bounded fuzz: byte-mutated valid payloads through every
     decode entry point — only ValueError/NotImplementedError (or a
     successful decode) may come back."""
+    seeds = FZ.build_seeds()
+    for p in seeds:                  # every seed is a valid container
+        decode_media(p, "image")
     rng = random.Random(1234)
-    img = (np.arange(147) % 256).astype(np.uint8).reshape(7, 7, 3)
-    seeds = [encode_png(img)]
-    # tiny GIF (single 2x2 frame, global table)
-    gif = (b"GIF89a" + struct.pack("<HH", 2, 2)
-           + bytes([0x80, 0, 0]) + bytes(6)         # GCT size 2
-           + b"\x2c" + struct.pack("<HHHH", 0, 0, 2, 2) + bytes([0])
-           + bytes([2, 2, 0x44, 0x8E, 0]) + b"\x3b")
-    seeds.append(gif)
-    # minimal WAV
-    pcm = struct.pack("<64h", *range(64))
-    wav = (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000,
-                                   16000, 2, 16)
-           + b"data" + struct.pack("<I", len(pcm)) + pcm)
-    seeds.append(wav)
-    # the r13 driver-hash fixture encoders feed production queries, so
-    # their output shapes join the central corpus: FLAC (verbatim
-    # subframe), animated GIF (4 frames, 256-entry table), WAV twin
-    from big_data_crypto_sentiment_spark.operators import (
-        media_fixtures as MF,
-    )
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_flac_samples,
-    )
-    seeds += [MF.flac_bytes(13), MF.gif_animated_bytes(7),
-              MF.wav_pcm_bytes(31)]
-    # r14: the sub-8-bit TIFF tier joins the corpus (1-bit 8x4,
-    # uncompressed, one strip)
-    bil_rows = bytes([0b10110010, 0b01011101, 0b11110000, 0b00001111])
-    n_ent = 9
-    data_at = 8 + 2 + 12 * n_ent + 4
-    ents = b""
-    for tag, typ, val in ((256, 3, 8), (257, 3, 4), (258, 3, 1),
-                          (259, 3, 1), (262, 3, 1), (273, 4, data_at),
-                          (277, 3, 1), (278, 4, 4),
-                          (279, 4, len(bil_rows))):
-        ents += struct.pack("<HHI", tag, typ, 1) \
-            + struct.pack("<" + ("H" if typ == 3 else "I"),
-                          val).ljust(4, b"\x00")
-    seeds.append(b"II*\x00" + struct.pack("<I", 8)
-                 + struct.pack("<H", n_ent) + ents
-                 + struct.pack("<I", 0) + bil_rows)
-    # late r14: a hierarchical JPEG (DHP + base + EXP + SOF5 diff)
-    # joins the corpus via the independent test encoder
-    import importlib.util
-    import os as _os
-    _spec = importlib.util.spec_from_file_location(
-        "_t_hier", _os.path.join(_os.path.dirname(__file__),
-                                 "test_jpeg_hierarchical.py"))
-    _hier = importlib.util.module_from_spec(_spec)
-    _spec.loader.exec_module(_hier)
-    seeds.append(_hier._hier_grey(_hier._smooth(16, 16, 9))[0])
-    # late r14: a lossless (SOF3) JPEG joins the corpus too
-    _spec2 = importlib.util.spec_from_file_location(
-        "_t_ll", _os.path.join(_os.path.dirname(__file__),
-                               "test_jpeg_lossless.py"))
-    _ll = importlib.util.module_from_spec(_spec2)
-    _spec2.loader.exec_module(_ll)
-    seeds.append(_ll._encode_lossless([_ll._img(8, 8, 3)], sel=4)[0])
-    entries = [lambda p: decode_media(p, "image"), decode_image_pixels,
-               decode_gif_frames, decode_video_frames,
-               decode_wav_samples, decode_flac_samples]
     for _ in range(400):
-        base = bytearray(seeds[rng.randrange(len(seeds))])
-        for _ in range(rng.randrange(1, 8)):
-            op = rng.random()
-            if op < 0.6 and base:
-                base[rng.randrange(len(base))] = rng.getrandbits(8)
-            elif op < 0.8 and len(base) > 4:
-                del base[rng.randrange(len(base)):]
-            else:
-                at = rng.randrange(len(base) + 1)
-                base[at:at] = bytes(rng.getrandbits(8)
-                                    for _ in range(rng.randrange(1, 4)))
-        p = bytes(base)
-        for fn in entries:
+        p = FZ.mutate(rng, seeds)
+        for fn in FZ.ENTRY_POINTS:
             try:
                 fn(p)
             except OK_TYPES:

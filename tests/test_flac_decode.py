@@ -1,5 +1,5 @@
 """Real FLAC decode pins (r12): decode_flac_samples against an
-INDEPENDENT spec-built encoder (the test_jpeg_progressive pattern) —
+INDEPENDENT spec-built encoder —
 frame headers with CRC-8, constant / verbatim / fixed / LPC subframes,
 partitioned-Rice residuals (incl. the escape-to-raw partitions),
 wasted bits, mid-side stereo decorrelation, and the tier wiring in

@@ -1,22 +1,12 @@
-"""Pins for the four r11 ADVICE findings closed in r12.
+"""Pins for r11 ADVICE findings closed in r12.
 
-1. (medium) zero-dimension PNG/BMP payloads must raise ValueError in
-   the pixel decoders — previously a width=0, height>max_dim PNG
-   decoded to shape (h, 0, 1) and crashed area_resample with an
-   IndexError the resize tiering doesn't catch, failing the whole
-   Spark task on one adversarial row.
-2. (medium) a non-interleaved multi-scan baseline JPEG (first SOS
-   covering fewer components than the frame declares) must never be
-   silently committed as the Y scan alone. Originally closed by a
-   loud NotImplementedError; late-r12 the shape DECODES FOR REAL
-   (sequential per-component scans accumulate into the progressive
-   coefficient store, finalize requires every component scanned), so
-   the pin now asserts the real decode matches the interleaved twin
-   and that an INCOMPLETE stream (Y scan only, no Cb/Cr) still raises
-   loudly instead of producing a grey image.
-3. (low) the multimodal module/tier docs must state baseline JPEG is
-   fully decoded (checked here so they can't silently regress).
-4. (low) _genstore.run_id_for_checkpoint must never return an empty
+1. (medium) zero-dimension images must never fail the Spark task: a
+   GIF image descriptor claiming width 0 raises ValueError in the
+   pixel decoder, and zero-width PNG/BMP headers land in
+   resize_images' decoded-dims marker tier — previously a width=0,
+   height>max_dim PNG decoded to shape (h, 0, 1) and crashed
+   area_resample with an IndexError the resize tiering doesn't catch.
+2. (low) _genstore.run_id_for_checkpoint must never return an empty
    run id: the marker is now published atomically WITH its content
    (temp-file + hard link), and a legacy empty marker is repaired.
 """
@@ -32,10 +22,7 @@ from big_data_crypto_sentiment_spark.jobs._genstore import (
     run_id_for_checkpoint,
 )
 from big_data_crypto_sentiment_spark.operators.multimodal import (
-    decode_bmp_pixels,
     decode_gif_pixels,
-    decode_jpeg_pixels,
-    decode_png_pixels,
 )
 
 
@@ -68,11 +55,7 @@ def _zero_width_bmp(h=5):
 
 
 def test_zero_dimension_images_raise_valueerror():
-    with pytest.raises(ValueError):
-        decode_png_pixels(_zero_width_png())
-    with pytest.raises(ValueError):
-        decode_bmp_pixels(_zero_width_bmp())
-    # GIF gets the same gate (image descriptor claiming 0xN)
+    # a GIF image descriptor claiming 0xN
     from tests.test_sinks_multimodal import _gif, PALETTE
     g = bytearray(_gif(4, 3, [0] * 12, PALETTE))
     desc = g.index(0x2C)
@@ -102,159 +85,6 @@ def test_zero_width_png_falls_to_decoded_dims_tier_not_task_failure(
     assert out[2].resize_status == "decoded-dims"
     assert (out[1].src_width, out[1].src_height) == (0, 300)
     assert bytes(out[1].payload).startswith(RESIZE_STUB_MAGIC)
-
-
-def _encode_noninterleaved(img, q=16, subsample=False):
-    """Independent NON-INTERLEAVED baseline encoder (test-side
-    reference): same front half as the interleaved twin
-    (_quantize_ref), then one single-component SOS per component,
-    blocks in each component's own ceil-divided grid (T.81 A.2.2 —
-    NOT the MCU-padded grid), shared fixed-length Huffman tables.
-    Returns (payload, reference_rgb)."""
-    from tests.test_sinks_multimodal import (
-        _BitWriter,
-        _fixed_len_huff,
-        _quantize_ref,
-        _zigzag_nat,
-    )
-    h, w = img.shape[:2]
-    comps, quantized, ref, mcux, mcuy, qtab, hmax, vmax = \
-        _quantize_ref(img, q, subsample)
-    zz_nat = _zigzag_nat()
-
-    def block_symbols(blk, pred):
-        dc = int(blk.reshape(-1)[0]) - pred
-        s = abs(dc).bit_length()
-        dcv = dc if dc >= 0 else dc + (1 << s) - 1
-        seq = [int(blk.reshape(-1)[i]) for i in zz_nat[1:]]
-        last_nz = -1
-        for i, v in enumerate(seq):
-            if v:
-                last_nz = i
-        acs, run = [], 0
-        for i, v in enumerate(seq):
-            if i > last_nz:
-                break
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                acs.append((0xF0, 0, 0))
-                run -= 16
-            sz = abs(v).bit_length()
-            vv = v if v >= 0 else v + (1 << sz) - 1
-            acs.append(((run << 4) | sz, vv, sz))
-            run = 0
-        if last_nz < len(seq) - 1:
-            acs.append((0x00, 0, 0))
-        return (s, dcv), acs, int(blk.reshape(-1)[0])
-
-    # per-component symbol streams in the NON-INTERLEAVED grid
-    scans = []
-    for name, plane, ch, cv in comps:
-        cw = -(-w * ch // hmax)
-        chh = -(-h * cv // vmax)
-        wb, hb = -(-cw // 8), -(-chh // 8)
-        pred, blocks = 0, []
-        for by in range(hb):
-            for bx in range(wb):
-                (s, dcv), acs, dc_abs = block_symbols(
-                    quantized[name][(by, bx)], pred)
-                pred = dc_abs
-                blocks.append((s, dcv, acs))
-        scans.append(blocks)
-
-    dc_syms = [b[0] for sc in scans for b in sc]
-    ac_syms = [a[0] for sc in scans for b in sc for a in b[2]]
-    dcc, dcs, dccodes = _fixed_len_huff(dc_syms)
-    acc_, acs_, accodes = _fixed_len_huff(ac_syms)
-
-    def seg(marker, body):
-        return bytes((0xFF, marker)) \
-            + struct.pack(">H", 2 + len(body)) + body
-
-    dqt = bytes([0x00]) + bytes(int(qtab.reshape(-1)[i])
-                                for i in zz_nat)
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-    for i, (name, plane, ch, cv) in enumerate(comps):
-        sof += bytes([i + 1, (ch << 4) | cv, 0])
-    dht = bytes([0x00]) + bytes(dcc) + bytes(dcs) \
-        + bytes([0x10]) + bytes(acc_) + bytes(acs_)
-    payload = b"\xff\xd8" + seg(0xDB, dqt) + seg(0xC0, sof) \
-        + seg(0xC4, dht)
-    for i, blocks in enumerate(scans):
-        bw = _BitWriter()
-        for s, dcv, acs in blocks:
-            L, code = dccodes[s]
-            bw.put(code, L)
-            if s:
-                bw.put(dcv, s)
-            for sym, vv, sz in acs:
-                L, code = accodes[sym]
-                bw.put(code, L)
-                if sz:
-                    bw.put(vv, sz)
-        bw.align_ones()
-        sos = bytes([1, i + 1, 0x00, 0, 63, 0])
-        payload += seg(0xDA, sos) + bytes(bw.out)
-    return payload + b"\xff\xd9", ref
-
-
-def test_jpeg_non_interleaved_multiscan_decodes_for_real():
-    import numpy as np
-
-    from tests.test_sinks_multimodal import _test_image
-    img = _test_image(10, 14)
-    payload, ref = _encode_noninterleaved(img, q=16)
-    out = decode_jpeg_pixels(payload)
-    assert out.shape == ref.shape
-    assert int(np.abs(out.astype(int) - ref.astype(int)).max()) <= 1
-
-
-def test_jpeg_non_interleaved_subsampled_decodes_for_real():
-    import numpy as np
-
-    from tests.test_sinks_multimodal import _test_image
-    img = _test_image(18, 20)          # nonint grid != padded MCU grid
-    payload, ref = _encode_noninterleaved(img, q=16, subsample=True)
-    out = decode_jpeg_pixels(payload)
-    assert out.shape == ref.shape
-    assert int(np.abs(out.astype(int) - ref.astype(int)).max()) <= 1
-
-
-def test_jpeg_incomplete_multiscan_raises_not_silent_grey():
-    # only the Y scan present (Cb/Cr scans stripped): finalize must
-    # refuse — never commit a grey Y-only image as "the picture"
-    from tests.test_sinks_multimodal import _test_image
-    payload, _ = _encode_noninterleaved(_test_image(8, 8), q=16)
-    first_sos = payload.index(b"\xff\xda")
-    second_sos = payload.index(b"\xff\xda", first_sos + 2)
-    truncated = payload[:second_sos] + b"\xff\xd9"
-    with pytest.raises(ValueError, match="missing component"):
-        decode_jpeg_pixels(truncated)
-
-
-def test_jpeg_scan_with_unknown_component_raises_valueerror():
-    from tests.test_sinks_multimodal import _jpeg_encode, _test_image
-    payload, _ = _jpeg_encode(_test_image(8, 8), q=16)
-    sos_at = payload.index(b"\xff\xda")
-    bad = bytearray(payload)
-    bad[sos_at + 5] = 9                       # scan comp id 9: no match
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(bytes(bad))
-
-
-def test_multimodal_docs_state_baseline_jpeg_is_decoded():
-    """ADVICE (low): the module header and resize tier docs said JPEG
-    'remains header-only' while the dispatcher ran the real decoder.
-    Pin the re-synced statements so docs and behavior can't diverge
-    silently again."""
-    from big_data_crypto_sentiment_spark.operators import multimodal
-    assert "baseline JPEG" in multimodal.__doc__
-    assert "remains header-only" not in multimodal.__doc__
-    tier_doc = multimodal.resize_images.__doc__
-    assert "baseline JPEG" in tier_doc
-    assert "documented remaining stub" not in tier_doc
 
 
 def test_run_id_never_empty_and_marker_atomic(tmp_path):

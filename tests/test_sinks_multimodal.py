@@ -225,6 +225,90 @@ def test_mp4_audio_track_does_not_clobber_video_dimensions():
     assert (m2["width"], m2["height"]) == (640, 480)
 
 
+def _webp(chunks):
+    import struct
+    body = b"WEBP" + b"".join(
+        cid + struct.pack("<I", len(d)) + d + (b"\x00" if len(d) & 1
+                                               else b"")
+        for cid, d in chunks)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _vp8(w, h):
+    """VP8 lossy keyframe: 3-byte frame tag, start code, 14-bit dims."""
+    import struct
+    return (b"\x00\x00\x00" + b"\x9d\x01\x2a"
+            + struct.pack("<HH", w, h) + b"\x00" * 4)
+
+
+def _vp8l(w, h):
+    """VP8L lossless: signature + packed dims-1."""
+    import struct
+    return b"\x2f" + struct.pack("<I", ((w - 1) & 0x3FFF)
+                                 | (((h - 1) & 0x3FFF) << 14))
+
+
+def _vp8x(w, h):
+    """VP8X extended: flags, then 24-bit canvas dims-1."""
+    return (b"\x00\x00\x00\x00"
+            + (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little"))
+
+
+def test_webp_header_dimensions_all_three_forms():
+    m = decode_media(_webp([(b"VP8 ", _vp8(320, 240))]), "image")
+    assert (m["width"], m["height"]) == (320, 240)
+    m = decode_media(_webp([(b"VP8L", _vp8l(640, 480))]), "image")
+    assert (m["width"], m["height"]) == (640, 480)
+    m = decode_media(_webp([(b"VP8X", _vp8x(100, 50))]), "image")
+    assert (m["width"], m["height"]) == (100, 50)
+    # corrupt: missing start code
+    with pytest.raises(ValueError):
+        decode_media(_webp([(b"VP8 ", b"\x00" * 10)]), "image")
+
+
+def _tiff(bo, entries):
+    """One-IFD TIFF header: (tag, type, value) entries, SHORT (3) or
+    LONG (4) values inline, no strip data."""
+    import struct
+    e = "<" if bo == "II" else ">"
+    head = (b"II*\x00" if bo == "II" else b"MM\x00*") \
+        + struct.pack(e + "I", 8)
+    body = struct.pack(e + "H", len(entries))
+    for tag, typ, val in entries:
+        v = struct.pack(e + "HH", val, 0) if typ == 3 \
+            else struct.pack(e + "I", val)
+        body += struct.pack(e + "HHI", tag, typ, 1) + v
+    return head + body + struct.pack(e + "I", 0)
+
+
+def test_tiff_header_dimensions_both_orders_and_types():
+    for bo in ("II", "MM"):
+        m = decode_media(_tiff(bo, [(256, 3, 800), (257, 3, 600)]),
+                         "image")
+        assert (m["width"], m["height"]) == (800, 600)
+        m = decode_media(_tiff(bo, [(256, 4, 70000), (257, 4, 2)]),
+                         "image")
+        assert (m["width"], m["height"]) == (70000, 2)
+    with pytest.raises(ValueError):
+        decode_media(_tiff("II", [(256, 3, 8)]), "image")  # no length
+
+
+def test_flac_streaminfo_duration():
+    def flac(sr, total):
+        u64 = (sr << 44) | (1 << 41) | (15 << 36) | total
+        body = (b"\x00" * 10 + u64.to_bytes(8, "big") + b"\x00" * 16)
+        return b"fLaC" + b"\x80" + (34).to_bytes(3, "big") + body
+
+    m = decode_media(flac(44100, 44100 * 7), "audio")
+    assert m["duration_ms"] == 7000 and m["width"] is None
+    # unknown length (total_samples = 0): valid container, None duration
+    assert decode_media(flac(48000, 0), "audio")["duration_ms"] is None
+    with pytest.raises(ValueError):
+        decode_media(flac(0, 1000), "audio")       # zero sample rate
+    with pytest.raises(ValueError):
+        decode_media(b"fLaC\x80" + b"\x00" * 10, "audio")  # truncated
+
+
 def test_frame_sampling_offsets(media_df):
     rows = sample_frames(media_df, n_frames=4).collect()
     assert len(rows) == 1
@@ -296,23 +380,77 @@ def test_resize_images_fake_dims_and_stub_payload(media_df):
     assert again == {k: bytes(v.payload) for k, v in out.items()}
 
 
+def _bmp24(top, bottom):
+    """2x2 24-bit BMP: rows stored bottom-up, BGR, padded to 4 bytes."""
+    import struct
+
+    def row(px):
+        return b"".join(bytes((b, g, r)) for (r, g, b) in px) + b"\x00\x00"
+    pixel_data = row(bottom) + row(top)
+    return (b"BM" + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
+            + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0,
+                          len(pixel_data), 2835, 2835, 0, 0)
+            + pixel_data)
+
+
 def test_resize_images_real_codec_math(spark):
+    """Only GIF pixel-decodes: every other image container takes the
+    decoded-dims tier — real header dims, target math, RSZ1 marker
+    payload — even when the payload is a complete, valid image."""
+    import hashlib
+    import struct
+
+    import numpy as np
+
     from big_data_crypto_sentiment_spark.operators.multimodal import (
+        RESIZE_STUB_MAGIC,
+        encode_png,
         resize_images,
     )
-    rows = [
-        (1, "image", _png(640, 480), "image/png", None, None, None),
-        (2, "image", _png(100, 50), "image/png", None, None, None),
-        (3, "image", _png(2000, 1), "image/png", None, None, None),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    gif = _gif(4, 4, [0, 1, 2, 3] * 4, PALETTE)
+    payloads = {
+        1: _png(640, 480),
+        2: _png(100, 50),
+        3: _png(2000, 1),
+        4: encode_png(np.full((4, 6, 3), 7, dtype=np.uint8)),
+        5: _bmp24([(255, 0, 0), (0, 255, 0)], [(0, 0, 255), (1, 2, 3)]),
+        6: _jpeg(1024, 768),
+        7: _tiff("MM", [(256, 4, 640), (257, 4, 480)]),
+        8: _webp([(b"VP8 ", _vp8(320, 240))]),
+        9: _webp([(b"VP8L", _vp8l(640, 480))]),
+        10: _webp([(b"VP8X", _vp8x(100, 50))]),
+        11: gif,
+    }
+    df = spark.createDataFrame(
+        [(i, "image", p, None, None, None, None)
+         for i, p in payloads.items()], MEDIA_SCHEMA)
     out = {r.media_id: r for r in
            resize_images(df, use_real_codec=True).collect()}
-    assert (out[1].width, out[1].height) == (224, 168)   # 640x480 scaled
-    assert out[1].resized and out[1].resize_status == "decoded-dims"
-    assert (out[2].width, out[2].height) == (100, 50)    # never upscale
-    assert not out[2].resized
-    assert (out[3].width, out[3].height) == (224, 1)     # floor at 1
+    want = {  # id: (src w, src h, target w, target h)
+        1: (640, 480, 224, 168),                # 640x480 scaled
+        2: (100, 50, 100, 50),                  # never upscale
+        3: (2000, 1, 224, 1),                   # floor at 1
+        4: (6, 4, 6, 4),
+        5: (2, 2, 2, 2),
+        6: (1024, 768, 224, 168),
+        7: (640, 480, 224, 168),
+        8: (320, 240, 224, 168),
+        9: (640, 480, 224, 168),
+        10: (100, 50, 100, 50),
+    }
+    for i, (sw, sh, tw, th) in want.items():
+        r = out[i]
+        assert r.resize_status == "decoded-dims", i
+        assert (r.src_width, r.src_height, r.width, r.height) \
+            == (sw, sh, tw, th), i
+        assert r.resized == ((tw, th) != (sw, sh)), i
+        assert bytes(r.payload) == (RESIZE_STUB_MAGIC
+                                    + struct.pack(">II", tw, th)
+                                    + hashlib.sha256(payloads[i])
+                                    .digest()), i
+    # a GIF still pixel-decodes: it fits, so it rides through untouched
+    assert out[11].resize_status == "passthrough"
+    assert bytes(out[11].payload) == gif
 
 
 def test_resize_images_dimensionless_decode_falls_back(spark):
@@ -331,147 +469,46 @@ def test_resize_images_dimensionless_decode_falls_back(spark):
     assert r.resize_status == "fake-dims"
 
 
-# --- r11: real PNG/BMP pixel decode + true area resample ------------
-
-
-def _spec_png(img, filters):
-    """Build a PNG from a (h, w, 3) uint8 array INDEPENDENTLY of
-    encode_png: forward-apply the given per-row filter types exactly as
-    PNG spec §9 defines them, deflate, and assemble CRC'd chunks — so
-    the decoder is tested against the spec, not against our encoder."""
-    import struct
-    import zlib
-
-    h, w, ch = img.shape
-    raw = bytearray()
-    prev = [0] * (w * ch)
-    for y, ftype in zip(range(h), filters):
-        cur = [int(v) for v in img[y].reshape(-1)]
-        raw.append(ftype)
-        for x in range(w * ch):
-            left = cur[x - ch] if x >= ch else 0
-            up = prev[x]
-            upleft = prev[x - ch] if x >= ch else 0
-            if ftype == 0:
-                pred = 0
-            elif ftype == 1:
-                pred = left
-            elif ftype == 2:
-                pred = up
-            elif ftype == 3:
-                pred = (left + up) // 2
-            else:                       # paeth
-                p = left + up - upleft
-                pa, pb, pc = (abs(p - left), abs(p - up),
-                              abs(p - upleft))
-                pred = left if (pa <= pb and pa <= pc) \
-                    else (up if pb <= pc else upleft)
-            raw.append((cur[x] - pred) & 0xFF)
-        prev = cur
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-
-
-def test_png_pixel_decode_all_five_filter_types():
-    import numpy as np
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_png_pixels,
-    )
-    rng = np.arange(5 * 3 * 3, dtype=np.int64)
-    img = ((rng * 37 + 11) % 256).astype(np.uint8).reshape(5, 3, 3)
-    payload = _spec_png(img, filters=[0, 1, 2, 3, 4])
-    got = decode_png_pixels(payload)
-    assert got.shape == (5, 3, 3)
-    assert (got == img).all()
-
-
-def test_png_decode_rejects_corruption_and_gates_unsupported():
+def _read_png(payload):
+    """Test-side reader for encode_png's output: signature, every
+    chunk CRC, IHDR, the inflated IDAT stream with each row's filter
+    byte 0 (encode_png writes no other filter)."""
     import struct
     import zlib
 
     import numpy as np
-    import pytest as _pytest
 
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_png_pixels,
-    )
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    good = _spec_png(img, [0, 0])
-    # flip one IDAT byte -> CRC mismatch -> ValueError (corrupt)
-    bad = bytearray(good)
-    idat_at = good.index(b"IDAT") + 4
-    bad[idat_at] ^= 0xFF
-    with _pytest.raises(ValueError):
-        decode_png_pixels(bytes(bad))
-    # palette PNG decodes for real as of r12 — but one WITHOUT a PLTE
-    # chunk is structurally invalid -> ValueError (corrupt tier)
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-    pal = (b"\x89PNG\r\n\x1a\n"
-           + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
-           + chunk(b"IDAT", zlib.compress(b"\x00\x00\x00\x00\x00\x00"))
-           + chunk(b"IEND", b""))
-    with _pytest.raises(ValueError):
-        decode_png_pixels(pal)
-    # an illegal depth/colour combination (depth 2 truecolour) is
-    # spec-invalid -> ValueError (the full LEGAL matrix decodes as of
-    # r12 — see test_png_palette_interlace.py)
-    deep = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 2, 2,
-                                         0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 26))
-            + chunk(b"IEND", b""))
-    with _pytest.raises(ValueError):
-        decode_png_pixels(deep)
+    assert payload[:8] == b"\x89PNG\r\n\x1a\n"
+    pos, idat = 8, b""
+    while pos < len(payload):
+        n, ctype = struct.unpack(">I4s", payload[pos:pos + 8])
+        data = payload[pos + 8:pos + 8 + n]
+        (crc,) = struct.unpack(">I", payload[pos + 8 + n:pos + 12 + n])
+        assert crc == zlib.crc32(ctype + data)
+        if ctype == b"IHDR":
+            w, h, depth, colour = struct.unpack(">IIBB", data[:10])
+        elif ctype == b"IDAT":
+            idat += data
+        pos += 12 + n
+    assert depth == 8
+    ch = {0: 1, 4: 2, 2: 3, 6: 4}[colour]
+    rows = np.frombuffer(zlib.decompress(idat), np.uint8) \
+        .reshape(h, 1 + w * ch)
+    assert (rows[:, 0] == 0).all()
+    return rows[:, 1:].reshape(h, w, ch)
 
 
 def test_png_encode_decode_roundtrip_bit_exact():
     import numpy as np
 
     from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_png_pixels,
         encode_png,
     )
     for ch in (1, 2, 3, 4):
         rng = np.arange(4 * 5 * ch, dtype=np.int64)
         img = ((rng * 97 + 3) % 256).astype(np.uint8).reshape(4, 5, ch)
-        back = decode_png_pixels(encode_png(img))
+        back = _read_png(encode_png(img))
         assert back.shape == img.shape and (back == img).all()
-
-
-def test_bmp_pixel_decode_bottom_up_bgr_and_padding():
-    import struct
-
-    import numpy as np
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_bmp_pixels,
-    )
-    # 2x2 24-bit: rows stored bottom-up, 6 data bytes padded to 8,
-    # channel order BGR on disk
-    top = [(255, 0, 0), (0, 255, 0)]       # RGB we expect back
-    bottom = [(0, 0, 255), (10, 20, 30)]
-    def row(px):
-        return b"".join(bytes((b, g, r)) for (r, g, b) in px) + b"\x00\x00"
-    pixel_data = row(bottom) + row(top)    # bottom-up
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
-              + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0,
-                            len(pixel_data), 2835, 2835, 0, 0))
-    img = decode_bmp_pixels(header + pixel_data)
-    assert img.shape == (2, 2, 3)
-    assert [tuple(img[0, x]) for x in range(2)] == top
-    assert [tuple(img[1, x]) for x in range(2)] == bottom
-    expect = np.array([top, bottom], dtype=np.uint8)
-    assert (img == expect).all()
 
 
 def test_area_resample_closed_form_values():
@@ -495,47 +532,6 @@ def test_area_resample_closed_form_values():
     out = area_resample(tri, 2, 1)
     assert out[0, 0, 0] == 30      # (0 + 45) / 1.5
     assert out[0, 1, 0] == 190     # (45 + 240) / 1.5
-
-
-def test_resize_images_real_resample_emits_real_png(spark):
-    import numpy as np
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        area_resample,
-        decode_png_pixels,
-        encode_png,
-        resize_images,
-    )
-    from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
-    q = np.zeros((4, 4, 3), dtype=np.uint8)
-    q[:2, :2], q[:2, 2:], q[2:, :2], q[2:, 2:] = 10, 20, 30, 40
-    src = encode_png(q)
-    rows = [(1, "image", src, "image/png", None, None, None)]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    # shrink: real resample, output is a REAL decodable PNG
-    (r,) = resize_images(df, max_dim=2, use_real_codec=True).collect()
-    assert r.resize_status == "resampled" and r.resized
-    assert (r.src_width, r.src_height, r.width, r.height) == (4, 4, 2, 2)
-    back = decode_png_pixels(bytes(r.payload))
-    assert (back == area_resample(q, 2, 2)).all()
-    assert back[0, 0, 0] == 10 and back[1, 1, 0] == 40
-
-    # already fits: payload passes through untouched
-    (p,) = resize_images(df, max_dim=224, use_real_codec=True).collect()
-    assert p.resize_status == "passthrough" and not p.resized
-    assert bytes(p.payload) == src
-
-    # entropy-coded formats keep the documented marker-stub tier
-    jpg_rows = [(2, "image", _jpeg(1024, 768), "image/jpeg",
-                 None, None, None)]
-    jdf = spark.createDataFrame(jpg_rows, MEDIA_SCHEMA)
-    (j,) = resize_images(jdf, use_real_codec=True).collect()
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        RESIZE_STUB_MAGIC,
-    )
-    assert j.resize_status == "decoded-dims"
-    assert bytes(j.payload).startswith(RESIZE_STUB_MAGIC)
 
 
 # --- r11 stretch: real GIF pixel decode (LZW) ------------------------
@@ -660,10 +656,8 @@ def test_gif_corruption_and_resize_tiering():
 
 def test_resize_images_resamples_real_gif(spark):
     from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_png_pixels,
         resize_images,
     )
-    from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
     # 4x4 quadrants via palette indices -> 2x2 exact quadrant colors
     idx = [0, 0, 1, 1,
            0, 0, 1, 1,
@@ -674,7 +668,7 @@ def test_resize_images_resamples_real_gif(spark):
         [(1, "image", gif, "image/gif", None, None, None)], MEDIA_SCHEMA)
     (r,) = resize_images(df, max_dim=2, use_real_codec=True).collect()
     assert r.resize_status == "resampled"
-    back = decode_png_pixels(bytes(r.payload))
+    back = _read_png(bytes(r.payload))
     assert back.shape == (2, 2, 3)
     assert tuple(back[0, 0]) == PALETTE[0]
     assert tuple(back[0, 1]) == PALETTE[1]
@@ -682,399 +676,17 @@ def test_resize_images_resamples_real_gif(spark):
     assert tuple(back[1, 1]) == PALETTE[3]
 
 
-# --- r11 stretch: real baseline JPEG decode (Huffman + IDCT) ---------
-
-
-def _dct_matrix():
-    import numpy as np
-    k = np.arange(8)[:, None]
-    n = np.arange(8)[None, :]
-    return np.cos((2 * n + 1) * k * np.pi / 16) \
-        * np.where(k == 0, np.sqrt(1 / 8), np.sqrt(2 / 8))
-
-
-def _fixed_len_huff(symbols):
-    """Canonical table giving every used symbol one fixed length L
-    (2^L > nsym so the all-ones code is never assigned)."""
-    syms = sorted(set(symbols))
-    L = max(2, (len(syms) + 1 - 1).bit_length())
-    while (1 << L) <= len(syms):
-        L += 1
-    counts = [0] * 16
-    counts[L - 1] = len(syms)
-    codes = {s: (L, i) for i, s in enumerate(syms)}
-    return counts, syms, codes
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, val, nbits):
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((val >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)      # byte stuffing
-                self.acc, self.n = 0, 0
-
-    def align_ones(self):
-        while self.n:
-            self.put(1, 1)
-
-
-def _quantize_ref(img, q=16, subsample=False):
-    """Shared front half of the test-side JPEG encoders: YCbCr
-    convert, optional 4:2:0 mean-downsample, FDCT + flat-table
-    quantize, and the reference reconstruction a correct decoder must
-    output. Returns (comps, quantized, ref, mcux, mcuy, qtab,
-    hmax, vmax)."""
-    import numpy as np
-
-    C = _dct_matrix()
-    h, w = img.shape[:2]
-    r, g, b = (img[:, :, i].astype(np.float64) for i in range(3))
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    if subsample:
-        comps = [("Y", y, 2, 2), ("Cb", _mean2(cb), 1, 1),
-                 ("Cr", _mean2(cr), 1, 1)]
-    else:
-        comps = [("Y", y, 1, 1), ("Cb", cb, 1, 1), ("Cr", cr, 1, 1)]
-    hmax = max(c[2] for c in comps)
-    vmax = max(c[3] for c in comps)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    qtab = np.full((8, 8), q, dtype=np.int64)
-
-    # pad planes to MCU grid (edge replicate) and quantize blockwise
-    quantized = {}
-    for name, plane, ch, cv in comps:
-        ph, pw = mcuy * cv * 8, mcux * ch * 8
-        pl = np.zeros((ph, pw))
-        sh, sw = plane.shape
-        pl[:sh, :sw] = plane
-        pl[sh:, :sw] = plane[-1:, :]
-        pl[:, sw:] = pl[:, sw - 1:sw]
-        blocks = {}
-        for by in range(ph // 8):
-            for bx in range(pw // 8):
-                f = pl[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
-                F = C @ f @ C.T
-                blocks[(by, bx)] = np.round(F / qtab).astype(np.int64)
-        quantized[name] = blocks
-
-    # reference reconstruction (what the decoder must produce)
-    recon = {}
-    for name, plane, ch, cv in comps:
-        ph, pw = mcuy * cv * 8, mcux * ch * 8
-        out = np.zeros((ph, pw))
-        for (by, bx), blk in quantized[name].items():
-            out[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
-                C.T @ (blk * qtab).astype(np.float64) @ C + 128.0
-        out = np.repeat(np.repeat(out, vmax // cv, axis=0),
-                        hmax // ch, axis=1)
-        recon[name] = out[:h, :w]
-    yr, cbr, crr = recon["Y"], recon["Cb"] - 128.0, recon["Cr"] - 128.0
-    ref = np.stack([yr + 1.402 * crr,
-                    yr - 0.344136 * cbr - 0.714136 * crr,
-                    yr + 1.772 * cbr], axis=2)
-    ref = np.clip(np.round(ref), 0, 255).astype(np.uint8)
-    return comps, quantized, ref, mcux, mcuy, qtab, hmax, vmax
-
-
-def _jpeg_encode(img, q=16, subsample=False, restart_interval=0):
-    """Independent baseline JPEG encoder (test-side reference):
-    YCbCr convert, optional 4:2:0 chroma mean-downsample, FDCT with a
-    flat quantization table, per-component-class fixed-length canonical
-    Huffman tables, byte-stuffed interleaved MCU stream with optional
-    restart markers. Returns (payload, reference_rgb) where
-    reference_rgb reconstructs EXACTLY what a correct decoder must
-    output (dequant -> IDCT -> upsample -> color-convert)."""
-    import struct
-
-    h, w = img.shape[:2]
-    comps, quantized, ref, mcux, mcuy, qtab, hmax, vmax = \
-        _quantize_ref(img, q, subsample)
-
-    # symbol streams (interleaved MCU order) to size the Huffman tables
-    zz_nat = _zigzag_nat()
-    def block_symbols(blk, pred):
-        dc = int(blk.reshape(-1)[0]) - pred
-        s = abs(dc).bit_length()
-        dcv = dc if dc >= 0 else dc + (1 << s) - 1
-        acs = []
-        seq = [int(blk.reshape(-1)[i]) for i in zz_nat[1:]]
-        run = 0
-        last_nz = -1
-        for i, v in enumerate(seq):
-            if v:
-                last_nz = i
-        for i, v in enumerate(seq):
-            if i > last_nz:
-                break
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                acs.append((0xF0, 0, 0))
-                run -= 16
-            sz = abs(v).bit_length()
-            vv = v if v >= 0 else v + (1 << sz) - 1
-            acs.append(((run << 4) | sz, vv, sz))
-            run = 0
-        if last_nz < len(seq) - 1:
-            # EOB only when trailing zeros exist: a block whose final
-            # AC (zigzag 63) is nonzero ends WITHOUT an EOB — the
-            # decoder exits at ki=64 and never reads one
-            acs.append((0x00, 0, 0))
-        return (s, dcv), acs, int(blk.reshape(-1)[0])
-
-    order = []
-    preds = {nm: 0 for nm, *_ in comps}
-    mcu = 0
-    stream = []                                # (kind, payload)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                stream.append(("RST", (mcu // restart_interval - 1) % 8))
-                preds = {nm: 0 for nm, *_ in comps}
-            for name, plane, ch, cv in comps:
-                for by in range(cv):
-                    for bx in range(ch):
-                        blk = quantized[name][(my * cv + by,
-                                               mx * ch + bx)]
-                        (s, dcv), acs, dc_abs = block_symbols(
-                            blk, preds[name])
-                        preds[name] = dc_abs
-                        stream.append(("BLK", (s, dcv, acs)))
-            mcu += 1
-
-    dc_syms = [p[0] for k, p in stream if k == "BLK"]
-    ac_syms = [a[0] for k, p in stream if k == "BLK" for a in p[2]]
-    dcc, dcs, dccodes = _fixed_len_huff(dc_syms)
-    acc_, acs_, accodes = _fixed_len_huff(ac_syms)
-
-    bw = _BitWriter()
-    data = bytearray()
-    for kind, p in stream:
-        if kind == "RST":
-            bw.align_ones()
-            data += bw.out
-            bw = _BitWriter()
-            data += bytes((0xFF, 0xD0 + p))
-            continue
-        s, dcv, acs = p
-        L, code = dccodes[s]
-        bw.put(code, L)
-        if s:
-            bw.put(dcv, s)
-        for sym, vv, sz in acs:
-            L, code = accodes[sym]
-            bw.put(code, L)
-            if sz:
-                bw.put(vv, sz)
-    bw.align_ones()
-    data += bw.out
-
-    def seg(marker, body):
-        return bytes((0xFF, marker)) + struct.pack(">H", 2 + len(body)) \
-            + body
-
-    dqt = bytes([0x00]) + bytes(int(qtab.reshape(-1)[i])
-                                for i in zz_nat)
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-    for i, (name, plane, ch, cv) in enumerate(comps):
-        sof += bytes([i + 1, (ch << 4) | cv, 0])
-    dht = bytes([0x00]) + bytes(dcc) + bytes(dcs) \
-        + bytes([0x10]) + bytes(acc_) + bytes(acs_)
-    sos = bytes([3]) + b"".join(bytes([i + 1, 0x00]) for i in range(3)) \
-        + bytes([0, 63, 0])
-    payload = b"\xff\xd8" + seg(0xDB, dqt) + seg(0xC0, sof) \
-        + seg(0xC4, dht)
-    if restart_interval:
-        payload += seg(0xDD, struct.pack(">H", restart_interval))
-    payload += seg(0xDA, sos) + bytes(data) + b"\xff\xd9"
-    return payload, ref
-
-
-def _mean2(p):
-    import numpy as np
-    h, w = p.shape
-    ph, pw = (h + 1) // 2 * 2, (w + 1) // 2 * 2
-    pp = np.zeros((ph, pw))
-    pp[:h, :w] = p
-    pp[h:, :w] = p[-1:, :]
-    pp[:, w:] = pp[:, w - 1:w]
-    return pp.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-
-
-def _zigzag_nat():
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        _zigzag_order,
-    )
-    return _zigzag_order()
-
-
-def _test_image(h, w, seed=3):
-    import numpy as np
-    rng = np.arange(h * w * 3, dtype=np.int64)
-    return ((rng * 31 + seed) % 256).astype(np.uint8).reshape(h, w, 3)
-
-
-def test_jpeg_decode_matches_reference_reconstruction():
-    import numpy as np
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-    )
-    img = _test_image(16, 8)
-    payload, ref = _jpeg_encode(img, q=16)
-    got = decode_jpeg_pixels(payload)
-    assert got.shape == (16, 8, 3)
-    # identical float pipeline on both sides -> at most boundary-
-    # rounding ULP differences
-    assert int(np.abs(got.astype(int) - ref.astype(int)).max()) <= 1
-    # and with a flat q=1 table the roundtrip is near-lossless vs the
-    # ORIGINAL pixels (pure DCT rounding error)
-    smooth = np.tile(np.linspace(40, 200, 8).astype(np.uint8),
-                     (8, 1))[:, :, None].repeat(3, axis=2)
-    p2, _ = _jpeg_encode(smooth, q=1)
-    got2 = decode_jpeg_pixels(p2)
-    assert int(np.abs(got2.astype(int) - smooth.astype(int)).max()) <= 3
-
-
-def test_jpeg_420_subsampling_and_restart_markers():
-    import numpy as np
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-    )
-    img = _test_image(16, 16, seed=11)
-    p420, ref = _jpeg_encode(img, q=16, subsample=True)
-    got = decode_jpeg_pixels(p420)
-    assert got.shape == (16, 16, 3)
-    assert int(np.abs(got.astype(int) - ref.astype(int)).max()) <= 1
-
-    # restart markers: byte-aligned RSTn every MCU, DC predictors
-    # reset — decode must equal the no-restart encoding's decode
-    img2 = _test_image(8, 32, seed=7)
-    pa, _ = _jpeg_encode(img2, q=16)
-    pb, _ = _jpeg_encode(img2, q=16, restart_interval=1)
-    assert pa != pb
-    a = decode_jpeg_pixels(pa)
-    b = decode_jpeg_pixels(pb)
-    assert (a == b).all()
-
-
-def test_jpeg_gates_and_corruption():
-    import pytest as _pytest
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-    )
-
-    img = _test_image(16, 16, seed=5)
-    payload, _ = _jpeg_encode(img, q=16)
-    # a baseline payload RELABELED SOF2: progressive decodes for real
-    # as of r12, so this hack is now a structurally-invalid progressive
-    # file (its single scan claims the DC band with Se=63) -> ValueError
-    # (real progressive coverage: tests/test_jpeg_progressive.py)
-    prog = payload.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with _pytest.raises(ValueError):
-        decode_jpeg_pixels(prog)
-    # arithmetic-coded JPEG (SOF9 sequential AND SOF10 progressive)
-    # decodes for real as of r15 (tests/test_jpeg_arith.py); the
-    # arithmetic LOSSLESS tier (SOF11) stays loud
-    arith_ll = payload.replace(b"\xff\xc0", b"\xff\xcb", 1)
-    with _pytest.raises(NotImplementedError):
-        decode_jpeg_pixels(arith_ll)
-    # truncated entropy stream -> ValueError
-    with _pytest.raises(ValueError):
-        decode_jpeg_pixels(payload[:len(payload) - 40])
-
-
-def test_jpeg_resize_end_to_end(spark):
-    import numpy as np
-
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        area_resample,
-        decode_jpeg_pixels,
-        decode_png_pixels,
-        resize_images,
-    )
-    from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
-    img = _test_image(16, 16, seed=5)
-    payload, ref = _jpeg_encode(img, q=16)
-    df = spark.createDataFrame(
-        [(1, "image", payload, "image/jpeg", None, None, None)],
-        MEDIA_SCHEMA)
-    (r,) = resize_images(df, max_dim=8, use_real_codec=True).collect()
-    assert r.resize_status == "resampled" and r.resized
-    assert (r.src_width, r.src_height, r.width, r.height) == (16, 16, 8, 8)
-    back = decode_png_pixels(bytes(r.payload))
-    want = area_resample(decode_jpeg_pixels(payload), 8, 8)
-    assert (back == want).all()
-
-
 def test_pixel_decoders_reject_adversarial_headers():
     """Untrusted bytes inside an executor: absurd claimed dimensions
-    and decompression bombs must raise (falling to the marker-stub
-    tier), never allocate attacker-chosen memory."""
+    must raise (falling to the marker-stub tier), never allocate
+    attacker-chosen memory."""
     import struct
-    import zlib
 
     import pytest as _pytest
 
     from big_data_crypto_sentiment_spark.operators.multimodal import (
         decode_gif_pixels,
-        decode_jpeg_pixels,
-        decode_png_pixels,
     )
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-
-    # PNG claiming 60000x60000 (3.6 GPix): capped before any inflate
-    huge = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 60000, 60000,
-                                         8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 64))
-            + chunk(b"IEND", b""))
-    with _pytest.raises(ValueError):
-        decode_png_pixels(huge)
-
-    # PNG bomb: tiny claimed dims, oversize inflated stream — bounded
-    # decompress stops at expected+1 and reports a length mismatch
-    bomb = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 0,
-                                         0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"\x00" * (1 << 20)))
-            + chunk(b"IEND", b""))
-    with _pytest.raises(ValueError):
-        decode_png_pixels(bomb)
-
-    # JPEG claiming 60000x60000 / zero dims / bad sampling factors
-    img = _test_image(8, 8)
-    payload, _ = _jpeg_encode(img, q=16)
-    sof_at = payload.index(b"\xff\xc0")
-    big = bytearray(payload)
-    big[sof_at + 5:sof_at + 9] = struct.pack(">HH", 60000, 60000)
-    with _pytest.raises(ValueError):
-        decode_jpeg_pixels(bytes(big))
-    zero = bytearray(payload)
-    zero[sof_at + 5:sof_at + 9] = struct.pack(">HH", 0, 8)
-    with _pytest.raises(ValueError):
-        decode_jpeg_pixels(bytes(zero))
-    badhv = bytearray(payload)
-    badhv[sof_at + 11] = 0x00          # comp 1 sampling factors 0/0
-    with _pytest.raises(ValueError):
-        decode_jpeg_pixels(bytes(badhv))
 
     # GIF claiming huge image-descriptor dims
     g = bytearray(_gif(4, 3, [0] * 12, PALETTE))

@@ -1,7 +1,7 @@
 """Real video-frame decode (r11 verdict #2): animated-GIF coalescing
-(disposal + transparency against the logical screen), MJPEG span
-splitting through the baseline-JPEG decoder, and the tiered
-sample_frame_pixels operator end to end.
+(disposal + transparency against the logical screen), the loud
+NotImplementedError tier for every other video (MP4, AVI, MJPEG), and
+the tiered sample_frame_pixels operator end to end.
 
 The animated GIF under test is SPEC-BUILT by an independent encoder
 (the test-side LZW writer from test_sinks_multimodal), so the decoder
@@ -18,16 +18,17 @@ from big_data_crypto_sentiment_spark.operators.multimodal import (
     area_resample,
     decode_gif_frames,
     decode_gif_pixels,
-    decode_png_pixels,
+    decode_media,
     decode_video_frames,
     sample_frame_pixels,
 )
+from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
 from tests.test_sinks_multimodal import (
     PALETTE,
-    _jpeg_encode,
+    _jpeg,
     _lzw_encode,
     _mp4,
-    _test_image,
+    _read_png,
 )
 
 RED, GREEN, BLUE, K = (np.array(c, dtype=np.uint8) for c in PALETTE)
@@ -139,83 +140,6 @@ def test_video_frames_even_sampling_and_timestamps():
         assert (img[0, 0] == pal[i % 4]).all()
 
 
-def test_mjpeg_stream_splits_and_decodes_per_frame():
-    imgs = [_test_image(16, 16, seed=s) for s in (3, 5, 7)]
-    encs = [_jpeg_encode(im, q=16) for im in imgs]
-    stream = b"".join(p for p, _ in encs)
-    got, ts = decode_video_frames(stream, n_frames=3)
-    assert ts == [None, None, None]
-    for g, (_, ref) in zip(got, encs):
-        assert (g == ref).all()
-    # trailing garbage after the last EOI = desync, loud
-    with pytest.raises(ValueError):
-        decode_video_frames(stream + b"junk", n_frames=3)
-
-
-def test_true_codecs_stay_loud():
-    with pytest.raises(NotImplementedError):
-        decode_video_frames(_mp4(1000, 60000, 64, 48), n_frames=2)
-
-
-def test_sample_frame_pixels_tiers_end_to_end(spark):
-    from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
-    gif_payload, want, want_ts = _four_frame_gif()
-    mj = b"".join(_jpeg_encode(_test_image(8, 8, seed=s), q=16)[0]
-                  for s in (3, 5))
-    rows = [
-        (1, "video", gif_payload, "image/gif", None, None, None),
-        (2, "video", mj, "video/x-motion-jpeg", None, None, None),
-        (3, "video", _mp4(1000, 60000, 64, 48), "video/mp4",
-         None, None, 60000),
-        (4, "video", b"GIF89a\x01", "image/gif", None, None, None),
-        (5, "image", gif_payload, "image/gif", None, None, None),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = sample_frame_pixels(df, n_frames=4).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert 5 not in by_id                      # images filtered out
-
-    gif_rows = sorted(by_id[1], key=lambda r: r.frame_idx)
-    assert [r.frame_status for r in gif_rows] == ["decoded"] * 4
-    assert [r.frame_ts_ms for r in gif_rows] == want_ts
-    for r, exp in zip(gif_rows, want):
-        png = decode_png_pixels(bytes(r.frame_png))
-        assert (png == exp).all()              # frames are REAL PNGs
-
-    mj_rows = sorted(by_id[2], key=lambda r: r.frame_idx)
-    assert len(mj_rows) == 2                   # only 2 frames exist
-    assert all(r.frame_status == "decoded" and r.frame_ts_ms is None
-               and decode_png_pixels(bytes(r.frame_png)).shape
-               == (8, 8, 3) for r in mj_rows)
-
-    mp4_rows = sorted(by_id[3], key=lambda r: r.frame_idx)
-    assert [r.frame_status for r in mp4_rows] == ["stubbed-codec"] * 4
-    assert [r.frame_ts_ms for r in mp4_rows] == [0, 15000, 30000,
-                                                 45000]
-    assert all(bytes(r.frame_png).startswith(FRAME_STUB_MAGIC)
-               for r in mp4_rows)
-
-    assert [r.frame_status for r in by_id[4]] == ["corrupt"]
-
-
-def test_sample_frame_pixels_resamples_to_max_dim(spark):
-    from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
-    idx = [[(r + c) % 4 for c in range(8)] for r in range(8)]
-    payload = _agif(8, 8, [{"idx": idx, "disposal": 1,
-                            "delay_cs": 5}])
-    df = spark.createDataFrame(
-        [(1, "video", payload, "image/gif", None, None, None)],
-        MEDIA_SCHEMA)
-    row = sample_frame_pixels(df, n_frames=1, max_dim=4).collect()[0]
-    assert (row.width, row.height) == (4, 4)
-    pal = np.array(PALETTE, dtype=np.uint8)
-    full = pal[np.array(idx)]
-    want = area_resample(full, 4, 4)
-    assert (decode_png_pixels(bytes(row.frame_png)) == want).all()
-
-
 def _avi(frames_jpeg, usec_per_frame=40000, w=16, h=16,
          codec_tag=b"00dc"):
     """Spec-forward AVI builder: hdrl LIST with avih, movi LIST with
@@ -236,40 +160,92 @@ def _avi(frames_jpeg, usec_per_frame=40000, w=16, h=16,
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def test_avi_mjpeg_frames_with_real_timestamps():
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_media,
-    )
-    imgs = [_test_image(16, 16, seed=s) for s in (3, 5, 7)]
-    encs = [_jpeg_encode(im, q=16) for im in imgs]
-    avi = _avi([p for p, _ in encs], usec_per_frame=40000)
-    got, ts = decode_video_frames(avi, n_frames=3)
-    assert ts == [0, 40, 80]              # real per-frame timestamps
-    for g, (_, ref) in zip(got, encs):
-        assert (g == ref).all()
-    # container metadata decodes too (duration = frames x interval)
-    m = decode_media(avi, "video")
-    assert m["duration_ms"] == 120 and (m["width"], m["height"]) == (16, 16)
-    # a non-MJPEG video chunk is the loud true-codec tier
-    h264ish = _avi([b"\x00\x00\x00\x01garbage"], codec_tag=b"00dc")
-    with pytest.raises(NotImplementedError):
-        decode_video_frames(h264ish, n_frames=2)
+def test_true_codecs_stay_loud():
+    # MP4, bare MJPEG and AVI (MJPEG or not) are the stubbed-codec tier
+    for payload in (_mp4(1000, 60000, 64, 48), _jpeg(16, 16) * 3,
+                    _avi([_jpeg(16, 16)]),
+                    _avi([b"\x00\x00\x00\x01garbage"])):
+        with pytest.raises(NotImplementedError):
+            decode_video_frames(payload, n_frames=2)
+
+
+def test_sample_frame_pixels_tiers_end_to_end(spark):
+    gif_payload, want, want_ts = _four_frame_gif()
+    mj = _jpeg(8, 8) * 2
+    avi = _avi([_jpeg(8, 8)] * 3, usec_per_frame=40000)   # 120 ms
+    rows = [
+        (1, "video", gif_payload, "image/gif", None, None, None),
+        (2, "video", mj, "video/x-motion-jpeg", None, None, None),
+        (3, "video", _mp4(1000, 60000, 64, 48), "video/mp4",
+         None, None, 60000),
+        (4, "video", b"GIF89a\x01", "image/gif", None, None, None),
+        (5, "image", gif_payload, "image/gif", None, None, None),
+        (6, "video", avi, "video/x-msvideo", None, None, None),
+    ]
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    out = sample_frame_pixels(df, n_frames=4).collect()
+    by_id = {}
+    for r in out:
+        by_id.setdefault(r.media_id, []).append(r)
+    assert 5 not in by_id                      # images filtered out
+
+    gif_rows = sorted(by_id[1], key=lambda r: r.frame_idx)
+    assert [r.frame_status for r in gif_rows] == ["decoded"] * 4
+    assert [r.frame_ts_ms for r in gif_rows] == want_ts
+    for r, exp in zip(gif_rows, want):
+        png = _read_png(bytes(r.frame_png))
+        assert (png == exp).all()              # frames are REAL PNGs
+
+    # bare MJPEG has no timing: stubbed frames without timestamps
+    mj_rows = sorted(by_id[2], key=lambda r: r.frame_idx)
+    assert [r.frame_status for r in mj_rows] == ["stubbed-codec"] * 4
+    assert [r.frame_ts_ms for r in mj_rows] == [None] * 4
+    # MJPEG-in-AVI: timestamps dur*i//n_frames from the avih duration
+    avi_rows = sorted(by_id[6], key=lambda r: r.frame_idx)
+    assert [r.frame_status for r in avi_rows] == ["stubbed-codec"] * 4
+    assert [r.frame_ts_ms for r in avi_rows] == [0, 30, 60, 90]
+    assert all(bytes(r.frame_png).startswith(FRAME_STUB_MAGIC)
+               for r in mj_rows + avi_rows)
+
+    mp4_rows = sorted(by_id[3], key=lambda r: r.frame_idx)
+    assert [r.frame_status for r in mp4_rows] == ["stubbed-codec"] * 4
+    assert [r.frame_ts_ms for r in mp4_rows] == [0, 15000, 30000,
+                                                 45000]
+    assert all(bytes(r.frame_png).startswith(FRAME_STUB_MAGIC)
+               for r in mp4_rows)
+
+    assert [r.frame_status for r in by_id[4]] == ["corrupt"]
+
+
+def test_sample_frame_pixels_resamples_to_max_dim(spark):
+    idx = [[(r + c) % 4 for c in range(8)] for r in range(8)]
+    payload = _agif(8, 8, [{"idx": idx, "disposal": 1,
+                            "delay_cs": 5}])
+    df = spark.createDataFrame(
+        [(1, "video", payload, "image/gif", None, None, None)],
+        MEDIA_SCHEMA)
+    row = sample_frame_pixels(df, n_frames=1, max_dim=4).collect()[0]
+    assert (row.width, row.height) == (4, 4)
+    pal = np.array(PALETTE, dtype=np.uint8)
+    full = pal[np.array(idx)]
+    want = area_resample(full, 4, 4)
+    assert (_read_png(bytes(row.frame_png)) == want).all()
 
 
 def test_avi_through_sample_frame_pixels(spark):
-    from big_data_crypto_sentiment_spark.operators.multimodal import (
-        decode_png_pixels as dpp,
-    )
-    from big_data_crypto_sentiment_spark.schemas import MEDIA_SCHEMA
-    encs = [_jpeg_encode(_test_image(8, 8, seed=s), q=16)
-            for s in (3, 5, 7, 9)]
-    avi = _avi([p for p, _ in encs], usec_per_frame=100000)
+    import hashlib
+
+    avi = _avi([_jpeg(8, 8)] * 4, usec_per_frame=100000)
+    # container metadata: duration = frames x interval, avih dims
+    m = decode_media(avi, "video")
+    assert m["duration_ms"] == 400 and (m["width"], m["height"]) == (16, 16)
     df = spark.createDataFrame(
         [(1, "video", avi, "video/x-msvideo", None, None, None)],
         MEDIA_SCHEMA)
     rows = sorted(sample_frame_pixels(df, n_frames=2).collect(),
                   key=lambda r: r.frame_idx)
-    assert [r.frame_status for r in rows] == ["decoded"] * 2
-    assert [r.frame_ts_ms for r in rows] == [0, 200]  # frames 0 and 2
-    assert all(dpp(bytes(r.frame_png)).shape == (8, 8, 3)
-               for r in rows)
+    assert [r.frame_status for r in rows] == ["stubbed-codec"] * 2
+    assert [r.frame_ts_ms for r in rows] == [0, 200]
+    sha = hashlib.sha256(avi).digest()
+    assert [bytes(r.frame_png) for r in rows] == [
+        FRAME_STUB_MAGIC + struct.pack(">I", i) + sha for i in (0, 1)]

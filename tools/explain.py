@@ -1,9 +1,10 @@
 """Capture `.explain("formatted")` output for named registry entries
-into plans/r16/<name>_<tag>.txt — the optimization round's before/after
-plan evidence (the judge checks plan-shape claims against these files).
+into plans/r<round>/<name>_<tag>.txt — an optimization round's
+before/after plan evidence (plan-shape claims are checked against these
+files).
 
-Usage: python tools/explain_r16.py <tag> <query-name> [...]
-       python tools/explain_r16.py before curate_funnel_stats dsir_select
+Usage: python tools/explain.py <round> <tag> <query-name> [...]
+       python tools/explain.py 17 before curate_funnel_stats dsir_select
 
 Expression ids (#n) and plan_ids are stripped so before/after diffs show
 structure, not id churn. sf_dir defaults to sf0.1 (the benched scale);
@@ -24,19 +25,19 @@ _PLAN_ID = re.compile(r", \[plan_id=\d+\]")
 
 
 def main() -> int:
-    if len(sys.argv) < 3:
-        print("usage: explain_r16.py <tag> <query-name> [...]",
+    if len(sys.argv) < 4 or not sys.argv[1].isdigit():
+        print("usage: explain.py <round> <tag> <query-name> [...]",
               file=sys.stderr)
         return 2
-    tag, names = sys.argv[1], sys.argv[2:]
+    rnd, tag, names = f"r{sys.argv[1]}", sys.argv[2], sys.argv[3:]
     from big_data_crypto_sentiment_spark.queries import all_queries
     from big_data_crypto_sentiment_spark.session import get_spark
 
-    spark = get_spark("explain_r16",
+    spark = get_spark(f"explain_{rnd}",
                       extra_conf={"spark.ui.enabled": "false"})
     qs = all_queries()
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r16")
+        os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
