@@ -55,6 +55,7 @@ def _per_doc_flags(d: DataFrame, lp: dict[str, int], oov: int) -> DataFrame:
     its own projection so Catalyst never duplicates the expensive
     expression trees). NULL-text docs are dropped, exactly as the
     previous inner join on unigram_score's output did."""
+    from ..queries._util import literal_map
     from ..queries.cleaning import _LP_SCALE, DUP_2GRAM_MAX, TOP_WORD_MAX
     from ..queries.text import (
         _n_words,
@@ -76,7 +77,7 @@ def _per_doc_flags(d: DataFrame, lp: dict[str, int], oov: int) -> DataFrame:
     cta_spam = (F.regexp_count(t, F.lit(PAT_CTA)) > 0).cast("int")
     quality_ok = ((too_short + low_stop + high_punct + cta_spam) == 0)
 
-    lpmap = F.create_map(*[F.lit(x) for kv in lp.items() for x in kv])
+    lpmap = literal_map(lp)
     s1 = (d.filter(t.isNotNull())
            .select("*", quality_ok.cast("int").alias("quality_ok"),
                    F.split(t, " ").alias("_w")))

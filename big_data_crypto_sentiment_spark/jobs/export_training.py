@@ -30,6 +30,7 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..queries._util import literal_map
 from ..queries.sampling import shuffle_shards
 
 
@@ -96,8 +97,7 @@ def export_packed(spark: SparkSession, sf_dir: str, curated_dir: str,
     for s in alphabet + [m[3] for m in merges]:
         if s not in vocab:
             vocab[s] = len(vocab) + 1          # 0 = UNK/PAD
-    vmap = F.create_map(
-        *[F.lit(x) for kv in vocab.items() for x in kv])
+    vmap = literal_map(vocab)
     ids = (enc.select(
         "doc_id",
         F.transform(F.col("tokens"),

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import literal_map, table
 from .sampling import _hash_bucket, _sql_hash_bucket
 
 NGRAM = 5            # contamination gram width (words)
@@ -351,7 +351,7 @@ def unigram_score(docs: DataFrame, lp: dict[str, int], oov: int,
     n_tokens=-1 row with NULL avg_nll; the oracle's unnest drops the
     doc, so match that convention)."""
     docs = docs.filter(F.col(text_col).isNotNull())
-    lpmap = F.create_map(*[F.lit(x) for kv in lp.items() for x in kv])
+    lpmap = literal_map(lp)
     tok_lp = F.transform(
         F.col("_w"),
         lambda w: F.coalesce(F.element_at(lpmap, w), F.lit(oov)))
@@ -446,8 +446,8 @@ def bigram_score(docs: DataFrame, blp: dict[str, int],
                  text_col: str = "text") -> DataFrame:
     """(id, n_bigrams, n_oov_bigrams, avg_nll) — zero-shuffle scoring;
     avg_nll in nats of the 0.7/0.3 interpolated model."""
-    bmap = F.create_map(*[F.lit(x) for kv in blp.items() for x in kv])
-    umap = F.create_map(*[F.lit(x) for kv in ulp.items() for x in kv])
+    bmap = literal_map(blp)
+    umap = literal_map(ulp)
     grams = F.expr("transform(slice(_w, 1, size(_w) - 1), "
                    "(x, i) -> concat(x, ' ', _w[i + 1]))")
     # per-bigram mixed score in 1e-9 nats: 7·blp8(bigram) + 3·ulp8(w2);

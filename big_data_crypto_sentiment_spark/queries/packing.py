@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._util import table
+from ._util import literal_map, table
 from .sampling import _hash_bucket, _sql_hash_bucket
 from .text import PAT_TOKEN
 
@@ -163,10 +163,8 @@ def q_tokens_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = (d.select(F.explode(F.split(F.col("text"), " ")).alias("term"))
               .groupBy("term").agg(F.count("*").alias("n"))
               .orderBy(F.desc("n"), "term").limit(TOKEN_VOCAB_K).collect())
-    kv = []
-    for rank, r in enumerate(vocab, start=1):
-        kv += [F.lit(r.term), F.lit(rank)]
-    vmap = F.create_map(*kv)
+    vmap = literal_map({r.term: rank
+                        for rank, r in enumerate(vocab, start=1)})
     ids = F.transform(
         F.col("_w"), lambda w: F.coalesce(F.element_at(vmap, w),
                                           F.lit(OOV_ID)))

@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import literal_map, table
 
 TFIDF_VOCAB_K = 1000     # driver-artifact vocabulary cap (surfaced, not silent)
 TFIDF_TOP_K = 5
@@ -92,7 +92,7 @@ def _weights(docs: DataFrame, idf: dict[str, int], id_col: str,
              text_col: str) -> DataFrame:
     """(id, term, w, norm2): integer tf·idf4 weights + per-doc squared
     norm. One combinable (id, term) hash agg + one per-id window."""
-    idfmap = F.create_map(*[F.lit(x) for kv in idf.items() for x in kv])
+    idfmap = literal_map(idf)
     tf = (docs.select(F.col(id_col),
                       F.explode(F.split(F.col(text_col), " ")).alias("term"))
               .groupBy(id_col, "term").agg(F.count("*").alias("tf")))
@@ -263,7 +263,7 @@ def bm25_postings(docs: DataFrame, idf: dict[str, int], avgdl: float,
     """(id, term, s4): integer per-(doc, term) BM25 partial scores —
     the corpus-side index. One (id, term) hash agg; dl rides along as
     a grouping key (constant per doc, no extra shuffle)."""
-    idfmap = F.create_map(*[F.lit(x) for kv in idf.items() for x in kv])
+    idfmap = literal_map(idf)
     words = F.split(F.col(text_col), " ")
     tf = (docs.select(F.col(id_col), F.size(words).alias("dl"),
                       F.explode(words).alias("term"))
@@ -356,8 +356,7 @@ def _weights_from_tf(tf: DataFrame, idf: dict[str, int], entry: str,
     _WTS_CACHE key tfidf_topk consults."""
     key = (tf.sparkSession.sparkContext.applicationId, entry, sf_dir)
     if key not in _WTS_CACHE:
-        idfmap = F.create_map(*[F.lit(x) for kv in idf.items()
-                                for x in kv])
+        idfmap = literal_map(idf)
         w = (tf.withColumn("_idf", F.element_at(idfmap, F.col("term")))
                .filter(F.col("_idf").isNotNull())
                .select("doc_id", "term",
@@ -422,8 +421,7 @@ def zipf_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # from the exact rational and diverges past 2^53 tokens
         s = tfdl.agg(F.sum("tf").alias("s")).first()["s"]
         avgdl = float(s) / _zipf_ndocs(spark, sf_dir)
-        idfmap = F.create_map(*[F.lit(x) for kv in idf.items()
-                                for x in kv])
+        idfmap = literal_map(idf)
         num = (F.col("_idf").cast("double") * F.col("tf")
                * F.lit(BM25_K1 + 1.0))
         den = (F.col("tf") + F.lit(BM25_K1)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._util import table
+from ._util import literal_map, table
 
 SAMPLE_MOD = 1_000_000
 SAMPLE_RATE_PPM = 200_000      # 20% dev-subset sample
@@ -198,7 +198,7 @@ def temperature_thresholds(df: DataFrame, stratum: str,
 def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     thr = temperature_thresholds(d, "source")
-    tmap = F.create_map(*[F.lit(x) for kv in thr.items() for x in kv])
+    tmap = literal_map(thr)
     return (d.filter(_hash_bucket(F.col("doc_id"), SAMPLE_MOD)
                      < F.element_at(tmap, F.col("source")))
              .select("doc_id", "source", "lang"))  # O(sample): unsorted
@@ -319,7 +319,7 @@ def dsir_select(docs: DataFrame, diff8: dict[int, int],
                 base: DataFrame | None = None) -> DataFrame:
     """Top-k raw docs by Gumbel-perturbed importance weight:
     (doc_id, logw8, score). Zero-shuffle scoring; bounded top-k."""
-    dmap = F.create_map(*[F.lit(x) for kv in diff8.items() for x in kv])
+    dmap = literal_map(diff8)
     lw8 = F.aggregate(
         F.transform(F.col("_b"), lambda b: F.element_at(dmap, b)),
         F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint"))

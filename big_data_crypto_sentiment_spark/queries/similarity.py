@@ -319,21 +319,20 @@ def _assign_clusters(df: DataFrame, centroids, emb_col: str,
     return df.withColumn("cid", F.explode(assign(F.col(emb_col))))
 
 
-def fit_ivf_centroids(corpus: DataFrame, emb_col: str = "embedding",
-                      k: int = IVF_CLUSTERS, seed: int = 42,
-                      sample_ppm: int | None = None,
-                      id_col: str = "vec_id"):
-    """MLlib KMeans over the corpus → [(cluster_id, centroid_vector)];
-    centroids are O(k·dim) — broadcastable. At 100 TB pass `sample_ppm`:
-    centroid quality needs only a representative sample, and the
-    deterministic hash filter keeps the fit reproducible regardless of
-    partitioning (unlike rdd-sample seeds)."""
+def fit_ivf_centroids(corpus: DataFrame, k: int = IVF_CLUSTERS,
+                      seed: int = 42, sample_ppm: int | None = None):
+    """MLlib KMeans over the corpus's `embedding` → [(cluster_id,
+    centroid_vector)]; centroids are O(k·dim) — broadcastable. At 100 TB
+    pass `sample_ppm`: centroid quality needs only a representative
+    sample, and the deterministic hash filter on `vec_id` keeps the fit
+    reproducible regardless of partitioning (unlike rdd-sample seeds)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     if sample_ppm is not None:
         from .sampling import sample_hash
-        corpus = sample_hash(corpus, id_col, sample_ppm)
-    feat = corpus.select(array_to_vector(F.col(emb_col)).alias("features"))
+        corpus = sample_hash(corpus, "vec_id", sample_ppm)
+    feat = corpus.select(array_to_vector(F.col("embedding"))
+                         .alias("features"))
     model = KMeans(k=k, seed=seed, maxIter=10).fit(feat)
     return [(i, c.tolist()) for i, c in enumerate(model.clusterCenters())]
 
@@ -759,9 +758,13 @@ def q_embed_mean_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 #     Two centroid front-ends feed the same core: the registered query
 #     derives integer-frozen label prototypes (SQL-reproducible → full
-#     hash-check vs DuckDB); `freeze_kmeans_centroids` adapts
-#     fit_ivf_centroids' KMeans output (the IVF reuse — pytest-pinned
-#     with planted semantic dups, rows-only by nature of the fit). ---
+#     hash-check vs DuckDB); `freeze_kmeans_centroids` adapts the
+#     driver-side k-means fit (fit_kmeans_np — numpy Lloyd over the
+#     id-ordered, capped fit sample, as the paper fits on one machine
+#     with FAISS; pytest-pinned with planted semantic dups and with
+#     partition/row-order invariance). Its centroids are a pure
+#     function of (data, k, seed), but they are not DuckDB-derivable,
+#     so that form stays rows-only. ---
 SEMDEDUP_THRESHOLD = 0.35  # fixture-tuned: drops exist at all 3 SFs
 
 
@@ -772,10 +775,18 @@ SEMDEDUP_ROWS_PER_CLUSTER = 100  # target expected cluster size: the
 SEMDEDUP_MAX_K = 4096  # centroid table stays a broadcastable
                        # O(k·dim) artifact under this cap
 
-# ... and past this many rows the KMeans FIT input auto-samples down
+# ... and past this many rows the k-means FIT input auto-samples down
 # to the cap (k-means assignment cost per iteration scales with the
-# fit input; centroid quality needs only a representative sample)
+# fit input; centroid quality needs only a representative sample).
+# The sample is collected to the driver, so the cap also bounds the
+# fit's memory: the Lloyd loop holds the cap × dim float64 matrix
+# (51 MB at dim 64) plus one distance block of at most _KMEANS_BLOCK
+# doubles; the collect that builds the matrix peaks at about two
+# copies of it (the Arrow buffers and the id-ordered matrix).
 SEMDEDUP_FIT_CAP = 100_000
+_KMEANS_BLOCK = 1 << 22   # doubles per (rows × k) distance block: 32 MB
+_KMEANS_MAX_ITER = 10     # MLlib KMeans' defaults: at most 10 Lloyd
+_KMEANS_TOL = 1e-4        # steps, stop once no centre moves further
 
 def semdedup_k_for(n_rows: int,
                    rows_per_cluster: int = SEMDEDUP_ROWS_PER_CLUSTER,
@@ -793,6 +804,98 @@ def semdedup_k_for(n_rows: int,
     return max(2, min(max_k, -(-n_rows // rows_per_cluster)))
 
 
+def _fit_sample(vecs: DataFrame, id_col: str, emb_col: str,
+                sample_ppm: int | None):
+    """The k-means fit input as a (rows, dim) float64 matrix, collected
+    once through Arrow and ordered by id — so the fit sees the same
+    matrix however the frame is partitioned or its batches arrive.
+    NULL/empty embeddings drop out (as _freeze_vectors drops them) and
+    NULL elements read as 0 (as _assign_np reads them); ragged
+    dimensions raise. Each Arrow buffer is released as soon as the next
+    form exists, so at most about two copies of the sample are alive."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if sample_ppm is not None:
+        from .sampling import sample_hash
+        vecs = sample_hash(vecs, id_col, sample_ppm)
+    t = (vecs.filter(F.size(F.col(emb_col)) >= 1)
+             .select(id_col, emb_col).toArrow())
+    if t.num_rows == 0:
+        return np.zeros((0, 0))
+    order = np.argsort(t.column(id_col).to_numpy(), kind="stable")
+    emb = t.column(emb_col).combine_chunks()
+    del t
+    lens = pc.list_value_length(emb).to_numpy()
+    if (lens != lens[0]).any():
+        raise ValueError(f"SemDeDup: ragged {emb_col} dimensions "
+                         f"{sorted(set(lens.tolist()))}")
+    flat = pc.fill_null(emb.flatten(), 0)
+    del emb
+    X = flat.to_numpy(zero_copy_only=False).reshape(len(order),
+                                                    int(lens[0]))
+    del flat
+    return X[order].astype(np.float64, copy=False)
+
+
+def _nearest(X, C):
+    """Index of each row of X's nearest row of C (ties → the lower
+    index), in row blocks of at most _KMEANS_BLOCK distances, so the
+    driver never holds the whole len(X) × len(C) matrix."""
+    import numpy as np
+
+    lab = np.zeros(len(X), dtype=np.int64)
+    if len(X) == 0:
+        return lab
+    cn2 = (C * C).sum(axis=1)
+    block = max(1, _KMEANS_BLOCK // len(C))
+    for s in range(0, len(X), block):
+        # ‖x‖² is constant per row, so argmin needs only ‖c‖² − 2x·c
+        D = X[s:s + block] @ C.T
+        D *= -2.0
+        D += cn2
+        lab[s:s + block] = D.argmin(axis=1)
+    return lab
+
+
+def fit_kmeans_np(X, k: int,
+                  seed: int = 42) -> list[tuple[int, list[float]]]:
+    """Driver-side k-means over a bounded fit sample X (rows, dim) →
+    [(cid, centroid)], the shape fit_ivf_centroids returns.
+
+    Init: k distinct sample rows drawn by a generator seeded with
+    `seed` (the FAISS init — O(k), where k-means++ would cost k passes
+    over the sample). Then Lloyd's steps with MLlib's defaults: at
+    most _KMEANS_MAX_ITER iterations, stopping once no centre moves
+    more than _KMEANS_TOL; an empty cluster keeps its previous centre.
+    k is clamped to the sample size. Distances run in row blocks
+    (_nearest) and cluster sums by per-dimension bincount, so besides
+    X the fit holds one distance block and O(k·dim) centres.
+    Deterministic for a given (X, k, seed)."""
+    import numpy as np
+
+    X = np.asarray(X, dtype=np.float64)
+    n = len(X)
+    k = min(k, n)
+    if k <= 0:
+        return []
+    rng = np.random.default_rng(seed)
+    C = X[rng.choice(n, size=k, replace=False)].copy()
+    for _ in range(_KMEANS_MAX_ITER):
+        lab = _nearest(X, C)
+        counts = np.bincount(lab, minlength=k)
+        hit = counts > 0
+        sums = np.stack([np.bincount(lab, weights=X[:, j], minlength=k)
+                         for j in range(X.shape[1])], axis=1)
+        new = C.copy()
+        new[hit] = sums[hit] / counts[hit, None]
+        moved = ((new - C) ** 2).sum(axis=1).max()
+        C = new
+        if moved <= _KMEANS_TOL * _KMEANS_TOL:
+            break
+    return [(i, c.tolist()) for i, c in enumerate(C)]
+
+
 def semdedup_kmeans(spark: SparkSession, vecs: DataFrame,
                     id_col: str = "vec_id", emb_col: str = "embedding",
                     k: int | None = None,
@@ -802,38 +905,42 @@ def semdedup_kmeans(spark: SparkSession, vecs: DataFrame,
                     two_level: bool | None = None,
                     fit_cap: int = SEMDEDUP_FIT_CAP) -> DataFrame:
     """SemDeDup with k-means centroids — the SCALE path (the paper's
-    own clustering front-end), composing fit_ivf_centroids →
-    assignment → the shared pair stage. The label-prototype front-end
-    (q_sim_semdedup) stays the exactness witness: identical core, a
-    SQL-derivable centroid table, full DuckDB hash-check. This form is
-    rows-only by nature of the iterative KMeans fit.
+    own clustering front-end), composing the driver-side fit
+    (fit_kmeans_np over _fit_sample) → assignment → the shared pair
+    stage. The label-prototype front-end (q_sim_semdedup) stays the
+    exactness witness: identical core, a SQL-derivable centroid table,
+    full DuckDB hash-check. This form is rows-only: its centroids are
+    deterministic, but no SQL engine re-derives them.
 
     k defaults to semdedup_k_for(count): cluster count grows with the
     corpus so expected cluster size — and with it the intra-cluster
     pair fan-out — stays bounded. The count is one bounded driver
-    scalar; at 100 TB pass sample_ppm so the KMeans fit itself runs on
-    a representative hash-sample instead of the full corpus.
+    scalar. k is clamped to the fit sample's size, so an input of 0
+    or 1 embedded vectors is valid (0 → empty result, 1 → kept).
+
+    The fit reads at most fit_cap rows: past that (or whenever
+    sample_ppm is given) it reads a deterministic hash-sample. The
+    sample is collected once to the driver (memory bound at
+    SEMDEDUP_FIT_CAP) and the fit runs no Spark job; the per-iteration
+    assignment over the full corpus is what a distributed k-means pays
+    for N, and a representative sample fixes centroid quality at a
+    constant cost (the curate funnel inherits this automatically).
 
     two_level (default: auto at k >= TWO_LEVEL_MIN_K) switches the
     assignment from the exhaustive O(N·k·d) broadcast join — which the
     k ∝ N rule makes quadratic in N — to the two-level routed
-    O(N·√k·d) form (semdedup_assign_routed). Past fit_cap rows the
-    KMeans FIT input auto-samples to the cap (the per-iteration
-    assignment over the full corpus is what k-means pays for N; a
-    representative hash-sample fixes centroid quality at a constant
-    cost — the curate funnel inherits this automatically). Nothing
-    currently in the registry or scale bench crosses either auto
-    threshold, so recorded series are unchanged; both paths are
-    pinned by pytest."""
+    O(N·√k·d) form (semdedup_assign_routed). Nothing currently in the
+    registry or scale bench crosses either auto threshold; both paths
+    are pinned by pytest."""
     n = vecs.count()                      # one bounded driver scalar
     if k is None:
         k = semdedup_k_for(n)
     if sample_ppm is None and n > fit_cap:
         sample_ppm = max(1, 1_000_000 * fit_cap // n)
-    cents = fit_ivf_centroids(vecs, emb_col=emb_col, k=k, seed=seed,
-                              sample_ppm=sample_ppm, id_col=id_col)
+    cents = fit_kmeans_np(_fit_sample(vecs, id_col, emb_col, sample_ppm),
+                          k, seed)
     if two_level is None:
-        two_level = k >= TWO_LEVEL_MIN_K
+        two_level = len(cents) >= TWO_LEVEL_MIN_K
     frozen = _freeze_vectors(vecs, id_col, emb_col)
     if two_level:
         assigned = semdedup_assign_routed(spark, frozen, cents)
@@ -850,24 +957,16 @@ TWO_LEVEL_MIN_K = 256
 
 
 def _group_centroids(centroids, kc: int, seed: int = 42):
-    """Driver-side Lloyd over the k FINE centroids (k is bounded by
-    SEMDEDUP_MAX_K, so this is trivial numpy work — never touches the
-    corpus): returns (group centers (kc, d) float64, per-fine group
-    ids). Deterministic: seeded init, fixed 15 iterations."""
+    """Group the k FINE centroids into at most kc coarse groups with
+    the same driver-side fit as the centroids themselves (fit_kmeans_np
+    over the k ≤ SEMDEDUP_MAX_K centroids — never touches the corpus):
+    returns (group centers (≤ kc, d) float64, each fine centroid's
+    nearest group id). kc clamps to k, so 0 or 1 centroids are valid."""
     import numpy as np
 
     X = np.array([c for _, c in centroids], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    centers = X[rng.choice(len(X), size=kc, replace=False)].copy()
-    g = np.zeros(len(X), dtype=np.int64)
-    for _ in range(15):
-        d2 = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        g = d2.argmin(axis=1)
-        for j in range(kc):
-            m = X[g == j]
-            if len(m):
-                centers[j] = m.mean(axis=0)
-    return centers, g
+    centers = np.array([c for _, c in fit_kmeans_np(X, kc, seed)])
+    return centers, _nearest(X, centers)
 
 
 def semdedup_assign_routed(spark: SparkSession, frozen: DataFrame,
@@ -896,15 +995,12 @@ def semdedup_assign_routed(spark: SparkSession, frozen: DataFrame,
     if kc is None:
         kc = max(2, int(np.ceil(np.sqrt(k))))
     centers, g = _group_centroids(centroids, kc)
-    coarse = spark.createDataFrame(
-        [(int(j), d, int(round(v * PROTO_SCALE)))
-         for j, vec in enumerate(centers) for d, v in enumerate(vec)],
-        "gid int, dim int, gc bigint")
-    fine = spark.createDataFrame(
-        [(int(g[i]), int(cid), d, int(round(v * PROTO_SCALE)))
-         for i, (cid, vec) in enumerate(centroids)
-         for d, v in enumerate(vec)],
-        "gid int, cid int, dim int, c bigint")
+    coarse = _long_form(spark, {"gid": np.arange(len(centers))}, centers,
+                        "gid int, dim int, gc bigint", "gc")
+    fine = _long_form(spark, {"gid": g,
+                              "cid": [cid for cid, _ in centroids]},
+                      [vec for _, vec in centroids],
+                      "gid int, cid int, dim int, c bigint")
 
     ex = frozen.select("vec_id",
                        F.posexplode_outer("x8").alias("dim", "v"))
@@ -941,13 +1037,35 @@ def semdedup_assign_routed(spark: SparkSession, frozen: DataFrame,
                       .alias("cos_c")))
 
 
+def _long_form(spark: SparkSession, keys: dict, vecs, schema: str,
+               value: str = "c") -> DataFrame:
+    """(*keys, dim, value): one row per entry of the (rows, dim) matrix
+    `vecs`, value = the entry in PROTO_SCALE integer units (round half to
+    even, as Python's round). `keys` maps column name → one value per
+    matrix row. Built as a pyarrow Table, which createDataFrame ships
+    to the JVM whole — no Python worker runs, whatever the session's
+    Arrow setting."""
+    import numpy as np
+    import pyarrow as pa
+
+    V = np.asarray(vecs, dtype=np.float64)
+    V = V.reshape(len(V), -1) if V.size else np.zeros((len(V), 0))
+    d = V.shape[1]
+    cols = {name: np.repeat(np.asarray(v, dtype=np.int64), d)
+            for name, v in keys.items()}
+    cols["dim"] = np.tile(np.arange(d, dtype=np.int64), len(V))
+    cols[value] = np.round(V * PROTO_SCALE).astype(np.int64).ravel()
+    return spark.createDataFrame(pa.table(cols), schema)
+
+
 def freeze_kmeans_centroids(spark: SparkSession, centroids) -> DataFrame:
-    """fit_ivf_centroids output [(cid, [float])] → long-form integer
-    centroid table (cid, dim, c) in PROTO_SCALE units — the bounded
-    O(k·dim) model artifact semdedup consumes."""
-    rows = [(int(cid), d, int(round(v * PROTO_SCALE)))
-            for cid, vec in centroids for d, v in enumerate(vec)]
-    return spark.createDataFrame(rows, "cid int, dim int, c bigint")
+    """fit_kmeans_np / fit_ivf_centroids output [(cid, [float])] →
+    long-form integer centroid table (cid, dim, c) in PROTO_SCALE units
+    — the bounded O(k·dim) model artifact semdedup consumes, built
+    through Arrow (_long_form)."""
+    return _long_form(spark, {"cid": [cid for cid, _ in centroids]},
+                      [vec for _, vec in centroids],
+                      "cid int, dim int, c bigint")
 
 
 def _freeze_vectors(vecs: DataFrame, id_col: str = "vec_id",
@@ -1177,11 +1295,12 @@ def q_sim_ivf_topk_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Live-vs-frozen SemDeDup kept-set agreement floor (r15 graduation):
 # the live k-means front-end (k ∝ N) and the frozen label-prototype
 # front-end share the exact pair stage but cluster differently, so
-# their kept sets agree 60-79% across SFs on the unstructured fixture
-# (measured; the sf0.1 k jump to semdedup_k_for(2000)=4 clusters is
-# the low end). The 50% floor is a STRUCTURAL smoke contract — a
-# broken live assignment or a degenerate drop stage (everything
-# kept/dropped) reads as a red driver row.
+# their kept sets agree 60-78% across SFs on the unstructured fixture
+# (measured with the driver-side fit: 77.8/75.4/59.6% at
+# sf0.001/0.01/0.1; the sf0.1 k jump to semdedup_k_for(2000)=20
+# clusters is the low end). The 50% floor is a STRUCTURAL smoke
+# contract — a broken live assignment or a degenerate drop stage
+# (everything kept/dropped) reads as a red driver row.
 SEMDEDUP_LIVE_AGREE_MIN_PCT = 50
 
 
@@ -1190,13 +1309,15 @@ def q_sim_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k grows with N via semdedup_k_for) instead of label prototypes.
 
     Graduated r15 (VERDICT r14 #1, the sim_ivf_recall_contract
-    recipe): the live KMeans fit makes the per-vec assignment
-    engine-specific, so the registered surface hashes the FROZEN
-    label-prototype SemDeDup's exact aggregate evidence (kept count +
-    kept-id checksum, recomputed by DuckDB through the proven
-    sim_semdedup CTEs) and rides the live k-means kept set as asserted
-    agreement/sanity flags. The live per-vec frame stays the library
-    surface (semdedup_kmeans), pinned by the planted-dup pytest."""
+    recipe): the k-means centroids come from a numpy fit that no SQL
+    engine re-derives (deterministic, but not DuckDB-reproducible), so
+    the per-vec assignment is not oracle-checkable and the registered
+    surface hashes the FROZEN label-prototype SemDeDup's exact
+    aggregate evidence (kept count + kept-id checksum, recomputed by
+    DuckDB through the proven sim_semdedup CTEs) and rides the live
+    k-means kept set as asserted agreement/sanity flags. The live
+    per-vec frame stays the library surface (semdedup_kmeans), pinned
+    by the planted-dup pytest."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     live = (semdedup_kmeans(spark, e)
             .select("vec_id", F.col("is_kept").alias("_lk")))

@@ -533,12 +533,11 @@ def q_ctfidf_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from ._util import dsum
+    from ._util import dsum, literal_map
     cnt = _source_term_counts(spark, sf_dir)
     totals = {r.source: r.t for r in
               cnt.groupBy("source").agg(F.sum("c").alias("t")).collect()}
-    tmap = F.create_map(*[F.lit(x) for s in sorted(totals)
-                          for x in (s, float(totals[s]))])
+    tmap = literal_map({s: float(totals[s]) for s in sorted(totals)})
     pt = cnt.select(
         "term", "source",
         (F.col("c") / F.element_at(tmap, F.col("source"))).alias("p"))

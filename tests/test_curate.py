@@ -141,3 +141,40 @@ def test_semantic_dedup_stage_flags_only_embedded_docs(spark):
                           & (F.col("semantic_dup") == 1)).count() == 0
     finally:
         ann.unpersist()
+
+
+def test_semantic_stage_passes_when_embeddings_cover_no_survivor(
+        spark, tmp_path):
+    """An embeddings table whose only vector belongs to an exact-dup
+    copy leaves SemDeDup nothing to cluster once stage 2 has run: the
+    stage must pass every doc instead of failing the fit."""
+    text = " ".join(f"t{i}" for i in range(30))
+    rows = ([(0, text, "en", "src0"), (1, text, "en", "src0")]
+            + [(i, " ".join(f"q{i}_{j}" for j in range(30)), "en", "src0")
+               for i in range(2, 40)])
+    df = spark.createDataFrame(rows, ["doc_id", "text", "lang", "source"])
+    sf_dir = str(tmp_path / "mini3")
+    df.withColumn("n_chars", F.length("text")) \
+      .write.parquet(f"{sf_dir}/documents.parquet")
+    spark.createDataFrame([(1, [0.5] * 8, 0)],
+                          "vec_id long, embedding array<float>, label int") \
+         .write.parquet(f"{sf_dir}/embeddings.parquet")
+
+    stats = funnel_stats(curate(spark, sf_dir)).first()
+    assert stats.n_docs == 40
+    assert stats.drop_dup == 1 and stats.drop_semantic_dup == 0
+
+
+def test_curation_never_reaches_mllib(spark, monkeypatch):
+    """The funnel's SemDeDup fit runs in the driver: with MLlib's KMeans
+    made to raise, curation still completes and the semantic stage
+    still drops."""
+    import pyspark.ml.clustering as clustering
+
+    class _NoKMeans:
+        def __init__(self, *a, **kw):
+            raise AssertionError("curation reached pyspark.ml KMeans")
+
+    monkeypatch.setattr(clustering, "KMeans", _NoKMeans)
+    stats = funnel_stats(curate(spark, SF_DIR)).first()
+    assert stats.drop_semantic_dup > 0 and stats.n_kept > 0

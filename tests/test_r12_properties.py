@@ -242,7 +242,7 @@ def test_semdedup_kmeans_auto_threshold_wiring(spark):
 
 
 def test_semdedup_fit_cap_samples_the_kmeans_input(spark):
-    """Past fit_cap rows the KMeans fit runs on a hash-sample while
+    """Past fit_cap rows the k-means fit runs on a hash-sample while
     the ASSIGNMENT still covers every row — output cardinality and
     schema are unchanged and drops still happen on planted dups."""
     import numpy as np
