@@ -288,7 +288,7 @@ def artifact_thunks(spark, sf_dir: str) -> list[tuple[str, object]]:
 
     def _warm_bpe_training() -> None:
         # distributed word count + driver-side merge training, shared
-        # by both BPE entries through bpe._WC_CACHE
+        # by both BPE entries through one session artifact
         from big_data_crypto_sentiment_spark.queries.bpe import (
             _cached_training,
         )

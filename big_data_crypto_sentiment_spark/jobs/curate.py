@@ -157,10 +157,10 @@ def curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would flag itself span_dup and duplicated content would vanish
     # entirely instead of keeping one copy.
     # r16 (guide §1.2): the gram explode is the stage's dominant
-    # per-row cost and q_dedup_span_stats caches the corpus-wide
-    # exploded grams (_GRAMS_CACHE, keyed on the input plan). Pass the
-    # IDENTICAL corpus plan (rebalance_scan + the two columns, so the
-    # semanticHash key matches) and restrict to the exact-dedup
+    # per-row cost and q_dedup_span_stats keeps the corpus-wide
+    # exploded grams as a session artifact keyed on the input plan's
+    # semanticHash(). Pass the IDENTICAL corpus plan (rebalance_scan +
+    # the two columns, so the key matches) and restrict to the exact-dedup
     # survivors via keep_ids — a semi-join on the exploded grams,
     # row-identical to exploding the pre-filtered docs (keep_ids ids
     # are unique, so the old inner join was a semi-join too).
@@ -206,7 +206,7 @@ def curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the flag itself stays a column like every other stage.
     # r16 (guide §2.4, remove passes outright): the unigram model is
     # the SAME ("unigram_docs", sf) artifact q_unigram_logprob /
-    # q_bigram_logprob build — share the session cache instead of
+    # q_bigram_logprob build — share the session artifact instead of
     # re-running the count agg + collects; and the cut's quantile pass
     # now reads avg_nll off the CHECKPOINTED flags frame itself (the
     # values are expression-identical to unigram_score's, so the

@@ -48,6 +48,7 @@ from . import (
     text,
     timeseries,
 )
+from ._util import clear_session_caches  # noqa: F401  (re-export)
 
 _MODULES = (flagship, relational, timeseries, text, dedup, similarity, ml,
             ingestion, ta, media, reshape, approx, avro_rt, components,
@@ -455,39 +456,3 @@ def all_oracle_sql() -> dict[str, str]:
     for m in _MODULES:
         out.update(m.ORACLE)
     return out
-
-
-def session_caches() -> list[dict]:
-    """Every module-level session cache dict, discovered by the naming
-    convention: any `queries.*` module attribute matching `_*_CACHE`
-    that is a dict. Convention is the registration — a new cache is
-    picked up automatically, and tests/test_registry_validation.py
-    pins that nothing persisting DataFrames escapes this discovery."""
-    out: list[dict] = []
-    for m in _MODULES:
-        for name in dir(m):
-            if (name.startswith("_") and name.endswith("_CACHE")
-                    and isinstance(getattr(m, name), dict)):
-                out.append(getattr(m, name))
-    return out
-
-
-def clear_session_caches() -> int:
-    """Evict every module-level session cache (persisted shared
-    DataFrames / driver artifacts keyed by (applicationId, …, sf_dir)).
-    The caches are bounded per fixture, but nothing evicts them on a
-    fixture swap WITHIN one session — harness code that runs several
-    sf_dirs in one process (a future single-process tools/check.py
-    sweep) calls this between fixtures. Returns the number of entries
-    dropped; unpersists any cached DataFrame values."""
-    caches = session_caches()
-    n = 0
-    for c in caches:
-        for v in c.values():
-            vals = v if isinstance(v, tuple) else (v,)
-            for x in vals:
-                if hasattr(x, "unpersist"):
-                    x.unpersist()
-        n += len(c)
-        c.clear()
-    return n

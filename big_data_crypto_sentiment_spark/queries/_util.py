@@ -2,9 +2,52 @@
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
+
+# The session-artifact store: every shared intermediate a query builds
+# once per analysis session (persisted DataFrames, driver-side models,
+# on-disk layouts), keyed (applicationId, kind, *params). The only
+# module-level cache in queries/ — clear_session_caches() evicts it all.
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+class SessionDir(str):
+    """An on-disk directory a session artifact owns. Eviction removes
+    it the way it unpersists a DataFrame."""
+
+    def unpersist(self) -> None:
+        shutil.rmtree(self, ignore_errors=True)
+
+
+def session_artifact(spark: SparkSession, key: tuple, build=None):
+    """Get-or-build the artifact stored under (applicationId, *key).
+    `key` starts with a kind name unique to its call site, followed by
+    every parameter the value depends on (sf_dir, a plan's
+    semanticHash(), config). `build()` runs only on a miss; persisting
+    is its business. With build=None this only looks: the stored
+    value, or None."""
+    full = (spark.sparkContext.applicationId, *key)
+    if full not in _ARTIFACTS and build is not None:
+        _ARTIFACTS[full] = build()
+    return _ARTIFACTS.get(full)
+
+
+def clear_session_caches() -> int:
+    """Evict every session artifact: unpersist each DataFrame (also
+    inside tuples) and remove each SessionDir from disk. Harness loops
+    that run several sf_dirs in one process call this between
+    fixtures. Returns the number of artifacts dropped."""
+    for v in _ARTIFACTS.values():
+        for x in v if isinstance(v, tuple) else (v,):
+            if hasattr(x, "unpersist"):
+                x.unpersist()
+    n = len(_ARTIFACTS)
+    _ARTIFACTS.clear()
+    return n
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 
 FUNNEL_FIRST = "click"
 FUNNEL_SECOND = "purchase"
@@ -63,24 +63,20 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # O(users with a click): unsorted
 
 
-# Session cache for the cohort retention triangle: cohort_retention
+# Session artifact for the cohort retention triangle: cohort_retention
 # returns it and cohort_retention_pct consumed it TWICE (the triangle
 # plus its day-0 slice — Catalyst does not share the subtree), i.e.
 # three events scans + first-seen joins + count_distinct aggs for one
 # bounded days² grid (r16, guide §1.2). Persisted at its bounded grain,
-# keyed (appId, sf_dir); auto-discovered by queries.session_caches().
-_COHORT_TRI_CACHE: dict[tuple, DataFrame] = {}
-
-
+# keyed (appId, sf_dir).
 def _cohort_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COHORT_TRI_CACHE:
+    def build() -> DataFrame:
         ev = (table(spark, sf_dir, "events")
               .filter(F.col("user_id").isNotNull())
               .select("user_id", F.to_date("ts").alias("day")))
         first_seen = ev.groupBy("user_id").agg(
             F.min("day").alias("cohort_day"))
-        _COHORT_TRI_CACHE[key] = (
+        return (
             ev.join(first_seen, "user_id")
               .select("user_id", "cohort_day",
                       F.datediff("day", "cohort_day").alias("day_offset"))
@@ -91,7 +87,8 @@ def _cohort_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select(F.col("cohort_day").cast("string")
                        .alias("cohort_day"), "day_offset", "n_users")
               .persist())
-    return _COHORT_TRI_CACHE[key]
+    return session_artifact(spark, ("behavior.cohort_triangle", sf_dir),
+                            build)
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:

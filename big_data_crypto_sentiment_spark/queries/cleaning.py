@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import literal_map, table
+from ._util import literal_map, session_artifact, table
 from .sampling import _hash_bucket, _sql_hash_bucket
 
 NGRAM = 5            # contamination gram width (words)
@@ -293,25 +293,27 @@ UNIGRAM_VOCAB_K = 1000
 _LP_SCALE = 100_000_000  # 1e8: lp8 = round(ln(p) * _LP_SCALE)
 
 
-# Session cache for the unigram model artifact: q_unigram_logprob and
-# q_bigram_logprob (whose backoff distribution is the SAME model over
-# the same corpus) would otherwise each run the count agg + two
-# collects — the registered-entry key is (appId, sf_dir)-scoped like
-# retrieval._IDF_CACHE, bounded by registered configs.
-_UNIGRAM_CACHE: dict[tuple, tuple] = {}
-
-
 def unigram_model(docs: DataFrame, text_col: str = "text",
                   vocab_k: int = UNIGRAM_VOCAB_K,
                   cache_key: tuple | None = None):
     """(term -> lp8 dict, oov lp8, truncated?) — add-one smoothing over
-    the full-corpus term counts; OOV mass = 1/(total+V+1)."""
+    the full-corpus term counts; OOV mass = 1/(total+V+1).
+
+    With a `cache_key` the model is a session artifact: q_unigram_logprob
+    and q_bigram_logprob (whose backoff distribution is the SAME model
+    over the same corpus) would otherwise each run the count agg + two
+    collects."""
+    if cache_key is None:
+        return _build_unigram(docs, text_col, vocab_k, None)
+    return session_artifact(
+        docs.sparkSession,
+        ("cleaning.unigram", *cache_key, text_col, vocab_k),
+        lambda: _build_unigram(docs, text_col, vocab_k, cache_key))
+
+
+def _build_unigram(docs: DataFrame, text_col: str, vocab_k: int,
+                   cache_key: tuple | None):
     import math
-    if cache_key is not None:
-        full_key = (docs.sparkSession.sparkContext.applicationId,
-                    *cache_key, text_col, vocab_k)
-        if full_key in _UNIGRAM_CACHE:
-            return _UNIGRAM_CACHE[full_key]
     if (cache_key is not None and cache_key[0] == "unigram_docs"
             and text_col == "text"):
         # r16 (guide §1.2): the ("unigram_docs", sf_dir) key marks the
@@ -337,10 +339,7 @@ def unigram_model(docs: DataFrame, text_col: str = "text",
     lp = {r.term: round(math.log((r.c + 1) / denom) * _LP_SCALE)
           for r in top[:vocab_k]}
     oov = round(math.log(1.0 / denom) * _LP_SCALE)
-    out = (lp, oov, len(top) > vocab_k)
-    if cache_key is not None:
-        _UNIGRAM_CACHE[full_key] = out
-    return out
+    return lp, oov, len(top) > vocab_k
 
 
 def unigram_score(docs: DataFrame, lp: dict[str, int], oov: int,
@@ -385,26 +384,30 @@ def unigram_score(docs: DataFrame, lp: dict[str, int], oov: int,
 BIGRAM_VOCAB_K = 2000
 
 
-# Bigram-side twin of _UNIGRAM_CACHE: without it every bigram_model
-# call re-ran the bigram count agg + two collects even when the inner
-# unigram model hit its cache (measured ~2.3 s per re-entry at sf0.1
-# — paid by every repeat q_bigram_logprob invocation: bench + the
-# per-pytest deferred-parity re-run + each check.py sweep).
-_BIGRAM_CACHE: dict[tuple, tuple] = {}
-
-
 def bigram_model(docs: DataFrame, text_col: str = "text",
                  vocab_k: int = BIGRAM_VOCAB_K,
                  cache_key: tuple | None = None):
     """(bigram -> lp8, unigram -> lp8, oov lp8, truncated?) — add-one-
     smoothed conditional bigram log-probs over corpus counts; unigram
-    backoff from unigram_model's add-one distribution."""
+    backoff from unigram_model's add-one distribution.
+
+    With a `cache_key` the model is a session artifact, like the
+    unigram one: without it every call re-ran the bigram count agg +
+    two collects even when the inner unigram model hit (measured
+    ~2.3 s per re-entry at sf0.1 — paid by every repeat
+    q_bigram_logprob invocation: bench + the per-pytest
+    deferred-parity re-run + each check.py sweep)."""
+    if cache_key is None:
+        return _build_bigram(docs, text_col, vocab_k, None)
+    return session_artifact(
+        docs.sparkSession,
+        ("cleaning.bigram", *cache_key, text_col, vocab_k),
+        lambda: _build_bigram(docs, text_col, vocab_k, cache_key))
+
+
+def _build_bigram(docs: DataFrame, text_col: str, vocab_k: int,
+                  cache_key: tuple | None):
     import math
-    if cache_key is not None:
-        full_key = (docs.sparkSession.sparkContext.applicationId,
-                    *cache_key, text_col, vocab_k)
-        if full_key in _BIGRAM_CACHE:
-            return _BIGRAM_CACHE[full_key]
     uni_lp, uni_oov, _ = unigram_model(docs, text_col, UNIGRAM_VOCAB_K,
                                        cache_key=cache_key)
     w = F.split(F.col(text_col), " ")
@@ -420,10 +423,7 @@ def bigram_model(docs: DataFrame, text_col: str = "text",
     denom = tot.t + tot.v + 1
     blp = {r.bg: round(math.log((r.c + 1) / denom) * _LP_SCALE)
            for r in top[:vocab_k]}
-    out = (blp, uni_lp, uni_oov, len(top) > vocab_k)
-    if cache_key is not None:
-        _BIGRAM_CACHE[full_key] = out
-    return out
+    return blp, uni_lp, uni_oov, len(top) > vocab_k
 
 
 # interpolation weights in integer tenths: 0.7·bigram + 0.3·unigram.

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 from .dedup import (
     PAIR_SLICE_SOURCE,
     SHINGLE_WORDS,
@@ -196,19 +196,15 @@ def dedup_components(docs: DataFrame, threshold: float,
               .orderBy("doc_id"))  # bounded: one row per slice doc
 
 
-# Session cache for the registered slice's cluster assignment: both
+# Session artifact for the registered slice's cluster assignment: both
 # q_dedup_components and q_dedup_canonical consume the SAME min-label
 # fixpoint, and the large/small-star iteration (localCheckpoints +
 # convergence probes) is this family's dominant cost — running it twice
 # per bench/check session would double it. Bounded: one entry per
 # sf_dir per session; the fixpoint edges are already checkpointed, so
 # the cached DataFrame re-reads checkpoint blocks, not the iteration.
-_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _slice_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CC_CACHE:
+    def build() -> DataFrame:
         d = (table(spark, sf_dir, "documents")
              .filter(F.col("source") == PAIR_SLICE_SOURCE))
         # opportunistic reuse: when the MinHash family's corpus-wide
@@ -217,8 +213,7 @@ def _slice_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # of re-tokenizing the slice from raw text; a cold session
         # keeps the cheaper slice-only shingling — identical sets
         # either way
-        from .dedup import _SHINGLE_CACHE
-        sh_all = _SHINGLE_CACHE.get(key)
+        sh_all = session_artifact(spark, ("dedup.shingles", sf_dir))
         shingled = (sh_all.join(d.select("doc_id"), "doc_id")
                     if sh_all is not None else None)
         # probe_from=3: measured fixpoints are 3 rounds at sf0.1 (the
@@ -229,10 +224,9 @@ def _slice_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probe job on a few-hundred-edge set — far cheaper than the
         # probe job it replaces. Correctness is schedule-independent
         # (identity rounds at the fixpoint).
-        _CC_CACHE[key] = dedup_components(d, SLICE_JACCARD_THRESHOLD,
-                                          shingled=shingled,
-                                          probe_from=3)
-    return _CC_CACHE[key]
+        return dedup_components(d, SLICE_JACCARD_THRESHOLD,
+                                shingled=shingled, probe_from=3)
+    return session_artifact(spark, ("components.slice", sf_dir), build)
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:

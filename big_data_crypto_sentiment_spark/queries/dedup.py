@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 
 SHINGLE_WORDS = 3
 NUM_HASHES = 32
@@ -435,20 +435,15 @@ def minhash_near_dups(docs: DataFrame, threshold: float,
 # the tokenize+shingle scan is the expensive leaf of the whole MinHash
 # family, and TWO registered entries (batch near-dups + the
 # incremental index-maintenance form) plus any curate re-entry consume
-# it in one session — cache the shingled corpus per (appId, sf_dir),
-# the materialized-shingle-table shape a 100-TB pipeline would persist
-# to storage once. Evicted by queries.clear_session_caches().
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
+# it in one session — a session artifact per (appId, sf_dir), the
+# materialized-shingle-table shape a 100-TB pipeline would persist to
+# storage once.
 def _shingled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        _SHINGLE_CACHE[key] = (
-            shingled_docs(table(spark, sf_dir, "documents"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    return _SHINGLE_CACHE[key]
+    return session_artifact(
+        spark, ("dedup.shingles", sf_dir),
+        lambda: shingled_docs(table(spark, sf_dir, "documents"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,22 +520,17 @@ def incremental_minhash_verdicts(base_sh: DataFrame,
 # the base-side band index is the STORED artifact of the real
 # lifecycle (jobs/dedup_index.py builds it once and batches join
 # against it); recomputing it per run would charge every batch the
-# full-base signature cost. Cached per (appId, sf_dir) like the
-# shingle table it derives from; evicted by clear_session_caches().
-_BASE_BANDS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# full-base signature cost. A session artifact per (appId, sf_dir)
+# like the shingle table it derives from.
 def _base_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-    from .sampling import _hash_bucket
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BASE_BANDS_CACHE:
+    def build() -> DataFrame:
+        from pyspark import StorageLevel
+        from .sampling import _hash_bucket
         sh = _shingled_documents(spark, sf_dir)
         sh_b = sh.filter(_hash_bucket(F.col("doc_id"), 100)
                          < INCR_BASE_PCT)
-        _BASE_BANDS_CACHE[key] = band_table(sh_b).persist(
-            StorageLevel.MEMORY_AND_DISK)
-    return _BASE_BANDS_CACHE[key]
+        return band_table(sh_b).persist(StorageLevel.MEMORY_AND_DISK)
+    return session_artifact(spark, ("dedup.base_bands", sf_dir), build)
 
 
 def q_dedup_minhash_incremental(spark: SparkSession,
@@ -683,16 +673,13 @@ def q_dedup_fuzzy_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_GRAM = 8
 
 
-# Persisted gram explodes, keyed by (appId, input plan, params) — the
-# retrieval._WTS_CACHE pattern: BOTH consumers below (the dup-set agg
-# and the hits join) read the same exploded grams, and the tokenize +
-# gram-construction pipeline is the operator's dominant per-row cost,
-# so recomputing it per consumer (or per repeat invocation: bench +
-# curate in one session) would double the scan work. Bounded: one
-# entry per distinct input plan per session.
-_GRAMS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# Persisted gram explodes, a session artifact keyed by (input plan,
+# params): BOTH consumers below (the dup-set agg and the hits join)
+# read the same exploded grams, and the tokenize + gram-construction
+# pipeline is the operator's dominant per-row cost, so recomputing it
+# per consumer (or per repeat invocation: bench + curate in one
+# session) would double the scan work. Bounded: one entry per distinct
+# input plan per session.
 def _span_grams(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text", n: int = SPAN_GRAM) -> DataFrame:
     """The persisted (id, pos, gram) explode duplicate_span_stats'
@@ -702,14 +689,12 @@ def _span_grams(docs: DataFrame, id_col: str = "doc_id",
     the one-time corpus-wide build otherwise lands inside whichever
     entry runs first (the r8 shingle-table misattribution all over
     again)."""
-    key = (docs.sparkSession.sparkContext.applicationId,
-           docs.semanticHash(), id_col, text_col, n)
-    if key not in _GRAMS_CACHE:
+    def build() -> DataFrame:
         w = F.split(F.col(text_col), " ")
         base = (docs.filter(F.col(text_col).isNotNull())
                     .filter(F.size(w) >= n)
                     .select(F.col(id_col), w.alias("_w")))
-        _GRAMS_CACHE[key] = (
+        return (
             base.select(id_col,
                         F.transform(
                             F.sequence(F.lit(1),
@@ -720,7 +705,10 @@ def _span_grams(docs: DataFrame, id_col: str = "doc_id",
                 .select(id_col, F.posexplode_outer("grams")
                                  .alias("pos", "gram"))
                 .persist())
-    return _GRAMS_CACHE[key]
+    return session_artifact(
+        docs.sparkSession,
+        ("dedup.span_grams", docs.semanticHash(), id_col, text_col, n),
+        build)
 
 
 def duplicate_span_stats(docs: DataFrame, id_col: str = "doc_id",
@@ -738,7 +726,7 @@ def duplicate_span_stats(docs: DataFrame, id_col: str = "doc_id",
     don't depend on other docs, so semi-joining the exploded grams
     equals exploding the pre-filtered docs — identical rows — and the
     dup set is still derived strictly from the surviving subset. This
-    lets the curate funnel reuse the corpus-wide _GRAMS_CACHE entry
+    lets the curate funnel reuse the corpus-wide span-gram artifact
     q_dedup_span_stats builds instead of re-running the tokenize +
     gram-construction pass on the survivor subset."""
     from pyspark.sql import Window

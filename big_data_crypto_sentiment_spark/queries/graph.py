@@ -52,24 +52,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 
 PR_SCALE = 1_000_000_000_000  # BIGINT nano-units: 1.0 == 1e12
 PR_ITERS = 6
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as exact integers
-
-# session cache for persisted shared intermediates, keyed by
-# (kind, applicationId, sf_dir) — bounded per fixture; evicted by
-# queries.clear_session_caches() on fixture swap (repo convention)
-_GRAPH_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _cached(kind: str, spark: SparkSession, sf_dir: str,
-            build) -> DataFrame:
-    key = (kind, spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRAPH_CACHE:
-        _GRAPH_CACHE[key] = build().persist()
-    return _GRAPH_CACHE[key]
 
 
 def _edges(ev: DataFrame) -> DataFrame:
@@ -99,8 +86,8 @@ def _event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
               .filter(F.col("user_id").isNotNull()
                       & F.col("ts").isNotNull())
               .select("event_id", "user_id", "event_type", "ts"))
-        return _edges(ev)
-    return _cached("edges", spark, sf_dir, build)
+        return _edges(ev).persist()
+    return session_artifact(spark, ("graph.edges", sf_dir), build)
 
 
 def _pr_nodes(edges: DataFrame) -> DataFrame:
@@ -131,9 +118,10 @@ def _pr_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.sum("w"), F.lit(1)).alias("outw"))
         return (a.join(outw, "src")
                  .repartition("src")
-                 .sortWithinPartitions("src"))
+                 .sortWithinPartitions("src")
+                 .persist())
 
-    return _cached("pr_aug", spark, sf_dir, _build_aug)
+    return session_artifact(spark, ("graph.pr_aug", sf_dir), _build_aug)
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,15 +177,17 @@ def _und_deg(spark: SparkSession, sf_dir: str) \
     graph_triangles (which reads deg twice: orientation build and the
     final join) and graph_degree_profile (r16, guide §1.2)."""
     edges = _event_graph(spark, sf_dir)
-    und = _cached("und", spark, sf_dir,
-                  lambda: edges.select(F.least("src", "dst").alias("a"),
-                                       F.greatest("src", "dst").alias("b"))
-                              .distinct())
-    deg = _cached(
-        "deg", spark, sf_dir,
+    und = session_artifact(
+        spark, ("graph.und", sf_dir),
+        lambda: edges.select(F.least("src", "dst").alias("a"),
+                             F.greatest("src", "dst").alias("b"))
+                    .distinct().persist())
+    deg = session_artifact(
+        spark, ("graph.deg", sf_dir),
         lambda: und.select(F.col("a").alias("node"))
                    .unionByName(und.select(F.col("b").alias("node")))
-                   .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
+                   .groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
+                   .persist())
     return und, deg
 
 
@@ -220,9 +210,11 @@ def _tri_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.when(smaller_first, F.col("a"))
                         .otherwise(F.col("b")).alias("u"),
                        F.when(smaller_first, F.col("b"))
-                        .otherwise(F.col("a")).alias("v")))
+                        .otherwise(F.col("a")).alias("v"))
+                   .persist())
 
-    return _cached("tri_oriented", spark, sf_dir, _build_oriented)
+    return session_artifact(spark, ("graph.tri_oriented", sf_dir),
+                            _build_oriented)
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:

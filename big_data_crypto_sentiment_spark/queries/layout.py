@@ -20,6 +20,7 @@
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -29,17 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.zorder import ZORDER_BITS, quantize, sql_zorder_key, zorder_key
-from ._util import sql_dsum, table
+from ._util import SessionDir, session_artifact, sql_dsum, table
 
 
 # --- date-partitioned warehouse: build-once artifact per fixture ---
 
 PRUNE_DAY = "2024-01-15"
-
-# path cache only (no persisted DataFrames): (appId, sf fingerprint)
-# → on-disk warehouse dir; the dict just skips the stat/listdir
-# re-check within one session.
-_WH_CACHE: dict[tuple, str] = {}
 
 
 def events_warehouse(spark: SparkSession, sf_dir: str) -> str:
@@ -56,7 +52,12 @@ def events_warehouse(spark: SparkSession, sf_dir: str) -> str:
     only on the fixture's name/size/mtime) was precomputation keyed on
     the test data — outside the bench rules. The fixture fingerprint
     stays in the key so a regenerated fixture can never alias a stale
-    dir even within a session."""
+    dir even within a session.
+
+    The dir is a session artifact: clear_session_caches() removes it
+    from disk, and so does interpreter exit. Only this session's dir is
+    ever removed — another session (a concurrent bench or test run)
+    may still be reading its own."""
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     # full-resolution mtime: with int(st_mtime) a fixture regenerated
@@ -69,19 +70,25 @@ def events_warehouse(spark: SparkSession, sf_dir: str) -> str:
         "SPARK_GRAFT_WAREHOUSE_DIR",
         os.path.join(tempfile.gettempdir(), "spark_graft_warehouse"))
     dest = os.path.join(root, "events_{}_{}_{}_{}".format(*key))
-    if _WH_CACHE.get(key) == dest and os.path.isdir(dest):
-        return dest
+
+    def build() -> SessionDir:
+        if not os.path.isdir(dest):
+            from ..sinks import write_warehouse
+            os.makedirs(root, exist_ok=True)
+            tmp = os.path.join(root, f"_tmp_{uuid.uuid4().hex[:8]}")
+            write_warehouse(table(spark, sf_dir, "events"), tmp,
+                            date_col="ts", rebalance=True)
+            try:
+                os.rename(tmp, dest)
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+        atexit.register(shutil.rmtree, dest, ignore_errors=True)
+        return SessionDir(dest)
+    # dest carries the whole key (and the root), so it is the key; a
+    # dir removed behind the store's back is rebuilt in place
+    session_artifact(spark, ("layout.events_warehouse", dest), build)
     if not os.path.isdir(dest):
-        from ..sinks import write_warehouse
-        os.makedirs(root, exist_ok=True)
-        tmp = os.path.join(root, f"_tmp_{uuid.uuid4().hex[:8]}")
-        write_warehouse(table(spark, sf_dir, "events"), tmp,
-                        date_col="ts", rebalance=True)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    _WH_CACHE[key] = dest
+        build()
     return dest
 
 

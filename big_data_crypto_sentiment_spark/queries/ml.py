@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._util import table
+from ._util import session_artifact, table
 from .timeseries import q_ts_resample_ffill
 
 HOLDOUT = 12          # grid points held out for evaluation
@@ -174,17 +174,13 @@ def _ar1_train(pdf: pd.DataFrame) -> pd.DataFrame:
 # per (session, sf_dir) and persist — in a bench/driver run ml_ar1_train
 # and ml_ar_train would otherwise each re-run the full spine+ffill plan.
 # The grid is buckets×symbols (tiny relative to raw events), so the
-# cache is bounded; at 100 TB you'd materialize it as a table once.
-_GRID_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# artifact is bounded; at 100 TB you'd materialize it as a table once.
 def _shared_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRID_CACHE:
-        from pyspark import StorageLevel
-        _GRID_CACHE[key] = (q_ts_resample_ffill(spark, sf_dir)
-                            .persist(StorageLevel.MEMORY_AND_DISK))
-    return _GRID_CACHE[key]
+    from pyspark import StorageLevel
+    return session_artifact(
+        spark, ("ml.grid", sf_dir),
+        lambda: q_ts_resample_ffill(spark, sf_dir)
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def q_ml_ar1_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1094,21 +1090,17 @@ def q_ml_sentiment_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The lexicon-labeled corpus (a regex-heavy scan joined back to the
 # documents) feeds BOTH M6 entries below; persist it once per
-# (session, sf_dir) — the retrieval._WTS_CACHE pattern, bounded by the
-# SFs touched in one process.
-_LABELED_CACHE: dict[tuple, DataFrame] = {}
-
-
+# (session, sf_dir) as a session artifact, bounded by the SFs touched
+# in one process.
 def _labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LABELED_CACHE:
+    def build() -> DataFrame:
         from pyspark import StorageLevel
         docs = table(spark, sf_dir, "documents").select("doc_id", "text")
         labels = (q_ml_lexicon_sentiment(spark, sf_dir)
                   .select("doc_id", F.col("polarity").alias("label")))
-        _LABELED_CACHE[key] = (docs.join(labels, "doc_id")
-                               .persist(StorageLevel.MEMORY_AND_DISK))
-    return _LABELED_CACHE[key]
+        return (docs.join(labels, "doc_id")
+                .persist(StorageLevel.MEMORY_AND_DISK))
+    return session_artifact(spark, ("ml.labeled", sf_dir), build)
 
 
 # --- M6: TF-IDF + Ridge top terms — GRADUATED r16 (VERDICT r15 #2,
@@ -1146,16 +1138,11 @@ TFIDF_TT_ANCHOR_MARGIN = 2.0   # anchor-vs-rest |coef| ratio floor (3.5 measured
 # per entry — differing only in the label column (y6 =
 # round(polarity·1e6) vs y = n_pos − n_neg; the xx sums are shared
 # verbatim). One scan now computes all three sum families; the
-# collected 1-row result is a bounded driver artifact keyed by the
-# established (appId, sf_dir) session-cache convention (auto-
-# discovered by queries.session_caches()). Exact BIGINT sums, so
-# every derived value is unchanged on both engines.
-_TFIDF_SUMS_CACHE: dict[tuple, dict] = {}
-
-
+# collected 1-row result is a bounded driver artifact, one per
+# (session, sf_dir). Exact BIGINT sums, so every derived value is
+# unchanged on both engines.
 def _tfidf_frozen_sums(spark: SparkSession, sf_dir: str) -> dict[str, int]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TFIDF_SUMS_CACHE:
+    def build() -> dict[str, int]:
         d = (table(spark, sf_dir, "documents")
              .filter(F.col("text").isNotNull()).select("text"))
         n_pos, n_neg, pol = lexicon_polarity()
@@ -1171,9 +1158,8 @@ def _tfidf_frozen_sums(spark: SparkSession, sf_dir: str) -> dict[str, int]:
             aggs.append(F.sum(tf * F.col("y6")).alias(f"xy6_{i}"))
             aggs.append(F.sum(tf * tf).alias(f"xx{i}"))
         srow = d.select(*cols).agg(*aggs).first()
-        _TFIDF_SUMS_CACHE[key] = {k: int(srow[k] or 0)
-                                  for k in srow.asDict()}
-    return _TFIDF_SUMS_CACHE[key]
+        return {k: int(srow[k] or 0) for k in srow.asDict()}
+    return session_artifact(spark, ("ml.tfidf_sums", sf_dir), build)
 
 
 def q_ml_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:

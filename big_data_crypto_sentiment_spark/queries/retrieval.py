@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import literal_map, table
+from ._util import literal_map, session_artifact, table
 
 TFIDF_VOCAB_K = 1000     # driver-artifact vocabulary cap (surfaced, not silent)
 TFIDF_TOP_K = 5
@@ -105,48 +105,23 @@ def _weights(docs: DataFrame, idf: dict[str, int], id_col: str,
         F.sum(F.col("w") * F.col("w")).over(Window.partitionBy(id_col)))
 
 
-# Persisted inverted-index DFs, keyed by (applicationId, entry, sf_dir)
-# — the ml._GRID_CACHE pattern. Repeat invocations in one session (bench
-# runs all queries; tests refit) REUSE the cached index instead of
-# stacking a fresh persisted RDD per call, which previously leaked for
-# the session lifetime. Bounded: one entry per registered query config.
-_WTS_CACHE: dict[tuple, DataFrame] = {}
-
-# The idf dict is itself three corpus actions (count + df agg collect);
-# rebuilding it when the postings/weights cache will hit anyway (rrf
-# re-entry, repeat bench/check invocations) wastes full scans. Keyed
-# like _WTS_CACHE; bounded by registered configs.
-_IDF_CACHE: dict[tuple, dict[str, int]] = {}
-
-
-def _cached_idf(docs: DataFrame, entry: str, sf_dir: str,
-                max_df_frac: float) -> dict[str, int]:
-    # max_df_frac IS part of the key: a same-entry call with a
-    # different frac must rebuild, not silently reuse a stale vocab
-    key = (docs.sparkSession.sparkContext.applicationId, entry, sf_dir,
-           max_df_frac)
-    if key not in _IDF_CACHE:
-        _IDF_CACHE[key] = tfidf_idf_table(docs,
-                                          max_df_frac=max_df_frac)[0]
-    return _IDF_CACHE[key]
-
-
+# Persisted inverted-index DFs are session artifacts of kind
+# "retrieval.weights", keyed (entry, sf_dir). Repeat invocations in one
+# session (bench runs all queries; tests refit) REUSE the cached index
+# instead of stacking a fresh persisted RDD per call, which previously
+# leaked for the session lifetime. Bounded: one entry per registered
+# query config.
 def _cached_weights(docs: DataFrame, idf: dict[str, int], id_col: str,
                     text_col: str, cache_key: tuple | None) -> DataFrame:
-    """Get-or-build the persisted weights table under the session
-    cache. One helper so the query path and the bench artifact warmer
-    construct the SAME full key — key drift here would silently double
-    the persisted index."""
-    full_key = None
-    if cache_key is not None:
-        full_key = ((docs.sparkSession.sparkContext.applicationId,)
-                    + tuple(cache_key))
-    if full_key is not None and full_key in _WTS_CACHE:
-        return _WTS_CACHE[full_key]
-    wts = _weights(docs, idf, id_col, text_col).persist()
-    if full_key is not None:
-        _WTS_CACHE[full_key] = wts
-    return wts
+    """Get-or-build the persisted weights table. One helper so the
+    query path and the bench artifact warmer construct the SAME key —
+    key drift here would silently double the persisted index."""
+    def build() -> DataFrame:
+        return _weights(docs, idf, id_col, text_col).persist()
+    if cache_key is None:
+        return build()
+    return session_artifact(docs.sparkSession,
+                            ("retrieval.weights", *cache_key), build)
 
 
 def tfidf_topk(docs: DataFrame, idf: dict[str, int],
@@ -235,7 +210,7 @@ def q_sim_tfidf_zipf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sampling import _hash_bucket
     d = _zipf_corpus(spark, sf_dir)
     idf = _zipf_idf(spark, sf_dir)
-    _zipf_weights(spark, sf_dir)   # seeds the _WTS_CACHE key below
+    _zipf_weights(spark, sf_dir)   # seeds the weights artifact below
     return tfidf_topk(
         d, idf, lambda c: _hash_bucket(c, 100) < TFIDF_QUERY_PCT,
         cache_key=("sim_tfidf_zipf_topk", sf_dir))
@@ -283,19 +258,14 @@ def bm25_postings(docs: DataFrame, idf: dict[str, int], avgdl: float,
 # The planted corpus itself: ~35 md5-bucket draws + string build per
 # doc, re-executed by EVERY corpus action (idf's count + df agg, the
 # weights pass, avgdl, the postings pass — five regenerations per index
-# build before this cache). Persisted once per (session, sf_dir); the
-# naming convention registers it with queries.session_caches().
-_ZIPF_CACHE: dict[tuple, DataFrame] = {}
-
-
+# build unless persisted). Persisted once per (session, sf_dir).
 def _zipf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import rebalance_scan
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ZIPF_CACHE:
-        _ZIPF_CACHE[key] = zipf_planted_docs(
+    return session_artifact(
+        spark, ("retrieval.zipf_corpus", sf_dir),
+        lambda: zipf_planted_docs(
             rebalance_scan(table(spark, sf_dir, "documents"))
-            .select("doc_id")).persist()
-    return _ZIPF_CACHE[key]
+            .select("doc_id")).persist())
 
 
 # r16 (guide §1.2: remove redundant passes): the zipf index build paid
@@ -304,68 +274,67 @@ def _zipf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # postings' tf agg. All four derive from ONE (doc_id, dl, term, tf)
 # table: df(term) = row count per term (each (doc, term) appears once),
 # Σdl over docs = Σtf, and both weight tables are projections of it.
-# Persisted per (appId, sf_dir); every derived value is bit-identical
-# (exact integer counts feeding the same expressions).
-_ZTF_CACHE: dict[tuple, DataFrame] = {}
-
-
+# Persisted per (appId, entry, sf_dir); every derived value is
+# bit-identical (exact integer counts feeding the same expressions).
 def _tf_with_dl(docs: DataFrame, entry: str, sf_dir: str) -> DataFrame:
     """Get-or-build the persisted (doc_id, dl, term, tf) table for a
     corpus. Grouping by (doc_id, dl, term) equals grouping by
     (doc_id, term) — dl is functionally dependent on doc_id — so every
     consumer sees exactly the counts its own tokenize pass produced."""
-    key = (docs.sparkSession.sparkContext.applicationId, entry, sf_dir)
-    if key not in _ZTF_CACHE:
+    def build() -> DataFrame:
         words = F.split(F.col("text"), " ")
-        _ZTF_CACHE[key] = (
-            docs.select("doc_id", F.size(words).alias("dl"),
-                        F.explode(words).alias("term"))
-                .groupBy("doc_id", "dl", "term")
-                .agg(F.count("*").alias("tf"))
-                .persist())
-    return _ZTF_CACHE[key]
+        return (docs.select("doc_id", F.size(words).alias("dl"),
+                            F.explode(words).alias("term"))
+                    .groupBy("doc_id", "dl", "term")
+                    .agg(F.count("*").alias("tf"))
+                    .persist())
+    return session_artifact(docs.sparkSession,
+                            ("retrieval.tf_dl", entry, sf_dir), build)
 
 
 def _idf_from_tf(n_docs_fn, tf: DataFrame, entry: str, sf_dir: str,
                  max_df_frac: float) -> dict[str, int]:
     """idf dict off the shared tf table — df(term) is the per-term row
     count (each (doc, term) appears once), exactly what the standalone
-    tfidf_idf_table's array_distinct pass counted. Same cache key (and
-    identical values) as the _cached_idf path it replaces. n_docs_fn
-    is a thunk so a cache hit pays no count() job."""
-    key = (tf.sparkSession.sparkContext.applicationId, entry, sf_dir,
-           max_df_frac)
-    if key not in _IDF_CACHE:
+    tfidf_idf_table's array_distinct pass counted. The idf dict is
+    itself corpus actions (count + df agg collect), so it is a session
+    artifact: rebuilding it when the postings/weights will hit anyway
+    (rrf re-entry, repeat bench/check invocations) wastes full scans.
+    max_df_frac IS part of the key: a same-entry call with a different
+    frac must rebuild, not silently reuse a stale vocab. n_docs_fn is a
+    thunk so a hit pays no count() job."""
+    def build() -> dict[str, int]:
         n_docs = n_docs_fn()
         rows = (tf.groupBy("term").agg(F.count("*").alias("df"))
                   .filter(F.col("df") <= int(max_df_frac * n_docs))
                   .orderBy(F.desc("df"), "term")
                   .limit(TFIDF_VOCAB_K + 1)
                   .collect())
-        _IDF_CACHE[key] = {
-            r.term: round((math.log((n_docs + 1) / (r.df + 1)) + 1)
-                          * _IDF_SCALE)
-            for r in rows[:TFIDF_VOCAB_K]}
-    return _IDF_CACHE[key]
+        return {r.term: round((math.log((n_docs + 1) / (r.df + 1)) + 1)
+                              * _IDF_SCALE)
+                for r in rows[:TFIDF_VOCAB_K]}
+    return session_artifact(
+        tf.sparkSession, ("retrieval.idf", entry, sf_dir, max_df_frac),
+        build)
 
 
 def _weights_from_tf(tf: DataFrame, idf: dict[str, int], entry: str,
                      sf_dir: str) -> DataFrame:
     """The persisted tf-idf weights table derived from the shared tf
     table (was: its own tokenize+tf corpus pass). Seeds the SAME
-    _WTS_CACHE key tfidf_topk consults."""
-    key = (tf.sparkSession.sparkContext.applicationId, entry, sf_dir)
-    if key not in _WTS_CACHE:
+    weights artifact tfidf_topk consults."""
+    def build() -> DataFrame:
         idfmap = literal_map(idf)
         w = (tf.withColumn("_idf", F.element_at(idfmap, F.col("term")))
                .filter(F.col("_idf").isNotNull())
                .select("doc_id", "term",
                        (F.col("tf").cast("bigint") * F.col("_idf"))
                        .alias("w")))
-        _WTS_CACHE[key] = w.withColumn(
+        return w.withColumn(
             "norm2", F.sum(F.col("w") * F.col("w"))
                       .over(Window.partitionBy("doc_id"))).persist()
-    return _WTS_CACHE[key]
+    return session_artifact(tf.sparkSession,
+                            ("retrieval.weights", entry, sf_dir), build)
 
 
 def _zipf_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,16 +343,11 @@ def _zipf_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # r17 (guide §1.2): the zipf doc count is one bounded driver scalar
 # consumed by BOTH the idf build and the BM25 avgdl — it was counted
-# twice (two jobs over the corpus). Memoized per (appId, sf_dir) like
-# every other session cache; same integer either way.
-_NDOCS_CACHE: dict[tuple, int] = {}
-
-
+# twice (two jobs over the corpus). A session artifact per
+# (appId, sf_dir); same integer either way.
 def _zipf_ndocs(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NDOCS_CACHE:
-        _NDOCS_CACHE[key] = _zipf_corpus(spark, sf_dir).count()
-    return _NDOCS_CACHE[key]
+    return session_artifact(spark, ("retrieval.zipf_ndocs", sf_dir),
+                            lambda: _zipf_corpus(spark, sf_dir).count())
 
 
 def _zipf_idf(spark: SparkSession, sf_dir: str) -> dict[str, int]:
@@ -401,12 +365,9 @@ def _zipf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def zipf_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Get-or-build the persisted BM25 postings for the zipf corpus
     (the shared index `sim_bm25_topk` and `sim_rrf_hybrid` rank from)."""
-    key = (spark.sparkContext.applicationId, "sim_bm25_topk", sf_dir)
-    if key in _WTS_CACHE:
-        postings = _WTS_CACHE[key]
-    else:
+    def build() -> DataFrame:
         # idf + avgdl only feed the cached postings — computing them on
-        # a cache hit (e.g. the rrf_hybrid re-entry) would re-run
+        # a hit (e.g. the rrf_hybrid re-entry) would re-run
         # corpus actions whose results are discarded. Same idf as the
         # zipf tfidf entry: identical corpus + max_df → one build
         # serves both rankers. All inputs derive from the shared
@@ -427,16 +388,16 @@ def zipf_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         den = (F.col("tf") + F.lit(BM25_K1)
                * (F.lit(1.0 - BM25_B)
                   + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)))
-        postings = (tfdl
-                    .withColumn("_idf",
-                                F.element_at(idfmap, F.col("term")))
-                    .filter(F.col("_idf").isNotNull())
-                    .select("doc_id", "term",
-                            F.round(num / den).cast("bigint")
-                             .alias("s4"))
-                    .persist())
-        _WTS_CACHE[key] = postings
-    return postings
+        return (tfdl
+                  .withColumn("_idf",
+                              F.element_at(idfmap, F.col("term")))
+                  .filter(F.col("_idf").isNotNull())
+                  .select("doc_id", "term",
+                          F.round(num / den).cast("bigint")
+                           .alias("s4"))
+                  .persist())
+    return session_artifact(
+        spark, ("retrieval.weights", "sim_bm25_topk", sf_dir), build)
 
 
 def bm25_rank(postings: DataFrame, q: DataFrame) -> DataFrame:

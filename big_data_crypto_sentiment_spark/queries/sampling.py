@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._util import literal_map, table
+from ._util import literal_map, session_artifact, table
 
 SAMPLE_MOD = 1_000_000
 SAMPLE_RATE_PPM = 200_000      # 20% dev-subset sample
@@ -338,19 +338,14 @@ def dsir_select(docs: DataFrame, diff8: dict[int, int],
                         F.round("_score", 6).alias("score")))
 
 
-# The persisted feature-bucket projection shared by the model fit and
-# the scoring pass of the registered entry — keyed (appId, sf_dir),
-# evicted by queries.clear_session_caches() like every _*_CACHE.
-_DSIR_CACHE: dict[tuple, DataFrame] = {}
-
-
+# The persisted feature-bucket projection is shared by the model fit
+# and the scoring pass of the registered entry: one session artifact
+# per (appId, sf_dir).
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     is_t = _hash_bucket(F.col("doc_id"), 100) < DSIR_TGT_PCT
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DSIR_CACHE:
-        _DSIR_CACHE[key] = _dsir_base(d, is_t).persist()
-    base = _DSIR_CACHE[key]
+    base = session_artifact(spark, ("sampling.dsir_base", sf_dir),
+                            lambda: _dsir_base(d, is_t).persist())
     diff8 = dsir_model(d, is_t, base=base)
     return dsir_select(d, diff8, is_t, base=base)  # bounded: top-k
 

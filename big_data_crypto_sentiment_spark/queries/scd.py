@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 
 
 def scd2_intervals(df: DataFrame, key: str, state: str,
@@ -60,22 +60,17 @@ def scd2_intervals(df: DataFrame, key: str, state: str,
 # each paying the events scan + (user_id) window pass (r16, guide
 # §1.2). Persisting the compressed interval table is exactly the
 # materialized-dimension discipline SCD2 exists for: O(state changes),
-# a compression of the input. Keyed (appId, sf_dir); auto-discovered
-# by queries.session_caches().
-_SCD2_DIM_CACHE: dict[tuple, DataFrame] = {}
-
-
+# a compression of the input. A session artifact per (appId, sf_dir).
 def _full_history_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCD2_DIM_CACHE:
+    def build() -> DataFrame:
         ev = (table(spark, sf_dir, "events")
               .filter(F.col("user_id").isNotNull()
                       & F.col("ts").isNotNull()
                       & F.col("event_type").isNotNull())
               .select("user_id", "ts", "event_id", "event_type"))
-        _SCD2_DIM_CACHE[key] = scd2_intervals(
+        return scd2_intervals(
             ev, "user_id", "event_type", "ts", "event_id").persist()
-    return _SCD2_DIM_CACHE[key]
+    return session_artifact(spark, ("scd.full_history_dim", sf_dir), build)
 
 
 def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:

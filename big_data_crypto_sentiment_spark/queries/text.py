@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 
 # shared Java-regex/RE2-compatible patterns (keep simple: char classes,
 # alternation, \b) so Spark and DuckDB evaluate identically
@@ -477,21 +477,18 @@ _CTFIDF_SCALE = 100_000_000
 # and persist (output grain is |sources|·|vocab|, far below the
 # exploded token stream both passes used to re-shuffle). Exact integer
 # counts, so every derived value is unchanged.
-_TEXT_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _source_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ._util import rebalance_scan
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TEXT_CACHE:
+    def build() -> DataFrame:
+        from ._util import rebalance_scan
         d = rebalance_scan(table(spark, sf_dir, "documents")) \
             .select("source", "text")
-        _TEXT_CACHE[key] = (
+        return (
             d.select("source",
                      F.explode(F.split("text", " ")).alias("term"))
              .groupBy("source", "term").agg(F.count("*").alias("c"))
              .persist())
-    return _TEXT_CACHE[key]
+    return session_artifact(spark, ("text.source_term_counts", sf_dir),
+                            build)
 
 
 def q_ctfidf_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import table
+from ._util import session_artifact, table
 
 BUCKET = "1 hour"
 LAG_SWEEP = tuple(range(-24, 25))  # k ∈ [-24, 24], the reference's sweep
@@ -145,25 +145,25 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("last_value").isNull().cast("int").alias("is_interpolated"))
 
 
-# Session cache for the hourly bucket-metrics grid — FOUR registered
-# entries consume the IDENTICAL frame (ts_corr, ts_spearman,
+# The hourly bucket-metrics grid is a session artifact — FOUR
+# registered entries consume the IDENTICAL frame (ts_corr, ts_spearman,
 # ts_lag_sweep_corr, ml_ridge_perm_importance via _ridge_perm_base) and
 # each was re-running the full events scan + bucket hash agg + spine
 # join (r16, guide §1.2: remove redundant passes). The grid is bounded
 # (|event_types| × |hour buckets|), so persisting it is metadata-sized
-# at any corpus scale; keyed by (appId, input plan) per the
-# dedup._GRAMS_CACHE convention, auto-discovered by session_caches().
-_BUCKET_METRICS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# at any corpus scale; keyed by the input plan's semanticHash() like
+# dedup's span grams.
 def _bucket_metrics(ev: DataFrame) -> DataFrame:
     """Contiguous per-symbol grid of (n_events, avg_value) per bucket —
     the joined volume/price frame the EDA correlates (Milestone3 cell 44).
     Missing buckets get n_events=0 / avg NULL, matching a resampled
     pandas frame."""
-    key = (ev.sparkSession.sparkContext.applicationId, ev.semanticHash())
-    if key in _BUCKET_METRICS_CACHE:
-        return _BUCKET_METRICS_CACHE[key]
+    return session_artifact(
+        ev.sparkSession, ("timeseries.bucket_metrics", ev.semanticHash()),
+        lambda: _build_bucket_metrics(ev))
+
+
+def _build_bucket_metrics(ev: DataFrame) -> DataFrame:
     binned = (ev.groupBy(F.window("ts", BUCKET).alias("w"), "event_type")
                 .agg(F.count("*").alias("n_events"),
                      (F.sum(F.col("value").cast("decimal(27,6)")).cast("double")
@@ -176,13 +176,11 @@ def _bucket_metrics(ev: DataFrame) -> DataFrame:
                            F.explode(F.sequence("mn", "mx",
                                                 F.expr(f"INTERVAL {BUCKET}")))
                             .alias("bucket")))
-    out = (spine.join(binned, ["event_type", "bucket"], "left")
-                .select("event_type", "bucket",
-                        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-                        "avg_value")
-                .persist())
-    _BUCKET_METRICS_CACHE[key] = out
-    return out
+    return (spine.join(binned, ["event_type", "bucket"], "left")
+                 .select("event_type", "bucket",
+                         F.coalesce("n_events", F.lit(0)).alias("n_events"),
+                         "avg_value")
+                 .persist())
 
 
 # --- A11: Pearson correlation volume vs price per symbol ---

@@ -113,50 +113,6 @@ def online_forecast(prices: DataFrame, phi: float = DEFAULT_PHI,
                 timeoutConf=GroupStateTimeout.NoTimeout))
 
 
-def online_forecast_tws(prices: DataFrame, phi: float = DEFAULT_PHI,
-                        phi_map=None) -> DataFrame:
-    """The same online AR(1) forecast on Spark 4's transformWithState
-    API — the successor to applyInPandasWithState: state lives in
-    named, typed handles (ValueState here) inside the RocksDB state
-    store (the API REQUIRES RocksDBStateStoreProvider), which is the
-    at-scale configuration anyway (state no longer bounded by executor
-    heap; incremental checkpointing). Emission semantics are identical
-    to online_forecast — the parity test pins both against the same
-    sequential reference. (The parity test skips where google.protobuf
-    — a pyspark dependency this container omits — is unavailable:
-    transformWithState's Python driver worker speaks a protobuf state
-    protocol. The operator code itself is plain pyspark API.)"""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Forecast(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("ar1", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (symbol,) = key
-            lookup = getattr(phi_map, "value", phi_map)
-            sym_phi = (lookup or {}).get(symbol, phi)
-            st = self._st.get() if self._st.exists() else None
-            new, out = _forecast_group(
-                symbol, rows, st if st is not None else (0, 0.0, 0.0),
-                sym_phi)
-            self._st.update(new)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return (prices.groupBy("symbol")
-            .transformWithStateInPandas(
-                statefulProcessor=_Forecast(),
-                outputStructType=FORECAST_SCHEMA,
-                outputMode="Append",
-                timeMode="None"))
-
-
 def reference_forecast_series(prices: pd.DataFrame,
                               phi: float = DEFAULT_PHI) -> pd.DataFrame:
     """Pandas twin for tests: the exact sequential semantics."""

@@ -12,9 +12,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_crypto_sentiment_spark.queries import clear_session_caches
 from big_data_crypto_sentiment_spark.queries.layout import (
     PRUNE_DAY,
-    _WH_CACHE,
     events_warehouse,
     q_warehouse_prune_day,
 )
@@ -24,10 +24,10 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture()
 def wh_dir(spark, tmp_path, monkeypatch):
+    # the dir path (root included) is the artifact's key, so a fresh
+    # tmp_path root is always a fresh build
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", str(tmp_path))
-    _WH_CACHE.clear()
     yield events_warehouse(spark, SF)
-    _WH_CACHE.clear()
 
 
 def test_scan_has_partition_filters_and_prunes_file_list(spark, wh_dir):
@@ -91,5 +91,7 @@ def test_build_is_cached_and_crash_tmp_is_invisible(spark, wh_dir,
     # a crashed build's tmp dir is never mistaken for the warehouse
     crash = os.path.join(os.path.dirname(wh_dir), "_tmp_deadbeef")
     os.makedirs(crash)
-    _WH_CACHE.clear()
+    clear_session_caches()              # evicts (and removes) wh_dir
+    assert not os.path.exists(wh_dir)
     assert events_warehouse(spark, SF) == wh_dir
+    assert os.path.isdir(wh_dir) and os.path.isdir(crash)

@@ -16,6 +16,7 @@ import struct
 import zlib
 
 import pytest
+from conftest import conf_gates
 
 from big_data_crypto_sentiment_spark.jobs._genstore import (
     RUN_ID_FILE,
@@ -175,10 +176,15 @@ def test_two_level_semdedup_matches_exhaustive_on_separated_clusters(
     the k ∝ N rule) must agree with the exhaustive path wherever
     routing picks the same centroid. On well-separated clusters it
     picks the same centroid EVERYWHERE, so the full SemDeDup outputs
-    are identical row for row."""
+    are identical row for row. Edge inputs pinned alongside: a
+    zero-norm vector gets cos_c NULL from both assignment front-ends
+    (not NaN), and the numpy path rejects a non-integer cid and a
+    ragged centroid table with a clear ValueError instead of diverging
+    from the expression path."""
     import numpy as np
 
     from big_data_crypto_sentiment_spark.queries.similarity import (
+        _assign_np,
         _freeze_vectors,
         _semdedup_pairs,
         freeze_kmeans_centroids,
@@ -199,8 +205,8 @@ def test_two_level_semdedup_matches_exhaustive_on_separated_clusters(
                                  "vec_id long, embedding array<float>")
     cents_list = [(c, [float(x) for x in centers[c]]) for c in range(k)]
     frozen = _freeze_vectors(vecs)
-    exhaustive = semdedup(frozen,
-                          freeze_kmeans_centroids(spark, cents_list))
+    cents = freeze_kmeans_centroids(spark, cents_list)
+    exhaustive = semdedup(frozen, cents)
     routed_assigned = semdedup_assign_routed(spark, frozen, cents_list,
                                              kc=4)
     routed = _semdedup_pairs(frozen, routed_assigned, 0.35)
@@ -211,6 +217,21 @@ def test_two_level_semdedup_matches_exhaustive_on_separated_clusters(
     assert a == b and len(a) == k * n_per
     # the dedup did real work (planted tight clusters -> drops)
     assert sum(1 for _, _, kept in a.values() if not kept) > 0
+    # zero-norm vector: 0/0 is NULL on both front-ends (the expression
+    # path's non-ANSI division; ANSI mode raises there instead)
+    zero = _freeze_vectors(spark.createDataFrame(
+        [(vid, [0.0] * d)], "vec_id long, embedding array<float>"))
+    with conf_gates(spark, {"spark.sql.ansi.enabled": "false"}):
+        got = [(r.vn2, r.cos_c) for r in (
+            _assign_np(zero, cents).collect()
+            + semdedup_assign_routed(spark, zero, cents_list,
+                                     kc=4).collect())]
+    assert got == [(0, None), (0, None)]
+    with pytest.raises(ValueError, match="must be integers"):
+        semdedup(frozen, cents.withColumn("cid",
+                                          cents["cid"].cast("string")))
+    with pytest.raises(ValueError, match="ragged centroid table"):
+        semdedup(frozen, cents.filter("NOT (cid = 3 AND dim = 5)"))
 
 
 def test_semdedup_kmeans_auto_threshold_wiring(spark):

@@ -124,23 +124,20 @@ def test_tfidf_ridge_cv_contract_on_predictive_corpus(spark, tmp_path):
         CV_FOLDS_REG,
         q_ml_tfidf_ridge_cv,
     )
-    from big_data_crypto_sentiment_spark.queries.ml import _LABELED_CACHE
+    # the labeled-docs artifact is keyed on sf_dir, so the planted
+    # tmp dir can never hit a fixture's entry
     d = _planted_documents(spark, tmp_path, n=120)
-    _LABELED_CACHE.clear()          # isolate the planted sf_dir
-    try:
-        rows = {r.fold: r for r in q_ml_tfidf_ridge_cv(spark, d).collect()}
-        assert len(rows) == CV_FOLDS_REG
-        n = 120
-        for f in range(1, CV_FOLDS_REG + 1):
-            r = rows[f]
-            assert r.n_train == n * f // (CV_FOLDS_REG + 1)
-            assert (r.n_test
-                    == n * (f + 1) // (CV_FOLDS_REG + 1) - r.n_train)
-            assert r.mae_const > 0 and r.mae_frozen > 0
-            assert r.live_mae_le_const == 1
-            assert r.live_mae_le_frozen == 1
-    finally:
-        _LABELED_CACHE.clear()
+    rows = {r.fold: r for r in q_ml_tfidf_ridge_cv(spark, d).collect()}
+    assert len(rows) == CV_FOLDS_REG
+    n = 120
+    for f in range(1, CV_FOLDS_REG + 1):
+        r = rows[f]
+        assert r.n_train == n * f // (CV_FOLDS_REG + 1)
+        assert (r.n_test
+                == n * (f + 1) // (CV_FOLDS_REG + 1) - r.n_train)
+        assert r.mae_const > 0 and r.mae_frozen > 0
+        assert r.live_mae_le_const == 1
+        assert r.live_mae_le_frozen == 1
 
 
 def test_flags_survive_fixture_run_end_to_end(spark):

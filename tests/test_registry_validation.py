@@ -91,41 +91,101 @@ def test_validate_dir_distributed(spark, tmp_path):
     assert not out["bad.bin"].valid
 
 
-def test_clear_session_caches_evicts_and_unpersists(spark):
-    """clear_session_caches drops every module cache entry and
-    unpersists cached DataFrames — the fixture-swap eviction hook for
-    single-process multi-SF harness loops."""
+def test_clear_session_caches_evicts_and_unpersists(spark, tmp_path,
+                                                    monkeypatch):
+    """clear_session_caches empties the one session-artifact store —
+    the fixture-swap eviction hook for single-process multi-SF harness
+    loops — across all four artifact types: it unpersists a persisted
+    DataFrame and a plan-keyed frame (the span grams), drops a driver
+    tuple (the unigram model: the next call rebuilds it), and removes
+    this session's warehouse dir from disk, leaving any other
+    session's dir alone. The dir is also removed at interpreter exit."""
+    import os
+
     from pyspark import StorageLevel
 
     from big_data_crypto_sentiment_spark.queries import (
+        _util,
         clear_session_caches,
+        layout,
     )
     from big_data_crypto_sentiment_spark.queries import ml as _ml
-    df = _ml._labeled_docs(spark, "/root/testdata/sf0.001")
-    assert df.storageLevel != StorageLevel.NONE
-    assert clear_session_caches() >= 1
-    assert df.storageLevel == StorageLevel.NONE
-    assert _ml._LABELED_CACHE == {}
+    from big_data_crypto_sentiment_spark.queries._util import table
+    from big_data_crypto_sentiment_spark.queries.cleaning import (
+        unigram_model,
+    )
+    from big_data_crypto_sentiment_spark.queries.dedup import _span_grams
+    sf = "/root/testdata/sf0.001"
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", str(tmp_path))
+    at_exit = []
+    monkeypatch.setattr(layout.atexit, "register",
+                        lambda fn, *a, **kw: at_exit.append((fn, a, kw)))
+    other = tmp_path / "events_other-session_sf0.001_1_1"
+    other.mkdir()
+
+    labeled = _ml._labeled_docs(spark, sf)
+    docs = table(spark, sf, "documents").select("doc_id", "text")
+    grams = _span_grams(docs)
+    model = unigram_model(docs, cache_key=("unigram_docs", sf))
+    assert unigram_model(docs, cache_key=("unigram_docs", sf)) is model
+    wh = layout.events_warehouse(spark, sf)
+    assert os.path.isdir(wh) and len(at_exit) == 1
+    assert labeled.storageLevel != StorageLevel.NONE
+    assert grams.storageLevel != StorageLevel.NONE
+
+    assert clear_session_caches() >= 4
+    assert _util._ARTIFACTS == {}
+    assert labeled.storageLevel == StorageLevel.NONE
+    assert grams.storageLevel == StorageLevel.NONE
+    assert not os.path.exists(wh) and other.is_dir()
+    assert unigram_model(docs, cache_key=("unigram_docs", sf)) is not model
+
+    # interpreter exit: the registered hook removes a live dir too
+    wh = layout.events_warehouse(spark, sf)
+    assert os.path.isdir(wh) and len(at_exit) == 2
+    fn, a, kw = at_exit[-1]
+    fn(*a, **kw)
+    assert not os.path.exists(wh) and other.is_dir()
+    clear_session_caches()
 
 
-def test_every_module_session_cache_is_discoverable():
-    """Session-cache eviction is convention-driven (`_*_CACHE` dict
-    attributes on queries.* modules). This pins (a) the discovery
-    finds every cache the codebase currently defines, and (b) no
-    module grows a persisted-DataFrame cache under a name the
-    convention misses (any module-level dict whose name mentions
-    CACHE must match the discovery pattern)."""
+def test_no_query_module_holds_a_cache_dict():
+    """Session artifacts live in ONE store, `_util._ARTIFACTS`, which
+    clear_session_caches() empties — so nothing can escape eviction.
+    No queries/ module may bind another module-level cache: an empty
+    dict/set/list (a cache starts empty; constant tables do not), a
+    name mentioning CACHE, or an lru_cache/cache-decorated function.
+    Checked on the source, so the result cannot depend on which
+    queries earlier tests ran."""
+    import ast
+    import pathlib
+
     from big_data_crypto_sentiment_spark import queries as Q
-    discovered = {id(c) for c in Q.session_caches()}
-    assert len(discovered) >= 9        # the nine known caches
-    stragglers = []
-    for m in Q._MODULES:
-        for name in dir(m):
-            if "CACHE" in name.upper() and isinstance(
-                    getattr(m, name), dict):
-                if not (name.startswith("_")
-                        and name.endswith("_CACHE")):
-                    stragglers.append(f"{m.__name__}.{name}")
-                else:
-                    assert id(getattr(m, name)) in discovered
-    assert not stragglers, stragglers
+    empty_ctors = {"dict", "set", "list", "defaultdict", "OrderedDict"}
+    offenders = []
+    for path in sorted(pathlib.Path(Q.__file__).parent.glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for dec in node.decorator_list:
+                    f = dec.func if isinstance(dec, ast.Call) else dec
+                    name = getattr(f, "id", getattr(f, "attr", ""))
+                    if name in ("lru_cache", "cache"):
+                        offenders.append(f"{path.name}:{node.name}")
+                continue
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            names = [t.id for t in targets if isinstance(t, ast.Name)]
+            empty = (isinstance(value, (ast.Dict, ast.Set, ast.List))
+                     and not getattr(value, "keys", getattr(
+                         value, "elts", None))) or (
+                isinstance(value, ast.Call) and not value.args
+                and getattr(value.func, "id", "") in empty_ctors)
+            for n in names:
+                if (empty or "CACHE" in n.upper()) and not (
+                        path.name == "_util.py" and n == "_ARTIFACTS"):
+                    offenders.append(f"{path.name}:{n}")
+    assert not offenders, offenders

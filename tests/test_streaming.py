@@ -577,69 +577,3 @@ def test_stateful_forecast_under_rocksdb_state_store(
     pd.testing.assert_series_equal(got["next_price_forecast"],
                                    want["next_price_forecast"],
                                    rtol=1e-12)
-
-
-def test_transform_with_state_forecast_parity(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin of the online forecast:
-    typed ValueState in RocksDB (the API requires that provider)
-    produces the same sequence as the sequential reference — so the
-    repo's stateful operator ports cleanly to the successor API.
-
-    Gated on protobuf: transformWithState's Python worker speaks to the
-    JVM state server through generated protobuf stubs
-    (pyspark.sql.streaming.proto.StateMessage_pb2, imported by every
-    *_state_client module), so the twin can only execute where
-    google.protobuf is installed. This container ships no protobuf and
-    no installer, so instead of skipping forever the test PROVES the
-    gate when the dependency is absent: pyspark's own TWS client
-    modules — not this repo's operator — fail to import, and they fail
-    precisely on google.protobuf. If the environment ever gains
-    protobuf, the full parity branch below runs automatically."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        # (the client module defers the stub import to call time, so
-        # the generated stub module itself is the import to pin)
-        with pytest.raises(ImportError, match="google") as exc:
-            import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-        # the failure is the missing wire-protocol dep, nothing else
-        assert "protobuf" in str(exc.value) or "google" in str(exc.value)
-        # ... and the repo's own TWS operator module stays importable:
-        # the protobuf dependency is entered only at stream start
-        from big_data_crypto_sentiment_spark.streaming.stateful import (
-            online_forecast_tws,  # noqa: F401
-        )
-        return
-    from big_data_crypto_sentiment_spark.streaming.stateful import (
-        online_forecast_tws,
-    )
-    sess = spark.newSession()
-    sess.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    raw = (prices_role(sess, SF_DIR)
-           .select("symbol", "event_time", "price"))
-    chunks = str(tmp_path / "prices_tws")
-    schema = write_replay_chunks(raw, chunks, 4)
-    prices = (replay_dir(sess, chunks, schema)
-              .select("symbol", "event_time",
-                      F.col("price").cast("double").alias("price")))
-    out = online_forecast_tws(prices, phi=0.8)
-    q = (out.writeStream.format("memory").queryName("forecasts_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .start())
-    try:
-        q.processAllAvailable()
-        got = (sess.table("forecasts_tws").toPandas()
-               .sort_values(["symbol", "event_time"])
-               .reset_index(drop=True))
-    finally:
-        q.stop()
-    want = (reference_forecast_series(raw.toPandas(), phi=0.8)
-            .sort_values(["symbol", "event_time"]).reset_index(drop=True))
-    assert len(got) == len(want)
-    pd.testing.assert_series_equal(got["next_price_forecast"],
-                                   want["next_price_forecast"],
-                                   rtol=1e-12)

@@ -7,9 +7,10 @@ attribution-correct reading). Prints one JSON line.
 Usage: python tools/retime_entries.py ts_interpolate sim_semdedup
 
 `artifact:*` names are accepted too (r17): they resolve to the same
-build thunks bench.py times, with the session caches they populate
-evicted before EVERY run — so each wall is a true cold rebuild, not
-the first-run-cold/rest-warm pattern registry entries get.
+build thunks bench.py times, with every session artifact evicted
+before EVERY run (the on-disk warehouse dir is removed too) — so each
+wall is a true cold rebuild, not the first-run-cold/rest-warm pattern
+registry entries get.
 """
 
 from __future__ import annotations
