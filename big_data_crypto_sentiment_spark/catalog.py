@@ -113,13 +113,6 @@ def load_events_range(spark: SparkSession, sf_dir: str,
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so spark.sql() queries mirror
-    the DuckDB oracle's pre-registered views one-to-one."""
-    for name in TABLES:
-        load(spark, name, sf_dir).createOrReplaceTempView(name)
-
-
 _EPOCH_UNITS = {"s": F.timestamp_seconds, "ms": F.timestamp_millis,
                 "us": F.timestamp_micros}
 

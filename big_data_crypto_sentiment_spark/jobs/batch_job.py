@@ -9,7 +9,9 @@ Spark-first translation of the reference's moving parts:
     each run drains exactly the files not seen by previous runs.
   * per-collection Mongo bulk writers (:262-291) → `bulk_jsonl`
     foreachPartition sinks (and parquet for the joined metrics).
-  * the windowed metrics (:201-238) → operators.windowed_join.
+  * the windowed metrics (:201-238) →
+    operators.windowed_join.prices_with_tweets, the same operator the
+    speed layer runs, at 30 min windows stamped with the window start.
 
 Run: python -m big_data_crypto_sentiment_spark.jobs.batch_job \
        --in-dir <parquet events dir> --out-dir <sink root> \
@@ -59,8 +61,7 @@ def run_batch(spark: SparkSession, in_dir: str, out_dir: str,
                        prefix=f"b{batch_id}-")
             bulk_jsonl(prices, os.path.join(out_dir, "raw_batch_prices"),
                        prefix=f"b{batch_id}-")
-            joined = prices_with_tweets(tweets, prices,
-                                        window_duration=window,
+            joined = prices_with_tweets(tweets, prices, window,
                                         label="start", max_texts=1000)
             write_warehouse(joined,
                             os.path.join(out_dir, "batch_prices_with_tweets"),

@@ -25,11 +25,11 @@ import os
 from pyspark.sql import SparkSession
 
 from ..model_registry import broadcast_bundle, load_bundle, phi_by_symbol
+from ..operators.windowed_join import prices_with_tweets
 from ..streaming.enrich import enrich_with_sentiment
 from ..streaming.replay import replay_dir
 from ..streaming.sinks import start_capture_sink, start_jsonl_sink
 from ..streaming.stateful import online_forecast
-from ..streaming.windowed import streaming_prices_with_tweets
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
@@ -90,14 +90,13 @@ def _start_queries(spark, tweets_dir, prices_dir, out_dir, window,
     yield start_jsonl_sink(
         online_forecast(prices, phi_map=phis),
         os.path.join(out_dir, "price_forecasts"), ck("price_forecasts"))
-    # windowed join (J1 union form) — append on watermark expiry (T3)
-    joined = streaming_prices_with_tweets(tweets, prices,
-                                          window_duration=window,
-                                          watermark=watermark)
-    yield (joined.writeStream.format("parquet")
-           .option("path", os.path.join(out_dir, "prices_with_tweets"))
-           .option("checkpointLocation", ck("prices_with_tweets"))
-           .outputMode("append").trigger(availableNow=True).start())
+    # windowed join (J1), the batch layer's operator at the speed
+    # layer's window-end stamp — append on watermark expiry (T3)
+    joined = prices_with_tweets(tweets, prices, window, label="end",
+                                watermark=watermark, max_texts=1000)
+    yield start_capture_sink(
+        joined, os.path.join(out_dir, "prices_with_tweets"),
+        ck("prices_with_tweets"))
 
 
 def main(argv=None) -> int:

@@ -8,8 +8,4 @@ from .multimodal import (  # noqa: F401
     sample_frames,
 )
 from .ta import sma_vwap, ta_indicators  # noqa: F401
-from .windowed_join import (  # noqa: F401
-    aggregate_prices,
-    aggregate_tweets,
-    prices_with_tweets,
-)
+from .windowed_join import prices_with_tweets  # noqa: F401

@@ -345,7 +345,7 @@ DEFERRALS: dict[str, dict] = {
     # six r14 graduations/new pairs with ml_auto_arima_orders born
     # in-window, and the three stalest r9 deferrals left_join_fillna /
     # json_props / ts_trailing_hour, hash-less since r8).
-    "flagship_speed_layer": dict(since=14, family="flagship/windowed-join family via flagship_windowed_join in-window (same cogroup + full-outer core; the T5 window-END labeling twin of its window-start column)",
+    "flagship_speed_layer": dict(since=14, family="flagship/windowed-join family via flagship_windowed_join in-window (same prices_with_tweets union-then-aggregate core; the T5 window-END labeling twin of its window-start column)",
                                  extra="driver-green r2-r13 (every round); streaming parity pinned in tests/test_jobs.py; 3-SF check.py + per-round sf0.001 auto-verify"),
     "upsert_latest":      dict(since=14, family="latest-by-key family via scd2_point_in_time + scd2_snapshot_at in-window (same latest-row-before-ts semantics)",
                                extra="driver-green r13 window + r2-r8; 3-SF check.py + per-round sf0.001 auto-verify"),
@@ -383,7 +383,7 @@ DEFERRALS: dict[str, dict] = {
     # ml_tfidf_ridge_cv — live-MLlib fits now under contract-flag
     # oracle pairs). The twelve members below — every one driver-green
     # in the r14 window — hand over their slots.
-    "left_join_fillna": dict(since=15, family="join-fillna family via flagship_windowed_join in-window (same full-outer/left join + coalesce-fill core over the co-partitioned windowed aggs)",
+    "left_join_fillna": dict(since=15, family="join-fillna family via ts_interpolate in-window (same left join + fill core: a spine left-joined to per-bucket aggregates, gaps filled)",
                              extra="driver-green r14 + r2-r8; 3-SF check.py + per-round sf0.001 auto-verify"),
     "json_props": dict(since=15, family="per-row parse/projection family via text_features in-window (same single-scan typed projection; the payload map-parse twin kv_flatten is deferred alongside)",
                        extra="driver-green r14 + r2-r8; 3-SF check.py + per-round sf0.001 auto-verify"),

@@ -57,28 +57,6 @@ def _pair_counts(syms: DataFrame) -> DataFrame:
                 .groupBy("pair").agg(F.sum("wc").alias("cnt")))
 
 
-def _merge_udf(a: str, b: str):
-    """Arrow-batched single-merge application over symbol arrays."""
-    from pyspark.sql.functions import pandas_udf
-
-    # NB: no pd.Series annotations — function-local annotations break
-    # pandas_udf's signature inference
-    def apply(col):
-        def one(seq):
-            out, i, n = [], 0, len(seq)
-            while i < n:
-                if i + 1 < n and seq[i] == a and seq[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(seq[i])
-                    i += 1
-            return out
-        return col.map(one)
-
-    return pandas_udf("array<string>")(apply)
-
-
 def _batch_merge_udf(pairs: list[tuple[str, str]]):
     """Arrow-batched application of an ORDERED merge batch: each word's
     symbols get every merge in sequence in one Python crossing —

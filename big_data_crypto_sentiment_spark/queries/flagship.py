@@ -1,9 +1,9 @@
 """Flagship windowed dual-stream join, mapped onto the driver's `events`
 table per FIXTURES.md §6: tweets-role = events with props as text,
 prices-role = events with value as price, symbol = event_type. The two
-roles take different (overlapping) subsets so the full-outer join
-exercises tweet-only / price-only / both windows — the golden cases from
-the reference's outer semantics (dataflow/stream_join.py:410-419).
+roles take different (overlapping) subsets so the operator meets
+tweet-only / price-only / both windows — the golden cases from the
+reference's outer semantics (dataflow/stream_join.py:410-419).
 
 The production operator keeps ``tweet_texts`` as array<string>
 (terraform/storage.tf:160-165 declares it REPEATED); the oracle-checked
@@ -42,36 +42,28 @@ def prices_role(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("value").alias("price")))
 
 
-def flagship_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production form: tweet_texts stays array<string>."""
-    return prices_with_tweets(
-        tweets_role(spark, sf_dir), prices_role(spark, sf_dir),
-        window_duration=WINDOW, label="start",
+def _hash_safe(df: DataFrame) -> DataFrame:
+    """Oracle-checked form: hash-safe string encoding of the text list."""
+    return df.select(
+        "event_timestamp", "symbol", "tweet_volume", "avg_price", "last_price",
+        F.array_join("tweet_texts", SEP).alias("tweet_texts"),
     )
 
 
 def q_flagship_windowed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked form: hash-safe string encoding of the text list."""
-    df = flagship_df(spark, sf_dir)
-    return df.select(
-        "event_timestamp", "symbol", "tweet_volume", "avg_price", "last_price",
-        F.array_join("tweet_texts", SEP).alias("tweet_texts"),
-    )
+    """The batch layer's form: window-START stamp (batch_to_mongo.py:237)."""
+    return _hash_safe(prices_with_tweets(
+        tweets_role(spark, sf_dir), prices_role(spark, sf_dir),
+        WINDOW, label="start"))
 
 
 def q_flagship_speed_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The J1 union-then-aggregate form with the speed layer's window-END
-    stamp (stream_join.py:407) — the same plan the streaming query runs,
-    executed on batch inputs so the oracle can check it. One shuffle,
-    one state store when streaming (SURVEY.md §7 "hard" #2)."""
-    from ..streaming.windowed import union_form_prices_with_tweets
-    df = union_form_prices_with_tweets(
+    """The speed layer's form: window-END stamp (stream_join.py:407) —
+    the same plan the streaming query runs, executed on batch inputs so
+    the oracle can check it."""
+    return _hash_safe(prices_with_tweets(
         tweets_role(spark, sf_dir), prices_role(spark, sf_dir),
-        window_duration=WINDOW, label="end")
-    return df.select(
-        "event_timestamp", "symbol", "tweet_volume", "avg_price", "last_price",
-        F.array_join("tweet_texts", SEP).alias("tweet_texts"),
-    )
+        WINDOW, label="end"))
 
 
 QUERIES = {

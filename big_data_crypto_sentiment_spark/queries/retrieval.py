@@ -232,29 +232,6 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_postings(docs: DataFrame, idf: dict[str, int], avgdl: float,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """(id, term, s4): integer per-(doc, term) BM25 partial scores —
-    the corpus-side index. One (id, term) hash agg; dl rides along as
-    a grouping key (constant per doc, no extra shuffle)."""
-    idfmap = literal_map(idf)
-    words = F.split(F.col(text_col), " ")
-    tf = (docs.select(F.col(id_col), F.size(words).alias("dl"),
-                      F.explode(words).alias("term"))
-              .groupBy(id_col, "dl", "term")
-              .agg(F.count("*").alias("tf")))
-    num = (F.col("_idf").cast("double") * F.col("tf")
-           * F.lit(BM25_K1 + 1.0))
-    den = (F.col("tf") + F.lit(BM25_K1)
-           * (F.lit(1.0 - BM25_B)
-              + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)))
-    return (tf.withColumn("_idf", F.element_at(idfmap, F.col("term")))
-              .filter(F.col("_idf").isNotNull())
-              .select(id_col, "term",
-                      F.round(num / den).cast("bigint").alias("s4")))
-
-
 # The planted corpus itself: ~35 md5-bucket draws + string build per
 # doc, re-executed by EVERY corpus action (idf's count + df agg, the
 # weights pass, avgdl, the postings pass — five regenerations per index

@@ -76,10 +76,6 @@ def _cached_label_protos(spark: SparkSession, sf_dir: str) -> DataFrame:
                             build)
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
 def dot(a, b):
     """Sequential left-to-right double accumulation (oracle-parity exact)."""
     return F.aggregate(
@@ -676,9 +672,10 @@ def prototype_scores(vecs: DataFrame, label_col: str = "label",
                      F.sum(F.col("v") * F.col("v")).alias("vn2"))
                 .join(F.broadcast(cn2), "label")
                 .select("vec_id", "label",
-                        (F.col("dot").cast("double")
-                         / (F.sqrt(F.col("vn2").cast("double"))
-                            * F.sqrt(F.col("cn2").cast("double"))))
+                        F.try_divide(
+                            F.col("dot").cast("double"),
+                            F.sqrt(F.col("vn2").cast("double"))
+                            * F.sqrt(F.col("cn2").cast("double")))
                         .alias("_cos")))
     from pyspark.sql import Window
     w = Window.partitionBy("label").orderBy(F.desc("_cos"), "vec_id")
@@ -1022,9 +1019,10 @@ def semdedup_assign_routed(spark: SparkSession, frozen: DataFrame,
               .withColumn("_rn", F.row_number().over(wc))
               .filter(F.col("_rn") == 1)
               .select("vec_id", "cid", "vn2",
-                      (F.col("dot").cast("double")
-                       / (F.sqrt(F.col("vn2").cast("double"))
-                          * F.sqrt(F.col("cn2").cast("double"))))
+                      F.try_divide(
+                          F.col("dot").cast("double"),
+                          F.sqrt(F.col("vn2").cast("double"))
+                          * F.sqrt(F.col("cn2").cast("double")))
                       .alias("cos_c")))
 
 
@@ -1106,8 +1104,8 @@ def _assign_np(frozen: DataFrame, cents: DataFrame) -> DataFrame:
     the centroid dim count contribute exactly the dims the dim
     equality join kept (zero-pad/truncate), and an empty/NULL x8 drops
     out like the inner join dropped it. A zero-norm vector (or
-    centroid) gets cos_c NULL, as the expression path's division by
-    zero gave. Centroid ids must be non-NULL integers, and the centroid
+    centroid) gets cos_c NULL, as the expression path's try_divide
+    gives. Centroid ids must be non-NULL integers, and the centroid
     table must be dense — every cid has dims 0..d-1 (the expression
     path would drop a missing dim from that cid's norm); anything else
     raises ValueError. Pinned against the expression twin by the
@@ -1221,9 +1219,10 @@ def _semdedup_pairs(frozen: DataFrame, assigned: DataFrame,
     pairs = (a.join(b, "cid")
               .filter(F.col("a_id") < F.col("b_id"))
               .select("a_id", "b_id", "a_cc", "b_cc",
-                      (pdot.cast("double")
-                       / (F.sqrt(F.col("a_vn2").cast("double"))
-                          * F.sqrt(F.col("b_vn2").cast("double"))))
+                      F.try_divide(
+                          pdot.cast("double"),
+                          F.sqrt(F.col("a_vn2").cast("double"))
+                          * F.sqrt(F.col("b_vn2").cast("double")))
                       .alias("cos_pair"))
               .filter(F.col("cos_pair") >= threshold))
     dropped = (pairs.select(

@@ -96,26 +96,10 @@ def q_text_top_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame:
               .limit(10))
 
 
-# --- extension: language-ID heuristic (stopword-ratio scoring) ---
-def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    t = F.col("text")
-    stop_ratio = F.round(
-        F.regexp_count(t, F.lit(PAT_STOPWORD)) / _n_words(t), 6)
-    return d.select(
-        "doc_id", "lang",
-        stop_ratio.alias("stopword_ratio"),
-        F.when(t.rlike(PAT_CJK), F.lit("cjk"))
-         .when(stop_ratio >= 0.05, F.lit("en"))
-         .otherwise(F.lit("other")).alias("lang_guess"),
-    )
-
-
 # --- extension: n-gram language identification (Cavnar & Trenkle 1994
 #     "N-Gram-Based Text Categorization": rank-order character-trigram
 #     profiles + out-of-place distance). The stopword/script heuristic
-#     above (also surfaced through text_signals) is the cheap one-scan
-#     screen; THIS is the standard content-based identifier. 100-TB
+#     in text_signals below is the cheap one-scan screen; THIS is the standard content-based identifier. 100-TB
 #     shape: the trained profile is a bounded (n_langs × K) artifact
 #     that broadcasts — classification is one corpus scan, a per-doc
 #     top-M window over (doc, trigram) counts, and a broadcast join;
@@ -181,45 +165,9 @@ def q_text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("cand").alias("pred_lang"), "oop_distance"))
 
 
-# --- extension: quality scoring (length/punct/stopword composite) ---
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    t = F.col("text")
-    n_words = _n_words(t)
-    punct_ratio = (F.length(t)
-                   - F.length(F.regexp_replace(t, r"[^A-Za-z0-9\s]", ""))) \
-        / F.length(t)
-    stop_ratio = F.regexp_count(t, F.lit(PAT_STOPWORD)) / n_words
-    len_score = F.least(F.lit(1.0), n_words / F.lit(50.0))
-    score = F.greatest(
-        F.lit(0.0),
-        F.least(F.lit(1.0),
-                0.5 * len_score + 0.3 * stop_ratio * 10 - 0.2 * punct_ratio))
-    return d.select(
-        "doc_id",
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(len_score, 6).alias("len_score"),
-        F.round(score, 6).alias("quality_score"),
-    )
-
-
-# --- extension: token counting (whitespace + BPE-ish regex) ---
-def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return d.select(
-        "doc_id",
-        _n_words(t).alias("ws_tokens"),
-        F.regexp_count(t, F.lit(PAT_TOKEN)).alias("regex_tokens"),
-        F.round(F.length(t) / F.lit(4.0), 6).alias("approx_llm_tokens"),
-    )
-
-
 # --- merged single-scan signals: lang-ID + quality + token counts +
-#     fingerprint in ONE projection. Each signal is also exposed as its
-#     own query fn above/below for direct use, but the registered query
-#     computes all of them in a single corpus pass — at 100 TB four
+#     fingerprint in ONE projection. The registered query computes all
+#     of them in a single corpus pass — at 100 TB four
 #     separate scans of the documents table is exactly the waste this
 #     column-math family exists to avoid (same merge precedent as
 #     ts_window_calcs / data_profile). ---

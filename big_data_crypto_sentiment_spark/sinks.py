@@ -6,8 +6,9 @@
     which is what makes partition pruning work on the read side.
   * `bulk_jsonl` — the MongoDB bulk writer analog
     (terraform/scripts/batch_to_mongo.py:262-291): `foreachPartition`,
-    documents chunked CHUNK-at-a-time per partition exactly like the
-    reference's 1000-doc insert_many batches, no driver involvement.
+    one JSONL file per partition (the reference's 1000-doc insert_many
+    batches map to partition granularity), no driver involvement. The
+    speed layer's document sinks write through it too.
 
 Scale notes: both sinks write from executors; `write_warehouse` keeps
 Catalyst in charge of file sizing (coalesce only if the caller asks).
@@ -15,13 +16,12 @@ Catalyst in charge of file sizing (coalesce only if the caller asks).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-CHUNK = 1000  # batch_to_mongo.py:268 insert_many batch size
 
 
 def write_warehouse(df: DataFrame, path: str,
@@ -69,41 +69,25 @@ def write_bucketed(df: DataFrame, table_name: str,
     w.saveAsTable(table_name)
 
 
-def bulk_jsonl(df: DataFrame, out_dir: str, chunk: int = CHUNK,
-               prefix: str = "") -> None:
-    """foreachPartition bulk writer: each partition writes its documents
-    in `chunk`-sized groups to one JSONL file (atomic rename). Callers
-    writing repeatedly into one dir pass a distinct `prefix` per run —
-    rewriting the SAME prefix is idempotent (replay-safe), a new prefix
-    appends."""
+def bulk_jsonl(df: DataFrame, out_dir: str, prefix: str = "") -> None:
+    """foreachPartition bulk writer: each non-empty partition streams
+    its documents to one JSONL file (atomic rename). Callers writing
+    repeatedly into one dir pass a distinct `prefix` per run — rewriting
+    the SAME prefix is idempotent (replay-safe), a new prefix appends."""
     os.makedirs(out_dir, exist_ok=True)
     cols = df.columns
 
     def write_partition(idx: int, rows) -> None:
-        buf, n_chunks, opened = [], 0, None
+        first = next(rows, None)
+        if first is None:
+            return
         final = os.path.join(out_dir, f"{prefix}part-{idx:05d}.jsonl")
         tmp = final + ".tmp"
-
-        def flush():
-            nonlocal opened, n_chunks
-            if not buf:
-                return
-            if opened is None:
-                opened = open(tmp, "w")
-            for r in buf:
-                opened.write(json.dumps(dict(zip(cols, r)), default=str))
-                opened.write("\n")
-            buf.clear()
-            n_chunks += 1
-
-        for r in rows:
-            buf.append(r)
-            if len(buf) >= chunk:
-                flush()
-        flush()
-        if opened is not None:
-            opened.close()
-            os.replace(tmp, final)
+        with open(tmp, "w") as f:
+            for r in itertools.chain([first], rows):
+                f.write(json.dumps(dict(zip(cols, r)), default=str))
+                f.write("\n")
+        os.replace(tmp, final)
 
     df.rdd.mapPartitionsWithIndex(
         lambda i, it: iter([write_partition(i, it)])).count()

@@ -2,11 +2,8 @@
 
 The reference's simulators jitter prices ±5% around per-symbol bases
 and clamp RSI to [0, 100] (coincap-simulation/main.py:70-79, 107-182),
-publishing on a fixed cadence. Spark-first form:
-
-  * batch: `rand(seed)` expressions → deterministic given the seed.
-  * streaming: the `rate` source (rows/sec cadence ≙ the 15 s poll loop)
-    mapped through the same jitter expressions.
+publishing on a fixed cadence. Spark-first form: `rand(seed)`
+expressions → deterministic given the seed.
 
 All jitter/clamp math is JVM expressions (`rand`, `least(greatest(...))`
 — the reference's np.clip), so generated streams cost no Python.
@@ -57,18 +54,3 @@ def simulated_ta(spark: SparkSession, n_ticks: int,
         F.least(F.lit(100.0), F.greatest(F.lit(0.0), rsi_raw)).alias("rsi"),
         (F.rand(seed + 1) * 2 - 1).alias("macd"),
     )
-
-
-def streaming_prices(spark: SparkSession, rows_per_second: int = 4,
-                     seed: int = 42) -> DataFrame:
-    """`rate`-source stream shaped like the price feed (S15 analog)."""
-    rate = (spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second).load())
-    base_df = rate.select(F.col("value").alias("n"),
-                          F.col("timestamp").alias("event_time"))
-    sym, base = _symbol_base()
-    jitter = 1.0 + (F.rand(seed) * 2 - 1) * JITTER
-    return base_df.select(
-        sym, base, "event_time",
-        (F.col("base") * jitter).alias("price"),
-    ).select("symbol", "event_time", "price")

@@ -2,15 +2,13 @@
 M2/T6 stateful online forecast)."""
 
 from .replay import replay_dir, write_replay_chunks  # noqa: F401
-from .sinks import jsonl_partition_sink, start_capture_sink, start_jsonl_sink  # noqa: F401
+from .sinks import start_capture_sink, start_jsonl_sink  # noqa: F401
 from .stateful import online_forecast  # noqa: F401
 from .windowed import (  # noqa: F401
     dedupe_stream,
     hopping_window_counts,
     sessionize_stream,
     stream_stream_interval_join,
-    streaming_prices_with_tweets,
-    union_form_prices_with_tweets,
 )
 from .heavy_hitters import streaming_heavy_hitters  # noqa: F401
 from .debounce import debounce_stream  # noqa: F401

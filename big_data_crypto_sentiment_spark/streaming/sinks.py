@@ -5,7 +5,7 @@
     append with a checkpoint = exactly-once file capture.
   * `start_jsonl_sink` — the MongoDB document-sink analog
     (stream_join.py:155-203 per-doc; batch_to_mongo.py:262-291 bulk):
-    `foreachBatch` → `foreachPartition` bulk writer. Files are named
+    `foreachBatch` → the batch layer's `sinks.bulk_jsonl`. Files are named
     (batch_id, partition_id), so replayed batches overwrite rather than
     duplicate — the idempotent upsert that turns the checkpoint's
     at-least-once into effectively-once (T9), and strictly better than
@@ -20,11 +20,10 @@ routes data through the driver.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from ..sinks import bulk_jsonl
 
 
 def start_capture_sink(df: DataFrame, out_dir: str, checkpoint: str,
@@ -39,36 +38,16 @@ def start_capture_sink(df: DataFrame, out_dir: str, checkpoint: str,
     return w.start()
 
 
-def jsonl_partition_sink(out_dir: str):
-    """foreachPartition-style bulk writer: one JSONL file per (batch,
-    partition), written atomically via rename — idempotent on replay."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(out_dir, exist_ok=True)
-        cols = batch_df.columns
-
-        def write_partition(idx_rows):
-            idx, rows = idx_rows
-            rows = list(rows)
-            if not rows:
-                return
-            final = os.path.join(out_dir, f"batch{batch_id}-p{idx}.jsonl")
-            tmp = final + ".tmp"
-            with open(tmp, "w") as f:
-                for r in rows:
-                    f.write(json.dumps(dict(zip(cols, r)), default=str))
-                    f.write("\n")
-            os.replace(tmp, final)
-
-        batch_df.rdd.mapPartitionsWithIndex(
-            lambda i, it: iter([write_partition((i, it))])).count()
-
-    return write_batch
-
-
 def start_jsonl_sink(df: DataFrame, out_dir: str, checkpoint: str,
                      trigger_once: bool = True) -> StreamingQuery:
-    w = (df.writeStream.foreachBatch(jsonl_partition_sink(out_dir))
+    """Each micro-batch goes through the batch layer's `bulk_jsonl`,
+    files prefixed with its batch id: a replayed batch rewrites its
+    own files."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        bulk_jsonl(batch_df, out_dir, prefix=f"batch{batch_id}-")
+
+    w = (df.writeStream.foreachBatch(write_batch)
            .option("checkpointLocation", checkpoint)
            .outputMode("append"))
     if trigger_once:

@@ -1,84 +1,25 @@
-"""Streaming windowed dual-stream join — the J1 speed-layer operator
-(dataflow/stream_join.py:479-524) in its union-then-aggregate form.
+"""Event-time streaming operators: watermarked dedup, session windows,
+hopping windows and the stream-stream interval join.
 
-Beam's `WindowInto(Fixed(30s)) → CoGroupByKey(symbol)` groups BOTH
-streams' elements per (window, symbol) in one shuffle. The closest
-Spark plan is NOT a stream-stream join (two state stores, two
-watermarks, join-specific emission rules) but union-then-aggregate
-(SURVEY.md §7 "hard" #2): tag each stream's rows into a common schema,
-union, and run ONE windowed aggregation whose conditional aggregates
-compute the per-side metrics. One state store, one shuffle, and the
-outer semantics (tweet-only / price-only windows) fall out of the
-conditional aggregates for free — identical to stream_join.py:410-419's
-zeros/empty-list behavior.
+The J1 speed-layer operator (dataflow/stream_join.py:479-524), the
+per-(window, symbol) metrics over both streams, is
+operators.windowed_join.prices_with_tweets: one function for the batch
+and the speed layer, batch and streaming inputs alike.
 
-The same function works on batch DataFrames (used by the parity test:
-batch union-form ≡ batch two-agg full-outer form ≡ streaming output).
-
-Event-time semantics (T1-T5):
+Event-time semantics (T1-T4):
   * event time = the `event_time` column; `withWatermark` bounds state
     and late data (T1/T4; Beam's default allowed-lateness 0 ≙ a small
     delay here, configurable).
-  * tumbling windows via `window()` (T2).
+  * tumbling, session and sliding windows via `window()` /
+    `session_window()` (T2).
   * append output emits once the watermark passes the window end —
     Beam's default trigger (T3).
-  * both window edges survive in the output; `label` picks which one
-    becomes `event_timestamp` (T5 — the reference stamps *end* in the
-    speed layer, *start* in the batch layer).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _tag_union(tweets: DataFrame, prices: DataFrame) -> DataFrame:
-    t = tweets.select(
-        "event_time", "symbol",
-        F.col("text"), F.lit(None).cast("double").alias("price"))
-    p = prices.select(
-        "event_time", "symbol",
-        F.lit(None).cast("string").alias("text"), F.col("price"))
-    return t.unionByName(p)
-
-
-def union_form_prices_with_tweets(
-        tweets: DataFrame, prices: DataFrame,
-        window_duration: str = "30 seconds",
-        label: str = "end",
-        watermark: str | None = None,
-        max_texts: int | None = None,
-        exact_avg: bool = True) -> DataFrame:
-    """One windowed aggregation over the tagged union of both streams.
-
-    Output schema matches operators.windowed_join.prices_with_tweets.
-    Pass ``watermark`` (e.g. "0 seconds") for streaming inputs.
-    """
-    u = _tag_union(tweets, prices)
-    if watermark is not None:
-        u = u.withWatermark("event_time", watermark)
-    texts = F.sort_array(F.collect_list("text"))  # collect_list skips NULLs
-    if max_texts is not None:
-        texts = F.slice(texts, 1, max_texts)
-    if exact_avg:
-        avg_price = (F.sum(F.col("price").cast("decimal(27,6)")).cast("double")
-                     / F.count("price"))
-    else:
-        avg_price = F.avg("price")
-    agg = (u.groupBy(F.window("event_time", window_duration).alias("w"),
-                     "symbol")
-            .agg(F.count("text").alias("tweet_volume"),
-                 texts.alias("tweet_texts"),
-                 avg_price.alias("avg_price"),
-                 # ordering key is NULL for tweet rows → max_by ignores them
-                 F.max_by("price",
-                          F.when(F.col("price").isNotNull(),
-                                 F.col("event_time"))).alias("last_price")))
-    edge = F.col("w.end") if label == "end" else F.col("w.start")
-    return agg.select(
-        edge.alias("event_timestamp"), "symbol",
-        "tweet_volume", "avg_price", "last_price", "tweet_texts")
 
 
 def dedupe_stream(df: DataFrame, key_cols: tuple[str, ...],
@@ -153,8 +94,9 @@ def stream_stream_interval_join(
     paired with every price tick of the same symbol within ±tolerance
     of its event time — the streaming twin of the batch bucketized
     time_tolerance_join (operators/interval_join.py), and the join-form
-    alternative to the union-then-aggregate speed layer above (use this
-    when per-PAIR rows are the product, not per-window aggregates).
+    alternative to the union-then-aggregate prices_with_tweets in
+    operators/windowed_join.py (use this when per-PAIR rows are the
+    product, not per-window aggregates).
 
     Scale/state semantics: both sides are watermarked and the join
     condition bounds price_time to a closed interval around tweet_time,
@@ -191,18 +133,3 @@ def stream_stream_interval_join(
              .select(F.coalesce("t_symbol", "p_symbol").alias("symbol"),
                      "tweet_time", "text", "price_time", "price"))
 
-
-def streaming_prices_with_tweets(
-        tweets: DataFrame, prices: DataFrame,
-        window_duration: str = "30 seconds",
-        watermark: str = "0 seconds",
-        label: str = "end",
-        max_texts: int | None = 1000) -> DataFrame:
-    """Streaming entry: watermarked, capped-list production defaults.
-
-    max_texts defaults to a cap here (unbounded per-window collect_list
-    is the one reference construct that can't scale — SURVEY.md §7 #3).
-    """
-    return union_form_prices_with_tweets(
-        tweets, prices, window_duration, label=label,
-        watermark=watermark, max_texts=max_texts)

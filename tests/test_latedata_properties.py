@@ -8,8 +8,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from big_data_crypto_sentiment_spark.streaming.windowed import (
-    union_form_prices_with_tweets,
+from big_data_crypto_sentiment_spark.operators.windowed_join import (
+    prices_with_tweets,
 )
 
 
@@ -37,9 +37,8 @@ def test_late_record_dropped_after_watermark_passes(spark, tmp_path):
 
     t_stream = spark.readStream.schema(on_time.schema).parquet(t_dir)
     p_stream = spark.readStream.schema(prices.schema).parquet(p_dir)
-    out = union_form_prices_with_tweets(
-        t_stream, p_stream, window_duration="30 minutes", label="start",
-        watermark="0 seconds")
+    out = prices_with_tweets(t_stream, p_stream, "30 minutes", label="start",
+                             watermark="0 seconds")
     q = (out.writeStream.format("memory").queryName("late_test")
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ck"))

@@ -217,16 +217,22 @@ def test_two_level_semdedup_matches_exhaustive_on_separated_clusters(
     assert a == b and len(a) == k * n_per
     # the dedup did real work (planted tight clusters -> drops)
     assert sum(1 for _, _, kept in a.values() if not kept) > 0
-    # zero-norm vector: 0/0 is NULL on both front-ends (the expression
-    # path's non-ANSI division; ANSI mode raises there instead)
+    # zero-norm vectors: 0/0 is NULL on both front-ends and in the pair
+    # stage (try_divide), also under ANSI mode, where a plain division
+    # raises DIVIDE_BY_ZERO; two zero vectors share a cluster, so the
+    # pair cosine divides by zero too, and both are kept
     zero = _freeze_vectors(spark.createDataFrame(
-        [(vid, [0.0] * d)], "vec_id long, embedding array<float>"))
-    with conf_gates(spark, {"spark.sql.ansi.enabled": "false"}):
+        [(vid, [0.0] * d), (vid + 1, [0.0] * d)],
+        "vec_id long, embedding array<float>"))
+    with conf_gates(spark, {"spark.sql.ansi.enabled": "true"}):
         got = [(r.vn2, r.cos_c) for r in (
             _assign_np(zero, cents).collect()
             + semdedup_assign_routed(spark, zero, cents_list,
                                      kc=4).collect())]
-    assert got == [(0, None), (0, None)]
+        kept = [(r.cos_to_centroid, r.is_kept)
+                for r in semdedup(zero, cents).collect()]
+    assert got == [(0, None)] * 4
+    assert kept == [(None, True)] * 2
     with pytest.raises(ValueError, match="must be integers"):
         semdedup(frozen, cents.withColumn("cid",
                                           cents["cid"].cast("string")))

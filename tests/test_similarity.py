@@ -9,6 +9,7 @@ symmetric-free and respects the threshold.
 """
 
 import pytest
+from conftest import conf_gates
 from pyspark.sql import functions as F
 
 from big_data_crypto_sentiment_spark.queries.similarity import (
@@ -216,7 +217,8 @@ def test_embed_pca_recovers_planted_direction_and_orders_variance(spark):
 
 def test_prototype_scores_rank_centroid_first(spark):
     """The vector pointing along its class's mean direction must get
-    proto_rank 1; an off-axis outlier must rank last."""
+    proto_rank 1; an off-axis outlier must rank last. A zero vector
+    scores NULL and ranks last, also under ANSI mode."""
     from big_data_crypto_sentiment_spark.queries.similarity import (
         prototype_scores,
     )
@@ -229,10 +231,13 @@ def test_prototype_scores_rank_centroid_first(spark):
         # label 1: orthogonal class
         (5, 1, [0.0, 1.0, 0.0, 0.0]),
         (6, 1, [0.02, 1.0, 0.0, 0.0]),
+        (7, 1, [0.0, 0.0, 0.0, 0.0]),     # zero vector
     ]
     df = spark.createDataFrame(rows, ["vec_id", "label", "embedding"])
-    got = {r.vec_id: r for r in prototype_scores(df).collect()}
-    assert len(got) == 6
+    with conf_gates(spark, {"spark.sql.ansi.enabled": "true"}):
+        got = {r.vec_id: r for r in prototype_scores(df).collect()}
+    assert len(got) == 7
+    assert (got[7].cos_to_proto, got[7].proto_rank) == (None, 3)
     l0 = sorted((r for r in got.values() if r.label == 0),
                 key=lambda r: r.proto_rank)
     assert l0[-1].vec_id == 4                  # outlier ranks last

@@ -73,7 +73,7 @@ def test_bulk_jsonl_chunks_and_counts(spark, tmp_path):
     df = spark.range(2500).select(F.col("id"),
                                   (F.col("id") * 2).alias("v"))
     out = str(tmp_path / "docs")
-    bulk_jsonl(df.repartition(3), out, chunk=100)
+    bulk_jsonl(df.repartition(3), out)
     files = glob.glob(f"{out}/part-*.jsonl")
     assert len(files) == 3
     n = sum(1 for p in files for _ in open(p))

@@ -157,9 +157,8 @@ def test_decimal_mode_preserves_sub_double_precision(spark):
 
 
 def test_decimal_mode_flows_exactly_through_flagship_aggregates(spark):
-    """The windowed-join price aggregate path must not round decimals:
-    a sum of 1e-18-grade quotes keeps every digit (exact_avg=False so
-    the sum stays in decimal, not the double-determinism cast)."""
+    """A decimal-mode price read must not round in aggregation: a plain
+    decimal sum of 1e-18-grade quotes keeps every digit."""
     from decimal import Decimal
 
     from pyspark.sql import functions as F

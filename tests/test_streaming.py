@@ -1,7 +1,7 @@
 """Streaming-layer tests: file replay → watermarked windowed join →
-parity with the batch flagship (the lambda-architecture invariant,
-SURVEY.md §5 step 3/5), stateful online forecast sequence parity,
-append-mode emission semantics, and the multi-sink fan-out."""
+parity with the batch flagship's DuckDB twin (the lambda-architecture
+invariant, SURVEY.md §5 step 3/5), stateful online forecast sequence
+parity, append-mode emission semantics, and the multi-sink fan-out."""
 
 import pandas as pd
 import pytest
@@ -12,6 +12,8 @@ from big_data_crypto_sentiment_spark.operators.windowed_join import (
     prices_with_tweets,
 )
 from big_data_crypto_sentiment_spark.queries.flagship import (
+    ORACLE,
+    SEP,
     prices_role,
     tweets_role,
 )
@@ -20,7 +22,6 @@ from big_data_crypto_sentiment_spark.streaming import (
     replay_dir,
     start_capture_sink,
     start_jsonl_sink,
-    union_form_prices_with_tweets,
     write_replay_chunks,
 )
 from big_data_crypto_sentiment_spark.streaming.stateful import (
@@ -31,11 +32,27 @@ SF_DIR = "/root/testdata/sf0.001"
 WINDOW = "30 minutes"
 
 
-def _canon(df):
-    pdf = (df.withColumn("tweet_texts", F.array_join("tweet_texts", "\x1f"))
-             .toPandas())
+def _canon(pdf):
+    pdf = pdf.astype({"event_timestamp": "datetime64[us]",
+                      "tweet_volume": "int64"})
     pdf = pdf.sort_values(["event_timestamp", "symbol"]).reset_index(drop=True)
     return pdf.round({"avg_price": 9, "last_price": 9})
+
+
+def _spark_canon(df):
+    return _canon(df.withColumn("tweet_texts", F.array_join("tweet_texts", SEP))
+                    .toPandas())
+
+
+@pytest.fixture(scope="module")
+def duckdb_flagship():
+    """The batch flagship computed independently: DuckDB running the
+    flagship_windowed_join oracle SQL on the same sf0.001 events."""
+    import duckdb
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS "
+            f"SELECT * FROM read_parquet('{SF_DIR}/events.parquet')")
+    return _canon(con.sql(ORACLE["flagship_windowed_join"]).df())
 
 
 @pytest.fixture(scope="module")
@@ -72,59 +89,53 @@ def test_replay_chunks_are_time_ordered_one_write(spark, tmp_path):
     write_replay_chunks(empty, str(tmp_path / "empty"), 4)
 
 
-def test_union_form_equals_two_agg_form_batch(spark):
-    """The union-then-aggregate J1 formulation must be row-identical to
-    the two-aggregate full-outer-join batch operator."""
+def test_batch_operator_matches_duckdb_twin(spark, duckdb_flagship):
+    """The windowed operator on batch inputs must be row-identical to
+    the flagship's DuckDB twin (a full-outer join of two aggregates)."""
     t, p = tweets_role(spark, SF_DIR), prices_role(spark, SF_DIR)
-    batch = prices_with_tweets(t, p, window_duration=WINDOW, label="start")
-    union = union_form_prices_with_tweets(t, p, window_duration=WINDOW,
-                                          label="start")
-    pd.testing.assert_frame_equal(_canon(batch), _canon(union))
+    got = _spark_canon(prices_with_tweets(t, p, WINDOW, label="start"))
+    pd.testing.assert_frame_equal(duckdb_flagship, got)
 
 
-def test_streaming_parity_with_batch_flagship(spark, replayed, tmp_path):
+def test_streaming_parity_with_batch_flagship(spark, replayed, tmp_path,
+                                              duckdb_flagship):
     """File replay → watermarked streaming aggregation (complete mode) ≡
-    the batch flagship on the same input."""
+    the batch flagship's DuckDB twin on the same input."""
     t_stream, p_stream = replayed
-    out = union_form_prices_with_tweets(
-        t_stream, p_stream, window_duration=WINDOW, label="start",
-        watermark="0 seconds")
+    out = prices_with_tweets(t_stream, p_stream, WINDOW, label="start",
+                             watermark="0 seconds")
     q = (out.writeStream.format("memory").queryName("stream_flagship")
             .outputMode("complete")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .start())
     try:
         q.processAllAvailable()
-        got = _canon(spark.table("stream_flagship"))
+        got = _spark_canon(spark.table("stream_flagship"))
     finally:
         q.stop()
-    batch = _canon(prices_with_tweets(
-        tweets_role(spark, SF_DIR), prices_role(spark, SF_DIR),
-        window_duration=WINDOW, label="start"))
-    pd.testing.assert_frame_equal(batch, got)
+    pd.testing.assert_frame_equal(duckdb_flagship, got)
 
 
 def test_append_mode_watermark_holds_back_open_windows(spark, replayed,
-                                                       tmp_path):
+                                                       tmp_path,
+                                                       duckdb_flagship):
     """T3/T4: append mode emits only windows the watermark has passed —
-    emitted rows are a subset of the batch result, and the held-back
-    rows are exactly the newest window(s)."""
+    emitted rows are a subset of the batch result (the flagship's
+    DuckDB twin), and the held-back rows are exactly the newest
+    window(s)."""
     t_stream, p_stream = replayed
-    out = union_form_prices_with_tweets(
-        t_stream, p_stream, window_duration=WINDOW, label="start",
-        watermark="0 seconds")
+    out = prices_with_tweets(t_stream, p_stream, WINDOW, label="start",
+                             watermark="0 seconds")
     q = (out.writeStream.format("memory").queryName("stream_append")
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ckpt2"))
             .start())
     try:
         q.processAllAvailable()
-        got = _canon(spark.table("stream_append"))
+        got = _spark_canon(spark.table("stream_append"))
     finally:
         q.stop()
-    batch = _canon(prices_with_tweets(
-        tweets_role(spark, SF_DIR), prices_role(spark, SF_DIR),
-        window_duration=WINDOW, label="start"))
+    batch = duckdb_flagship
     merged = got.merge(batch, how="left", indicator=True)
     assert (merged["_merge"] == "both").all()  # emitted ⊆ batch
     missing = batch.merge(got, how="left", indicator=True)

@@ -1,16 +1,13 @@
 """windowed_join operator edge cases (ADVICE r1): tweet-only /
-price-only / both windows, both label edges, the max_texts cap, and
-kwarg validation — on tiny in-memory frames where every expected value
-is hand-computable."""
+price-only / both windows, both label edges, the max_texts cap, and a
+NULL-priced latest tick — on tiny in-memory frames where every expected
+value is hand-computable."""
 
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from big_data_crypto_sentiment_spark.operators.windowed_join import (
-    aggregate_prices,
-    aggregate_tweets,
     prices_with_tweets,
 )
 
@@ -22,7 +19,8 @@ def _ts(minute, second=0):
 @pytest.fixture(scope="module")
 def frames(spark):
     # window 1 (10:00): ETH tweets+prices; window 2 (10:00): SOL price only
-    # window 3 (10:30): ETH tweets only
+    # window 3 (10:30): ETH tweets only; window 1's latest ETH tick
+    # (10:22) carries a NULL price
     tweets = spark.createDataFrame(
         [(_ts(5), "ETH", "t1"), (_ts(10), "ETH", "t2"),
          (_ts(40), "ETH", "late1"), (_ts(45), "ETH", "late2"),
@@ -30,8 +28,8 @@ def frames(spark):
         ["event_time", "symbol", "text"])
     prices = spark.createDataFrame(
         [(_ts(5), "ETH", 2700.0), (_ts(20), "ETH", 2710.0),
-         (_ts(25, 30), "SOL", 127.0)],
-        ["event_time", "symbol", "price"])
+         (_ts(22), "ETH", None), (_ts(25, 30), "SOL", 127.0)],
+        "event_time timestamp, symbol string, price double")
     return tweets, prices
 
 
@@ -41,12 +39,13 @@ def _rows(df):
 
 def test_outer_semantics_all_three_window_kinds(frames):
     tweets, prices = frames
-    out = _rows(prices_with_tweets(tweets, prices, "30 minutes"))
+    out = _rows(prices_with_tweets(tweets, prices, "30 minutes", "start"))
     both = out[(_ts(0), "ETH")]
     assert both.tweet_volume == 2
     assert both.tweet_texts == ["t1", "t2"]
-    assert both.avg_price == pytest.approx(2705.0)
-    assert both.last_price == 2710.0  # max_by event_time
+    assert both.avg_price == 2705.0  # the NULL tick is not averaged
+    # the latest NON-NULL price, as DuckDB's arg_max(value, ts) gives
+    assert both.last_price == 2710.0
     price_only = out[(_ts(0), "SOL")]
     assert price_only.tweet_volume == 0 and price_only.tweet_texts == []
     assert price_only.avg_price == 127.0
@@ -67,34 +66,21 @@ def test_label_edges(frames):
 
 def test_max_texts_cap(frames):
     tweets, prices = frames
-    capped = prices_with_tweets(tweets, prices, "30 minutes", max_texts=2)
+    capped = prices_with_tweets(tweets, prices, "30 minutes", "start",
+                                max_texts=2)
     r = _rows(capped)[(_ts(30), "ETH")]
     assert r.tweet_volume == 3           # volume counts everything…
     assert r.tweet_texts == ["late1", "late2"]  # …list capped after sort
 
 
-def test_unknown_kwarg_raises(frames):
-    tweets, prices = frames
-    with pytest.raises(TypeError, match="max_text"):
-        prices_with_tweets(tweets, prices, "30 minutes", max_text=100)
-
-
 def test_empty_sides(spark, frames):
     tweets, prices = frames
     empty_t = spark.createDataFrame([], "event_time timestamp, symbol string, text string")
-    out = _rows(prices_with_tweets(empty_t, prices, "30 minutes"))
+    out = _rows(prices_with_tweets(empty_t, prices, "30 minutes", "start"))
     assert all(r.tweet_volume == 0 and r.tweet_texts == []
                for r in out.values())
     empty_p = spark.createDataFrame([], "event_time timestamp, symbol string, price double")
-    out2 = _rows(prices_with_tweets(tweets, empty_p, "30 minutes"))
+    out2 = _rows(prices_with_tweets(tweets, empty_p, "30 minutes", "start"))
     assert all(r.avg_price is None and r.last_price is None
                for r in out2.values())
 
-
-def test_aggregates_standalone(frames):
-    tweets, prices = frames
-    t = aggregate_tweets(tweets, "30 minutes").collect()
-    assert {r.tweet_volume for r in t} == {2, 3}
-    p = aggregate_prices(prices, "30 minutes", exact_avg=False).collect()
-    eth = [r for r in p if r.symbol == "ETH"][0]
-    assert eth.avg_price == pytest.approx(2705.0)

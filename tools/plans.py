@@ -17,9 +17,9 @@ import sys
 
 HEADLINE = [
     ("flagship_windowed_join",
-     "J1/J2: two co-partitioned windowed aggs + full-outer join"),
+     "J1/J2: union-then-aggregate, ONE shuffle (window-START stamp)"),
     ("flagship_speed_layer",
-     "union-then-aggregate form: ONE shuffle, one state-store shape"),
+     "the same operator at the window-END stamp: one state-store shape"),
     ("filter_time_range",
      "S8/S10 pushdown scan: note GreaterThanOrEqual(ts, …) in PushedFilters"),
     ("orders_by_nation",
