@@ -144,15 +144,22 @@ def decontaminate(docs: DataFrame, id_col: str = "doc_id",
                      .alias("hit_frac")))
 
 
-def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Per-doc repetition metrics, all computed inside the row (no
-    explode, no shuffle): distinct-word ratio, fraction of words that
-    are the single most frequent word, and the fraction of word 2-grams
-    that are repeats of an earlier 2-gram in the same doc.
+def split_words(text_col: str):
+    """The `_w` = split(text, ' ') words column that repetition_stages
+    and unigram_stages read."""
+    return F.split(F.col(text_col), " ").alias("_w")
 
-    Plan hygiene (both measured multiples of this query's whole cost at
-    sf0.1): every array lives in its OWN projection stage so no
+
+def repetition_stages():
+    """The repetition rule as the columns of three successive projections
+    over a materialized `_w` = split(text, ' ') column: the word-2-gram
+    array `_g2`; counts over both arrays; then the per-doc metrics and
+    the `repetitive` flag, by output name. Callers: repetition_signals, and
+    jobs/curate.py, which runs each stage beside unigram_stages' in one
+    projection chain.
+
+    Plan hygiene (both measured multiples of repetition_filter's whole
+    cost at sf0.1): every array lives in its OWN projection stage so no
     higher-order expression is ever duplicated by a downstream
     reference (Catalyst does not CSE expensive expression trees), and
     the top-word count is an O(n) run-length scan over the sorted array
@@ -173,28 +180,37 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
     # which allocates a sliced array per gram
     g2 = F.expr("transform(slice(_w, 1, size(_w) - 1), "
                 "(w, i) -> concat(w, ' ', _w[i + 1]))")
-    n, n2 = F.size(F.col("_w")), F.size(F.col("_g2"))
-    raw = (docs
-           .select(F.col(id_col),
-                   F.split(F.col(text_col), " ").alias("_w"))
-           .select(id_col, "_w", g2.alias("_g2"))
-           .select(F.col(id_col),
-                   n.alias("n_words"),
-                   F.size(F.array_distinct("_w")).alias("_nd"),
-                   top_cnt.alias("_top"),
-                   n2.alias("_n2"),
-                   F.size(F.array_distinct("_g2")).alias("_nd2")))
     top_frac = F.when(F.col("n_words") > 0,
                       F.col("_top") / F.col("n_words")).otherwise(0.0)
     dup2 = F.when(F.col("_n2") > 0,
                   1.0 - F.col("_nd2") / F.col("_n2")).otherwise(0.0)
-    return raw.select(
-        F.col(id_col), "n_words",
-        F.round(F.col("_nd") / F.col("n_words"), 6).alias("distinct_ratio"),
-        F.round(top_frac, 6).alias("top_word_frac"),
-        F.round(dup2, 6).alias("dup_2gram_frac"),
-        ((top_frac > TOP_WORD_MAX) | (dup2 > DUP_2GRAM_MAX))
-        .cast("int").alias("repetitive"))
+    return (
+        [g2.alias("_g2")],
+        [F.size("_w").alias("n_words"),
+         F.size(F.array_distinct("_w")).alias("_nd"),
+         top_cnt.alias("_top"),
+         F.size("_g2").alias("_n2"),
+         F.size(F.array_distinct("_g2")).alias("_nd2")],
+        {"distinct_ratio": F.round(F.col("_nd") / F.col("n_words"), 6),
+         "top_word_frac": F.round(top_frac, 6),
+         "dup_2gram_frac": F.round(dup2, 6),
+         "repetitive": ((top_frac > TOP_WORD_MAX)
+                        | (dup2 > DUP_2GRAM_MAX)).cast("int")})
+
+
+def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
+                       text_col: str = "text") -> DataFrame:
+    """Per-doc repetition metrics, all computed inside the row (no
+    explode, no shuffle): distinct-word ratio, fraction of words that
+    are the single most frequent word, and the fraction of word 2-grams
+    that are repeats of an earlier 2-gram in the same doc."""
+    arrays, counts, metrics = repetition_stages()
+    return (docs
+            .select(F.col(id_col), split_words(text_col))
+            .select(id_col, "_w", *arrays)
+            .select(F.col(id_col), *counts)
+            .select(F.col(id_col), "n_words",
+                    *(c.alias(n) for n, c in metrics.items())))
 
 
 def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -342,14 +358,11 @@ def _build_unigram(docs: DataFrame, text_col: str, vocab_k: int,
     return lp, oov, len(top) > vocab_k
 
 
-def unigram_score(docs: DataFrame, lp: dict[str, int], oov: int,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """(id, n_tokens, n_oov, avg_nll) — zero-shuffle scoring pass.
-    NULL-text docs are dropped (split(NULL) would otherwise emit an
-    n_tokens=-1 row with NULL avg_nll; the oracle's unnest drops the
-    doc, so match that convention)."""
-    docs = docs.filter(F.col(text_col).isNotNull())
+def unigram_stages(lp: dict[str, int], oov: int):
+    """Scoring under the (lp, oov) unigram model as the columns of two
+    successive projections over a materialized `_w` = split(text, ' ')
+    column: the per-token lp8 array `_lp`, then n_tokens, n_oov and
+    avg_nll. Callers: unigram_score, and jobs/curate.py's LM stage."""
     lpmap = literal_map(lp)
     tok_lp = F.transform(
         F.col("_w"),
@@ -358,15 +371,26 @@ def unigram_score(docs: DataFrame, lp: dict[str, int], oov: int,
                          lambda a, x: a + x.cast("bigint"))
     n_oov = F.size(F.filter(
         F.col("_w"), lambda w: F.element_at(lpmap, w).isNull()))
-    return (docs
-            .select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
-            .select(id_col, "_w", tok_lp.alias("_lp"))
-            .select(F.col(id_col),
-                    F.size("_w").alias("n_tokens"),
-                    n_oov.alias("n_oov"),
-                    F.round(-sum_lp.cast("double")
-                            / (F.size("_w") * float(_LP_SCALE)), 6)
-                     .alias("avg_nll")))
+    return (
+        [tok_lp.alias("_lp")],
+        [F.size("_w").alias("n_tokens"),
+         n_oov.alias("n_oov"),
+         F.round(-sum_lp.cast("double")
+                 / (F.size("_w") * float(_LP_SCALE)), 6).alias("avg_nll")])
+
+
+def unigram_score(docs: DataFrame, lp: dict[str, int], oov: int,
+                  id_col: str = "doc_id",
+                  text_col: str = "text") -> DataFrame:
+    """(id, n_tokens, n_oov, avg_nll) — zero-shuffle scoring pass.
+    NULL-text docs are dropped (split(NULL) would otherwise emit an
+    n_tokens=-1 row with NULL avg_nll; the oracle's unnest drops the
+    doc, so match that convention)."""
+    arrays, scores = unigram_stages(lp, oov)
+    return (docs.filter(F.col(text_col).isNotNull())
+            .select(F.col(id_col), split_words(text_col))
+            .select(id_col, "_w", *arrays)
+            .select(F.col(id_col), *scores))
 
 
 # --- bigram-LM quality scoring: the step up from the unigram filter

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._util import session_artifact, table
+from .text import _sql_normalized, normalized
 
 SHINGLE_WORDS = 3
 NUM_HASHES = 32
@@ -67,7 +68,7 @@ def _shingles(col: str = "text"):
 # --- exact dedup: hash-groupBy on normalized content (events.props) ---
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
-    norm = F.lower(F.regexp_replace(F.col("props"), r"\s+", " "))
+    norm = normalized(F.col("props"))
     return (ev.filter(F.col("props").isNotNull())
               .groupBy(norm.alias("content"))
               .agg(F.min("event_id").alias("keep_event_id"),
@@ -122,7 +123,7 @@ def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently; being explicit keeps the twins aligned)."""
     d = (table(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull() & F.col("source").isNotNull()))
-    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
+    norm = normalized(F.col("text"))
     return _source_matrix(d, F.md5(norm))
 
 
@@ -144,7 +145,7 @@ def q_dedup_source_matrix_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes whole documents)."""
     d = (table(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull() & F.col("source").isNotNull()))
-    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
+    norm = normalized(F.col("text"))
     prefix = F.array_join(
         F.slice(F.split(norm, " "), 1, PREFIX_FP_WORDS), " ")
     return _source_matrix(d, F.md5(prefix))
@@ -873,9 +874,9 @@ SELECT p.doc_id, p.n_grams,
 FROM per_doc p LEFT JOIN agg a USING (doc_id)
 """,
     "dedup_fuzzy_terms": _oracle_fuzzy_terms(),
-    "dedup_source_matrix": """
+    "dedup_source_matrix": f"""
 WITH sc AS (
-  SELECT md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS h,
+  SELECT md5({_sql_normalized('text')}) AS h,
          source, COUNT(*) AS c
   FROM documents
   WHERE text IS NOT NULL AND source IS NOT NULL
@@ -894,7 +895,7 @@ FROM p GROUP BY src_a, src_b ORDER BY src_a, src_b
     "dedup_source_matrix_fp": f"""
 WITH sc AS (
   SELECT md5(array_to_string(
-           string_split(lower(regexp_replace(text, '\\s+', ' ', 'g')),
+           string_split({_sql_normalized('text')},
                         ' ')[1:{PREFIX_FP_WORDS}], ' ')) AS h,
          source, COUNT(*) AS c
   FROM documents
@@ -911,9 +912,9 @@ WITH sc AS (
 SELECT src_a, src_b, COUNT(*) AS n_dup_groups
 FROM p GROUP BY src_a, src_b ORDER BY src_a, src_b
 """,
-    "dedup_exact": """
+    "dedup_exact": f"""
 SELECT md5(content) AS fingerprint, keep_event_id, n_copies FROM (
-  SELECT lower(regexp_replace(props, '\\s+', ' ', 'g')) AS content,
+  SELECT {_sql_normalized('props')} AS content,
          MIN(event_id) AS keep_event_id, COUNT(*) AS n_copies
   FROM events WHERE props IS NOT NULL GROUP BY 1
 )

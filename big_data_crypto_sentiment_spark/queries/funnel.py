@@ -9,9 +9,10 @@ Graduation shape (the bounded-guarantee recipe): five of the seven
 stages are exact SQL — the C4 keep flag, the exact-dedup keep set,
 the benchmark-gram contamination set, the repetition flag, and the
 duplicate-span filter over the dedup survivors — so their drop counts
-hash as exact integers, recomputed by DuckDB from the same shared
-constants the stage oracles use (text_c4_filter, decontam_overlap,
-repetition_filter, dedup_span_stats). The two stages with no SQL twin
+hash as exact integers, recomputed by DuckDB: the C4 and repetition
+drops run the text_c4_filter and repetition_filter oracles themselves,
+the others use the same shared constants as the decontam_overlap and
+dedup_span_stats oracles. The two stages with no SQL twin
 (SemDeDup's k-means fit; the CCNet cut's approxQuantile threshold)
 ride as asserted contract flags: the semantic-dup drops are bounded by
 the dedup-survivor count, the LM cut lands within [0.05, 0.15]·n of
@@ -29,24 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cleaning import (
-    _SQL_BENCH,
-    _SQL_G2,
-    _SQL_GRAMS,
-    DUP_2GRAM_MAX,
-    NGRAM,
-    TOP_WORD_MAX,
-)
+from .cleaning import _SQL_BENCH, _SQL_GRAMS, NGRAM
+from .cleaning import ORACLE as CLEANING_ORACLE
 from .dedup import SPAN_GRAM
-from .text import (
-    _SQL_NWORDS,
-    _sql_count,
-    C4_MIN_WORDS,
-    C4_PUNCT_PCT,
-    C4_STOPWORD_PCT,
-    PAT_CTA,
-    PAT_STOPWORD,
-)
+from .text import _sql_normalized
+from .text import ORACLE as TEXT_ORACLE
 
 # integer-exact LM-cut contract bounds: drop_lm/n_docs in [1/20, 3/20]
 # around the 0.10 target (see module docstring)
@@ -85,26 +73,19 @@ QUERIES = {
     "curate_funnel_stats": q_curate_funnel_stats,
 }
 
-# the five SQL-exact stages, composed from the SAME shared constants
-# their standalone oracles use; span dedup runs over the exact-dedup
-# SURVIVORS exactly as jobs/curate.py stages it
+# span dedup runs over the exact-dedup SURVIVORS exactly as
+# jobs/curate.py stages it. NULL-text docs are in
+# no count (n_docs and the exact-dedup keep set read non-NULL text
+# only), as in the funnel, which drops them up front; the other stages
+# never count a NULL-text doc as a drop.
 ORACLE = {
     "curate_funnel_stats": f"""
 WITH c4 AS (
-  SELECT doc_id,
-         CAST(CAST({_SQL_NWORDS} < {C4_MIN_WORDS} AS INT)
-            + CAST({_sql_count(PAT_STOPWORD)} * 100
-                   < {_SQL_NWORDS} * {C4_STOPWORD_PCT} AS INT)
-            + CAST((length(text) - length(regexp_replace(text,
-                     '[^A-Za-z0-9\\s]', '', 'g'))) * 100
-                   > length(text) * {C4_PUNCT_PCT} AS INT)
-            + CAST({_sql_count(PAT_CTA)} > 0 AS INT) = 0 AS INT) AS keep
-  FROM documents
-), dk AS (
+{TEXT_ORACLE["text_c4_filter"]}), dk AS (
   SELECT MIN(doc_id) AS doc_id
   FROM (SELECT doc_id,
-               lower(regexp_replace(text, '\\s+', ' ', 'g')) AS content
-        FROM documents)
+               {_sql_normalized('text')} AS content
+        FROM documents WHERE text IS NOT NULL)
   GROUP BY content
 ), w AS (
   SELECT doc_id, {_SQL_BENCH} AS is_bench,
@@ -119,20 +100,7 @@ WITH c4 AS (
   SELECT DISTINCT c.doc_id
   FROM g c JOIN bench b USING (gram) WHERE NOT c.is_bench
 ), rep AS (
-  SELECT doc_id,
-         CAST((CASE WHEN len(words) > 0
-                    THEN CAST(list_max(list_transform(
-                           list_distinct(words),
-                           w -> len(list_filter(words, x -> x = w))))
-                         AS DOUBLE) / len(words)
-                    ELSE 0.0 END) > {TOP_WORD_MAX}
-              OR (CASE WHEN len(g2) > 0
-                       THEN 1.0 - CAST(len(list_distinct(g2)) AS DOUBLE)
-                                  / len(g2)
-                       ELSE 0.0 END) > {DUP_2GRAM_MAX} AS INT)
-           AS repetitive
-  FROM (SELECT doc_id, words, {_SQL_G2} AS g2 FROM w)
-), sbase AS (
+{CLEANING_ORACLE["repetition_filter"]}), sbase AS (
   SELECT d.doc_id, string_split(d.text, ' ') AS words
   FROM documents d JOIN dk USING (doc_id)
   WHERE d.text IS NOT NULL
@@ -155,9 +123,9 @@ WITH c4 AS (
 ), spanid AS (
   SELECT doc_id FROM sfrac WHERE dup_frac > 0.5
 )
-SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
+SELECT (SELECT COUNT(text) FROM documents) AS n_docs,
        (SELECT COUNT(*) FROM c4 WHERE keep = 0) AS drop_quality,
-       (SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM dk)
+       (SELECT COUNT(text) FROM documents) - (SELECT COUNT(*) FROM dk)
          AS drop_dup,
        (SELECT COUNT(*) FROM cont) AS drop_contaminated,
        (SELECT COUNT(*) FROM rep WHERE repetitive = 1)

@@ -88,7 +88,10 @@ def norm(a):
 
 
 def cosine(a, b):
-    return dot(a, b) / (norm(a) * norm(b))
+    """NULL when either vector has zero norm: such a pair ranks last
+    under desc and fails every >= threshold, instead of failing the
+    query with DIVIDE_BY_ZERO under ANSI mode."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:

@@ -48,6 +48,15 @@ def _n_words(c):
     return F.size(F.split(c, " "))
 
 
+def normalized(c):
+    """Whitespace-collapsed, lowercased text: the content key that exact
+    dedup groups on and the fingerprints hash. Callers: text_signals,
+    text_fingerprint, source_scorecard, the dedup_exact and
+    dedup_source_matrix(_fp) keys, and jobs/curate.py's exact-dedup
+    keep set."""
+    return F.lower(F.regexp_replace(c, r"\s+", " "))
+
+
 # --- P15 + P12: string feature extraction (Milestone4 cell 9) plus
 #     model-input truncation (stream_join.py:292-294) — one projection,
 #     one scan (merged so both stay inside the driver's window) ---
@@ -188,7 +197,7 @@ def q_text_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         F.least(F.lit(1.0),
                 0.5 * len_score + 0.3 * stop_ratio * 10 - 0.2 * punct_ratio))
-    norm = F.lower(F.regexp_replace(t, r"\s+", " "))
+    norm = normalized(t)
     return d.select(
         "doc_id", "lang",
         # lang-ID
@@ -243,10 +252,11 @@ C4_STOPWORD_PCT = 1     # drop if stopwords < 1% of words
 C4_PUNCT_PCT = 30       # drop if punct chars > 30% of chars
 
 
-def q_text_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ._util import rebalance_scan
-    d = rebalance_scan(table(spark, sf_dir, "documents"))
-    t = F.col("text")
+def c4_flags(t):
+    """The four C4 rule flags of text column `t` by output name (1 = the
+    rule fires) and the keep flag (1 iff none fires). NULL text gives
+    NULL flags; a caller that must drop it filters first. Callers:
+    q_text_c4_filter and jobs/curate.py's quality stage."""
     n_words = _n_words(t)
     stop_n = F.regexp_count(t, F.lit(PAT_STOPWORD))
     punct_n = F.length(t) - F.length(
@@ -255,15 +265,18 @@ def q_text_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     low_stop = (stop_n * 100 < n_words * C4_STOPWORD_PCT).cast("int")
     high_punct = (punct_n * 100 > F.length(t) * C4_PUNCT_PCT).cast("int")
     cta_spam = (F.regexp_count(t, F.lit(PAT_CTA)) > 0).cast("int")
-    return d.select(
-        "doc_id",
-        too_short.alias("f_too_short"),
-        low_stop.alias("f_low_stopword"),
-        high_punct.alias("f_high_punct"),
-        cta_spam.alias("f_cta_spam"),
-        ((too_short + low_stop + high_punct + cta_spam) == 0)
-        .cast("int").alias("keep"),
-    )
+    flags = {"f_too_short": too_short, "f_low_stopword": low_stop,
+             "f_high_punct": high_punct, "f_cta_spam": cta_spam}
+    keep = ((too_short + low_stop + high_punct + cta_spam) == 0).cast("int")
+    return flags, keep
+
+
+def q_text_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ._util import rebalance_scan
+    d = rebalance_scan(table(spark, sf_dir, "documents"))
+    flags, keep = c4_flags(F.col("text"))
+    return d.select("doc_id", *(c.alias(n) for n, c in flags.items()),
+                    keep.alias("keep"))
 
 
 # --- extension: Gopher quality rules (Rae et al. 2021, "Scaling
@@ -391,7 +404,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spuriously merge them with empty docs in dedup/shard routing
     d = table(spark, sf_dir, "documents") \
         .filter(F.col("text").isNotNull())
-    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
+    norm = normalized(F.col("text"))
     wints = F.transform(
         F.split(norm, " "),
         lambda w: F.conv(F.substring(F.md5(w), 1, 7), 16, 10)
@@ -517,7 +530,7 @@ def q_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import davg, rebalance_scan, sql_davg  # noqa: F401
     d = rebalance_scan(table(spark, sf_dir, "documents")) \
         .select("source", "text", "n_chars")
-    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
+    norm = normalized(F.col("text"))
     w = F.split(F.col("text"), " ")
     # dratio travels as integer micro-units with an EXPLICIT round():
     # ratios of small ints can land exactly on a 1e-6 half-tie (any
@@ -609,6 +622,11 @@ def _sql_count(pat: str) -> str:
     return f"len(regexp_extract_all(text, '{pat}'))"
 
 
+def _sql_normalized(col: str) -> str:
+    """The DuckDB twin of normalized()."""
+    return f"lower(regexp_replace({col}, '\\s+', ' ', 'g'))"
+
+
 def _sql_ctfidf() -> str:
     return f"""
 WITH tok AS (
@@ -669,7 +687,7 @@ def _sql_scorecard() -> str:
     return f"""
 WITH per_doc AS (
   SELECT source, n_chars,
-         md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp,
+         md5({_sql_normalized('text')}) AS fp,
          CAST(ROUND(CAST(len(list_distinct(string_split(text, ' ')))
                          AS DOUBLE)
                     / len(string_split(text, ' ')) * 1000000) AS BIGINT)
@@ -705,7 +723,7 @@ ORACLE = {
     "text_fingerprint": f"""
 WITH n AS (
   SELECT doc_id,
-         lower(regexp_replace(text, '\\s+', ' ', 'g')) AS norm
+         {_sql_normalized('text')} AS norm
   FROM documents WHERE text IS NOT NULL
 ), h AS (
   SELECT doc_id, norm,
@@ -759,7 +777,7 @@ WITH f AS (
            / length(text) AS punct_ratio,
          {_sql_count(PAT_STOPWORD)} / {_SQL_NWORDS} AS stop_ratio,
          LEAST(1.0, {_SQL_NWORDS} / 50.0) AS len_score,
-         md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp
+         md5({_sql_normalized('text')}) AS fp
   FROM documents
 )
 SELECT doc_id, lang,

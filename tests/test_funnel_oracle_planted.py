@@ -25,7 +25,7 @@ def _bucket(v, mod=100) -> int:
 def _corpus():
     """70 docs, ~20 words each, lang/source columns like the fixture
     (the benchmark hash slice is empty below doc_id 62, so the corpus
-    must reach past it)."""
+    must reach past it), then four edge texts."""
     base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
             "juliet kilo lima mike november oscar papa quebec romeo "
             "sierra tango the of and to in").split()
@@ -57,7 +57,9 @@ def _corpus():
                   if i not in bench_ids and i not in
                   (2, 4, 7, 9, 12, 13, 15, 16, 17))
     docs[victim] = docs[victim] + " " + gram
-    return docs
+    # edge texts: two NULLs (in no count on either side), an empty doc
+    # and a whitespace-only doc (both counted, distinct contents)
+    return docs + [None, None, "", "   "]
 
 
 @pytest.fixture(scope="module")
@@ -69,7 +71,8 @@ def planted_dir(tmp_path_factory):
         "text": docs,
         "lang": ["en"] * len(docs),
         "source": [f"src{i % 3}" for i in range(len(docs))],
-        "n_chars": pa.array([len(t) for t in docs], pa.int64()),
+        "n_chars": pa.array([None if t is None else len(t) for t in docs],
+                            pa.int64()),
     })
     pq.write_table(tbl, str(d / "documents.parquet"))
     return str(d)
@@ -88,7 +91,7 @@ def test_funnel_oracle_agrees_on_planted_corpus(spark, planted_dir):
     for k, v in want.items():
         assert int(got[k]) == int(v), (k, got[k], v)
     # every planted leg actually fired
-    assert got["n_docs"] == 70
+    assert got["n_docs"] == 72             # the two NULL texts excluded
     assert got["drop_quality"] >= 2        # short + CTA
     assert got["drop_dup"] == 2            # two exact-dup groups
     assert got["drop_contaminated"] >= 1   # the shared benchmark gram

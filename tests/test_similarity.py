@@ -123,12 +123,24 @@ def test_ivf_plan_has_no_array_carrying_shuffle(spark, corpus, queries):
             assert "embedding" not in block and "qe#" not in block, block
 
 
-def test_brute_force_excludes_self_and_ranks_densely(corpus, queries):
+def test_brute_force_excludes_self_and_ranks_densely(spark, corpus, queries):
     df = brute_force_topk(queries, corpus, TOP_K)
     assert df.filter(F.col("query_id") == F.col("vec_id")).count() == 0
     ranks = [r.rank for r in df.filter(F.col("query_id") == 0)
              .orderBy("rank").collect()]
     assert ranks == list(range(1, len(ranks) + 1))
+    # a zero vector in the corpus: under ANSI mode its cosine is NULL
+    # and it ranks last, instead of failing the query
+    dim = len(corpus.first().embedding)
+    zero = spark.createDataFrame([(10**9, [0.0] * dim)],
+                                 corpus.schema)
+    with_zero = corpus.unionByName(zero)
+    n = with_zero.count()
+    with conf_gates(spark, {"spark.sql.ansi.enabled": "true"}):
+        rows = (brute_force_topk(queries, with_zero, n)
+                .filter(F.col("query_id") == 0).collect())
+    last = max(rows, key=lambda r: r.rank)
+    assert (last.vec_id, last.cos, last.rank) == (10**9, None, n - 1)
 
 
 def test_quantization_reconstruction_error_bound(spark):

@@ -200,10 +200,11 @@ HEADLINE = [
      "fold through bin-level partials in a single two-level agg (the "
      "r14 shape ran the Python fold twice, once per join branch)"),
     ("curate_funnel_stats",
-     "r15: quality/repetition/LM flags now share ONE projection chain "
-     "over one corpus scan (was three separate scans); side sets "
-     "(dup keep-set, contaminated ids, span-dup ids) stay id-only "
-     "broadcast side-plans"),
+     "the registry's own C4, repetition and unigram-NLL rule stages "
+     "share ONE projection chain over one corpus scan (the checkpointed "
+     "8-column flags frame); side sets (dup keep-set, contaminated ids, "
+     "span-dup ids) stay id-only broadcast side-plans; run_curation "
+     "observes these same aggregates on its write pass"),
     ("ml_auto_arima_orders",
      "r14: selection surface — one applyInPandas fit per symbol over "
      "the shared resample grid, frozen-lookup literals ride the "
@@ -220,6 +221,9 @@ _ADDR = re.compile(r"#\d+L?")
 # plan_ids churn on every regeneration even when the plan is
 # structurally identical — strip them like expression ids
 _PLAN_ID = re.compile(r", \[plan_id=\d+\]")
+# the warehouse-backed entries scan a per-session dir named after the
+# applicationId (events_local-<ms>_...) — strip it too
+_APP_ID = re.compile(r"(?<=events_)local-\d+")
 
 
 def main() -> None:
@@ -235,14 +239,14 @@ def main() -> None:
         "# PLANS — headline physical plans",
         "",
         f"Auto-generated by `python tools/plans.py` at sf_dir={sf_dir}; "
-        "do not edit by hand. Expression ids (#n) and plan_ids are "
-        "stripped for stable diffs. Structural rules are enforced by "
-        "`tests/test_plan_guards.py`.",
+        "do not edit by hand. Expression ids (#n), plan_ids and "
+        "application ids are stripped for stable diffs. Structural rules "
+        "are enforced by `tests/test_plan_guards.py`.",
     ]
     for name, note in HEADLINE:
         df = qs[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = _PLAN_ID.sub("", _ADDR.sub("", plan))
+        plan = _APP_ID.sub("<app>", _PLAN_ID.sub("", _ADDR.sub("", plan)))
         lines = [ln.rstrip() for ln in plan.split("\n")]
         if len(lines) > 40:
             lines = lines[:40] + [f"… (+{len(plan.splitlines()) - 40} lines)"]
