@@ -78,6 +78,15 @@ def rebalance_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+def word_2grams() -> Column:
+    """The word-2-gram array `_w[i] + ' ' + _w[i + 1]` of a words column
+    named `_w`, as an indexed transform: O(n) cheap ops, where
+    array_join over slices would allocate a sliced array per gram. A
+    1-word array gives an empty slice, so no guard is needed."""
+    return F.expr("transform(slice(_w, 1, size(_w) - 1), "
+                  "(w, i) -> concat(w, ' ', _w[i + 1]))")
+
+
 def dsum(col: str | Column, scale: int = 6) -> Column:
     """Order-independent double sum: exact decimal sum, cast back to double.
 

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import literal_map, session_artifact, table
+from ._util import literal_map, session_artifact, table, word_2grams
 from .sampling import _hash_bucket, _sql_hash_bucket
 
 NGRAM = 5            # contamination gram width (words)
@@ -176,16 +176,12 @@ def repetition_stages():
                        F.when(w == acc["prev"], acc["run"] + 1)
                         .otherwise(F.lit(1))).alias("best")),
         lambda acc: acc["best"])
-    # indexed transform + concat: O(n) cheap ops, vs array_join(slice)
-    # which allocates a sliced array per gram
-    g2 = F.expr("transform(slice(_w, 1, size(_w) - 1), "
-                "(w, i) -> concat(w, ' ', _w[i + 1]))")
     top_frac = F.when(F.col("n_words") > 0,
                       F.col("_top") / F.col("n_words")).otherwise(0.0)
     dup2 = F.when(F.col("_n2") > 0,
                   1.0 - F.col("_nd2") / F.col("_n2")).otherwise(0.0)
     return (
-        [g2.alias("_g2")],
+        [word_2grams().alias("_g2")],
         [F.size("_w").alias("n_words"),
          F.size(F.array_distinct("_w")).alias("_nd"),
          top_cnt.alias("_top"),
@@ -434,13 +430,10 @@ def _build_bigram(docs: DataFrame, text_col: str, vocab_k: int,
     import math
     uni_lp, uni_oov, _ = unigram_model(docs, text_col, UNIGRAM_VOCAB_K,
                                        cache_key=cache_key)
-    w = F.split(F.col(text_col), " ")
-    grams = F.expr("transform(slice(_w, 1, size(_w) - 1), "
-                   "(x, i) -> concat(x, ' ', _w[i + 1]))")
     bcnt = (docs.filter(F.col(text_col).isNotNull())
                 .filter(F.size(F.split(F.col(text_col), " ")) >= 2)
-                .select(w.alias("_w"))
-                .select(F.explode_outer(grams).alias("bg"))
+                .select(split_words(text_col))
+                .select(F.explode_outer(word_2grams()).alias("bg"))
                 .groupBy("bg").agg(F.count("*").alias("c")))
     tot = bcnt.agg(F.sum("c").alias("t"), F.count("*").alias("v")).first()
     top = bcnt.orderBy(F.desc("c"), "bg").limit(vocab_k + 1).collect()
@@ -472,8 +465,6 @@ def bigram_score(docs: DataFrame, blp: dict[str, int],
     avg_nll in nats of the 0.7/0.3 interpolated model."""
     bmap = literal_map(blp)
     umap = literal_map(ulp)
-    grams = F.expr("transform(slice(_w, 1, size(_w) - 1), "
-                   "(x, i) -> concat(x, ' ', _w[i + 1]))")
     # per-bigram mixed score in 1e-9 nats: 7·blp8(bigram) + 3·ulp8(w2);
     # missing bigram -> stupid backoff: alpha·P_uni(w2), i.e.
     # blp8 := ulp8(w2) + ln(0.4)·1e8
@@ -491,7 +482,7 @@ def bigram_score(docs: DataFrame, blp: dict[str, int],
     return (docs.filter(F.col(text_col).isNotNull())
             .filter(F.size(F.split(F.col(text_col), " ")) >= 2)
             .select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
-            .select(id_col, "_w", grams.alias("_bg"))
+            .select(id_col, "_w", word_2grams().alias("_bg"))
             .select(id_col, "_bg", tok.alias("_lp"))
             .select(F.col(id_col),
                     F.size("_bg").alias("n_bigrams"),

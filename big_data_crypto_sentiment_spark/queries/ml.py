@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ._util import session_artifact, table
+from .text import _sql_count
 from .timeseries import q_ts_resample_ffill
 
 HOLDOUT = 12          # grid points held out for evaluation
@@ -44,6 +45,7 @@ MAPE_CLIP = 1e-8      # arima.py:133 clips the denominator
 
 POS_WORDS = ("fast", "big")
 NEG_WORDS = ("slow", "small")
+LABEL_MARGIN = 0.05   # |polarity| above which a lexicon label is not NEUTRAL
 
 
 def _pseudo_prob(seed_mult: int):
@@ -53,6 +55,25 @@ def _pseudo_prob(seed_mult: int):
 
 
 # --- M1: sentiment scoring column math ---
+def m1_scores(pneg, pneu, ppos) -> dict:
+    """The M1 math over three class-probability columns, by output name:
+    renormalized p_neg/p_neu/p_pos, score = P(pos) − P(neg), magnitude =
+    P(pos) + P(neg), argmax label, buy/sell action
+    (dataflow/stream_join.py:327-344)."""
+    s = pneg + pneu + ppos
+    pneg, pneu, ppos = pneg / s, pneu / s, ppos / s
+    score = ppos - pneg
+    return {
+        "p_neg": pneg, "p_neu": pneu, "p_pos": ppos,
+        "sentiment_score": score,
+        "sentiment_magnitude": ppos + pneg,
+        "sentiment_label": (F.when(ppos >= F.greatest(pneu, pneg), "POSITIVE")
+                             .when(pneu >= pneg, "NEUTRAL")
+                             .otherwise("NEGATIVE")),
+        "action_signal": F.when(score > 0, "buy").otherwise("sell"),
+    }
+
+
 def q_ml_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     raw = ev.select(
@@ -61,34 +82,59 @@ def q_ml_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pseudo_prob(13).alias("rneu"),
         _pseudo_prob(29).alias("rpos"),
     )
-    s = F.col("rneg") + F.col("rneu") + F.col("rpos")
-    pneg, pneu, ppos = (F.col(c) / s for c in ("rneg", "rneu", "rpos"))
-    score = ppos - pneg
+    m = m1_scores(F.col("rneg"), F.col("rneu"), F.col("rpos"))
     empty = F.col("value").isNull()  # stands in for the empty-text path
-    label = (F.when(ppos >= F.greatest(pneu, pneg), "POSITIVE")
-              .when(pneu >= pneg, "NEUTRAL")
-              .otherwise("NEGATIVE"))
     return raw.select(
         "event_id", "event_type",
-        F.when(empty, None).otherwise(score).alias("sentiment_score"),
-        F.when(empty, None).otherwise(ppos + pneg).alias("sentiment_magnitude"),
-        F.when(empty, None).otherwise(label).alias("sentiment_label"),
-        F.when(empty, None)
-         .otherwise(F.when(score > 0, "buy").otherwise("sell"))
-         .alias("action_signal"),
-    )
+        *(F.when(empty, None).otherwise(m[k]).alias(k)
+          for k in ("sentiment_score", "sentiment_magnitude",
+                    "sentiment_label", "action_signal")))
 
 
 # --- M5: lexicon (VADER-style) sentiment over documents ---
+def word_count(t, w: str):
+    """Whole-word (`\\b`-bounded, case-sensitive) occurrences of `w` in
+    the text column `t`."""
+    return F.regexp_count(t, F.lit(rf"\b{w}\b"))
+
+
+def _sql_word_count(w: str) -> str:
+    """The DuckDB twin of word_count over `text`."""
+    return _sql_count(rf"\b{w}\b")
+
+
 def lexicon_polarity(t=None):
     """(n_pos, n_neg, polarity) column expressions over a text column —
     pure map-side math, reusable inline (the model-distillation teacher
     labels ride the SAME scan as the student's features; no self-join)."""
     t = F.col("text") if t is None else t
-    n_pos = sum(F.regexp_count(t, F.lit(rf"\b{w}\b")) for w in POS_WORDS)
-    n_neg = sum(F.regexp_count(t, F.lit(rf"\b{w}\b")) for w in NEG_WORDS)
+    n_pos = sum(word_count(t, w) for w in POS_WORDS)
+    n_neg = sum(word_count(t, w) for w in NEG_WORDS)
     polarity = (n_pos - n_neg) / F.greatest(n_pos + n_neg, F.lit(1))
     return n_pos, n_neg, polarity
+
+
+# the DuckDB twins of lexicon_polarity() over `text`
+_SQL_N_POS, _SQL_N_NEG = (" + ".join(_sql_word_count(w) for w in ws)
+                          for ws in (POS_WORDS, NEG_WORDS))
+_SQL_POLARITY = (f"(({_SQL_N_POS}) - ({_SQL_N_NEG})) "
+                 f"/ GREATEST(({_SQL_N_POS}) + ({_SQL_N_NEG}), 1)")
+
+
+def lexicon_label(polarity, classes=("NEGATIVE", "NEUTRAL", "POSITIVE")):
+    """The lexicon label rule: POSITIVE above +LABEL_MARGIN, NEGATIVE
+    below −LABEL_MARGIN, else NEUTRAL, spelled as `classes`."""
+    neg, neu, pos = classes
+    return (F.when(polarity > LABEL_MARGIN, pos)
+             .when(polarity < -LABEL_MARGIN, neg)
+             .otherwise(neu))
+
+
+def _sql_lexicon_label(polarity: str) -> str:
+    """The DuckDB twin of lexicon_label()."""
+    return (f"CASE WHEN {polarity} > {LABEL_MARGIN} THEN 'POSITIVE' "
+            f"WHEN {polarity} < -{LABEL_MARGIN} THEN 'NEGATIVE' "
+            "ELSE 'NEUTRAL' END")
 
 
 def q_ml_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,9 +144,7 @@ def q_ml_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         n_pos.alias("n_pos"), n_neg.alias("n_neg"),
         F.round(polarity, 6).alias("polarity"),
-        F.when(polarity > 0.05, "POSITIVE")
-         .when(polarity < -0.05, "NEGATIVE")
-         .otherwise("NEUTRAL").alias("lexicon_label"),
+        lexicon_label(polarity).alias("lexicon_label"),
     )
 
 
@@ -1027,37 +1071,22 @@ def score_sentiment_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lexicon is pure column math — q_ml_lexicon_sentiment's label rule
     # inlined), instead of a doc_id self-join of two documents scans
     _, _, polarity = lexicon_polarity()
-    label = (F.when(polarity > 0.05, 2.0)
-              .when(polarity < -0.05, 0.0)
-              .otherwise(1.0).alias("label"))
-    teacher = (F.when(polarity > 0.05, "POSITIVE")
-                .when(polarity < -0.05, "NEGATIVE")
-                .otherwise("NEUTRAL").alias("teacher_label"))
-    labeled = docs.select("doc_id", "text", label, teacher)
+    labeled = docs.select(
+        "doc_id", "text",
+        lexicon_label(polarity, (0.0, 1.0, 2.0)).alias("label"),
+        lexicon_label(polarity).alias("teacher_label"))
     model = fit_sentiment_pipeline(labeled)
     probs = (model.transform(labeled)
              .select("doc_id", "teacher_label",
                      vector_to_array("probability").alias("p")))
-    pneg, pneu, ppos = (F.col("p")[i] for i in range(3))
-    # downstream column math identical to the oracle-checked M1 query
-    # (stream_join.py:327-344): softmax output renormalizes to itself,
-    # but the renormalize step is kept for semantic parity
-    s = pneg + pneu + ppos
-    pneg, pneu, ppos = pneg / s, pneu / s, ppos / s
-    score = ppos - pneg
-    label = (F.when(ppos >= F.greatest(pneu, pneg), "POSITIVE")
-              .when(pneu >= pneg, "NEUTRAL")
-              .otherwise("NEGATIVE"))
+    # a softmax output renormalizes to itself, but the M1 math keeps the
+    # renormalize step for semantic parity
+    m = m1_scores(*(F.col("p")[i] for i in range(3)))
+    strings = ("sentiment_label", "action_signal")
     return probs.select(
         "doc_id", "teacher_label",
-        F.round(pneg, 6).alias("p_neg"),
-        F.round(pneu, 6).alias("p_neu"),
-        F.round(ppos, 6).alias("p_pos"),
-        F.round(score, 6).alias("sentiment_score"),
-        F.round(ppos + pneg, 6).alias("sentiment_magnitude"),
-        label.alias("sentiment_label"),
-        F.when(score > 0, "buy").otherwise("sell").alias("action_signal"),
-    )
+        *((c if k in strings else F.round(c, 6)).alias(k)
+          for k, c in m.items()))
 
 
 def q_ml_sentiment_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,8 +1178,8 @@ def _tfidf_frozen_sums(spark: SparkSession, sf_dir: str) -> dict[str, int]:
         cols = [(n_pos - n_neg).cast("long").alias("y"),
                 F.round(pol * 1e6).cast("long").alias("y6")]
         for i, (t, _) in enumerate(TFIDF_FROZEN_VOCAB):
-            cols.append(F.regexp_count(F.col("text"), F.lit(rf"\b{t}\b"))
-                         .cast("long").alias(f"tf{i}"))
+            cols.append(word_count(F.col("text"), t)
+                        .cast("long").alias(f"tf{i}"))
         aggs = []
         for i in range(len(TFIDF_FROZEN_VOCAB)):
             tf = F.col(f"tf{i}")
@@ -1396,8 +1425,7 @@ def q_ml_tfidf_ridge_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, pol = lexicon_polarity()
     cols = [F.col("doc_id"), F.round(pol * 1e6).cast("long").alias("y6")]
     for j, (term, _) in enumerate(TFIDF_FROZEN_VOCAB):
-        cols.append(F.regexp_count(t, F.lit(rf"\b{term}\b"))
-                     .cast("long").alias(f"tf{j}"))
+        cols.append(word_count(t, term).cast("long").alias(f"tf{j}"))
     # both contract passes scan this 18-column integer projection; the
     # 16 regexp_counts over text are its dominant cost, so persist it
     # once (pass 1 reads the cache, pass 2 re-reads it). Independent
@@ -2013,16 +2041,17 @@ b AS (
 )
 """
 
+# the frozen vocabulary's term counts tf0, tf1, … as a DuckDB select
+# list (the twin of the Spark word_count projections)
+_SQL_TFS = ",\n         ".join(f"{_sql_word_count(t)} AS tf{i}"
+                               for i, (t, _) in enumerate(TFIDF_FROZEN_VOCAB))
+# the live label round(polarity·1e6) as a DuckDB BIGINT
+_SQL_Y6 = f"CAST(ROUND(({_SQL_POLARITY}) * 1000000.0) AS BIGINT)"
+
+
 def _sql_tfidf_frozen() -> str:
     """DuckDB twin of q_ml_tfidf_terms_frozen, generated from the same
     frozen literals so the two can never drift apart."""
-    pos = " + ".join(
-        f"len(regexp_extract_all(text, '\\b{w}\\b'))" for w in POS_WORDS)
-    neg = " + ".join(
-        f"len(regexp_extract_all(text, '\\b{w}\\b'))" for w in NEG_WORDS)
-    tfs = ",\n         ".join(
-        f"len(regexp_extract_all(text, '\\b{t}\\b')) AS tf{i}"
-        for i, (t, _) in enumerate(TFIDF_FROZEN_VOCAB))
     sums = ",\n         ".join(
         f"CAST(SUM(tf{i} * y) AS BIGINT) AS xy{i},\n"
         f"         CAST(SUM(tf{i} * tf{i}) AS BIGINT) AS xx{i}"
@@ -2033,8 +2062,8 @@ def _sql_tfidf_frozen() -> str:
         for i, (t, idf3) in enumerate(TFIDF_FROZEN_VOCAB))
     return f"""
 WITH base AS (
-  SELECT ({pos}) - ({neg}) AS y,
-         {tfs}
+  SELECT ({_SQL_N_POS}) - ({_SQL_N_NEG}) AS y,
+         {_SQL_TFS}
   FROM documents WHERE text IS NOT NULL
 ), s AS (
   SELECT {sums}
@@ -2059,13 +2088,6 @@ def _sql_tfidf_top_terms() -> str:
     label, same 16-term association sums, same rounded divisions, rank
     by |coef8| with the term tiebreak; the two live flags are the
     oracle's literal 1."""
-    pos = " + ".join(
-        f"len(regexp_extract_all(text, '\\b{w}\\b'))" for w in POS_WORDS)
-    neg = " + ".join(
-        f"len(regexp_extract_all(text, '\\b{w}\\b'))" for w in NEG_WORDS)
-    tfs = ",\n         ".join(
-        f"len(regexp_extract_all(text, '\\b{t}\\b')) AS tf{i}"
-        for i, (t, _) in enumerate(TFIDF_FROZEN_VOCAB))
     sums = ",\n         ".join(
         f"CAST(SUM(tf{i} * y6) AS BIGINT) AS xy{i},\n"
         f"         CAST(SUM(tf{i} * tf{i}) AS BIGINT) AS xx{i}"
@@ -2076,10 +2098,8 @@ def _sql_tfidf_top_terms() -> str:
         for i, (t, idf3) in enumerate(TFIDF_FROZEN_VOCAB))
     return f"""
 WITH base AS (
-  SELECT CAST(ROUND(((({pos}) - ({neg}))
-                     / GREATEST(({pos}) + ({neg}), 1)) * 1000000.0)
-              AS BIGINT) AS y6,
-         {tfs}
+  SELECT {_SQL_Y6} AS y6,
+         {_SQL_TFS}
   FROM documents WHERE text IS NOT NULL
 ), s AS (
   SELECT {sums}
@@ -2113,13 +2133,6 @@ def _sql_tfidf_cv() -> str:
     (DuckDB decimal literals would otherwise change the arithmetic).
     The live-fit flags are asserted as literal 1."""
     nf = CV_FOLDS_REG
-    pos = " + ".join(
-        f"len(regexp_extract_all(text, '\\b{w}\\b'))" for w in POS_WORDS)
-    neg = " + ".join(
-        f"len(regexp_extract_all(text, '\\b{w}\\b'))" for w in NEG_WORDS)
-    tfs = ",\n         ".join(
-        f"len(regexp_extract_all(text, '\\b{t}\\b')) AS tf{j}"
-        for j, (t, _) in enumerate(TFIDF_FROZEN_VOCAB))
     tf_names = ", ".join(f"tf{j}" for j in range(len(TFIDF_FROZEN_VOCAB)))
     s_parts = []
     for f in range(1, nf + 1):
@@ -2176,10 +2189,8 @@ FROM c CROSS JOIN e""")
     return f"""
 WITH lab AS (
   SELECT doc_id,
-         CAST(ROUND(((({pos}) - ({neg}))
-                     / GREATEST(({pos}) + ({neg}), 1)) * 1000000.0)
-              AS BIGINT) AS y6,
-         {tfs}
+         {_SQL_Y6} AS y6,
+         {_SQL_TFS}
   FROM documents
 ), o AS (
   SELECT doc_id, y6, {tf_names},
@@ -2233,23 +2244,12 @@ FROM p
 """,
     # ml_sentiment_model (graduated r15): exact lexicon-teacher class
     # counts hash; the live student's distillation agreement is
-    # asserted as literal 1. Same regex literals as
-    # ml_lexicon_sentiment so the teacher math can never drift.
-    "ml_sentiment_model": """
-WITH c AS (
-  SELECT len(regexp_extract_all(text, '\\bfast\\b'))
-           + len(regexp_extract_all(text, '\\bbig\\b')) AS n_pos,
-         len(regexp_extract_all(text, '\\bslow\\b'))
-           + len(regexp_extract_all(text, '\\bsmall\\b')) AS n_neg
-  FROM documents
-), lab AS (
-  SELECT CASE
-           WHEN (n_pos - n_neg) / GREATEST(n_pos + n_neg, 1) > 0.05
-             THEN 'POSITIVE'
-           WHEN (n_pos - n_neg) / GREATEST(n_pos + n_neg, 1) < -0.05
-             THEN 'NEGATIVE'
-           ELSE 'NEUTRAL' END AS t
-  FROM c
+    # asserted as literal 1. Same lexicon twins as ml_lexicon_sentiment
+    # so the teacher math can never drift.
+    "ml_sentiment_model": f"""
+WITH lab AS (
+  SELECT {_sql_lexicon_label("pol")} AS t
+  FROM (SELECT {_SQL_POLARITY} AS pol FROM documents)
 )
 SELECT COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN t = 'POSITIVE' THEN 1 ELSE 0 END) AS BIGINT)
@@ -2261,20 +2261,14 @@ SELECT COUNT(*) AS n_docs,
        1 AS student_agree_ge_min
 FROM lab
 """,
-    "ml_lexicon_sentiment": """
+    "ml_lexicon_sentiment": f"""
 WITH c AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '\\bfast\\b'))
-           + len(regexp_extract_all(text, '\\bbig\\b')) AS n_pos,
-         len(regexp_extract_all(text, '\\bslow\\b'))
-           + len(regexp_extract_all(text, '\\bsmall\\b')) AS n_neg
+  SELECT doc_id, {_SQL_N_POS} AS n_pos, {_SQL_N_NEG} AS n_neg,
+         {_SQL_POLARITY} AS pol
   FROM documents
 )
-SELECT doc_id, n_pos, n_neg,
-       ROUND((n_pos - n_neg) / GREATEST(n_pos + n_neg, 1), 6) AS polarity,
-       CASE WHEN (n_pos - n_neg) / GREATEST(n_pos + n_neg, 1) > 0.05 THEN 'POSITIVE'
-            WHEN (n_pos - n_neg) / GREATEST(n_pos + n_neg, 1) < -0.05 THEN 'NEGATIVE'
-            ELSE 'NEUTRAL' END AS lexicon_label
+SELECT doc_id, n_pos, n_neg, ROUND(pol, 6) AS polarity,
+       {_sql_lexicon_label("pol")} AS lexicon_label
 FROM c
 """,
     "ml_forecast_metrics": """

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._util import literal_map, session_artifact, table
+from ._util import literal_map, session_artifact, table, word_2grams
 
 SAMPLE_MOD = 1_000_000
 SAMPLE_RATE_PPM = 200_000      # 20% dev-subset sample
@@ -259,16 +259,14 @@ _GUMBEL_MOD = 1 << 20
 
 
 def _feature_buckets(words_col):
-    """array<int> of hashed unigram + bigram feature buckets. The
-    bigram build is the O(n) indexed-transform form (cleaning.py's g2
-    A/B note); 1-word docs yield an empty bigram slice, no guard
-    needed (no sequence(), so no descending-range trap)."""
+    """array<int> of hashed unigram + bigram feature buckets over the
+    `_w` words column; the bigrams are word_2grams, which needs no
+    guard for 1-word docs (no sequence(), so no descending-range
+    trap)."""
     uni = F.transform(words_col,
                       lambda w: _hash_bucket(w, DSIR_BUCKETS).cast("int"))
-    bi = F.transform(
-        F.expr("transform(slice(_w, 1, size(_w) - 1), "
-               "(w, i) -> concat(w, ' ', _w[i + 1]))"),
-        lambda g: _hash_bucket(g, DSIR_BUCKETS).cast("int"))
+    bi = F.transform(word_2grams(),
+                     lambda g: _hash_bucket(g, DSIR_BUCKETS).cast("int"))
     return F.concat(uni, bi)
 
 

@@ -3,11 +3,14 @@
 
   * T7 — the reference enriches each tweet with a sentiment model in a
     stateless DoFn whose heavyweight model loads once per worker in
-    setup() (dataflow/stream_join.py:231-346). Spark form: an
-    ITERATOR-form pandas_udf — the closure body before the batch loop
-    runs once per executor task (the setup() analog, where a real model
-    would load); each Arrow batch is then scored vectorized. Works
-    identically on batch and streaming DataFrames.
+    setup() (dataflow/stream_join.py:231-346). The per-tweet score here
+    is the registry's lexicon (queries/ml.py lexicon_polarity) as native
+    column math: it runs in the JVM, with no Python worker, and the
+    speed layer and the registry score the same text alike. The
+    setup() analog — a model loaded once per executor task, then every
+    Arrow batch scored vectorized — is the predict_batch_udf form
+    below (enrich_with_model_score). Both work identically on batch
+    and streaming DataFrames.
   * S16 — producers publish JSON payloads with event_timestamp /
     crypto_key message attributes (coincap-simulation/main.py:82-105,
     twitter_simulation/simulate_twitter_flow.py:39-60). Spark form: a
@@ -18,44 +21,19 @@
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-POS_WORDS = frozenset({"fast", "big", "up", "moon", "buy"})
-NEG_WORDS = frozenset({"slow", "small", "down", "sell", "outage"})
-
-
-def make_lexicon_score_udf():
-    """Built lazily (pandas_udf registration needs an active session)."""
-
-    @pandas_udf("double")
-    def lexicon_score_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # one-time per-task init (the DoFn.setup() analog): build the scorer
-        pos, neg = POS_WORDS, NEG_WORDS
-
-        def score(t):
-            if t is None or not t:
-                return None
-            words = t.lower().split()
-            p = sum(w in pos for w in words)
-            n = sum(w in neg for w in words)
-            return (p - n) / max(p + n, 1)
-
-        for batch in texts:
-            yield batch.map(score)
-
-    return lexicon_score_udf
 
 
 def enrich_with_sentiment(df: DataFrame,
                           text_col: str = "text") -> DataFrame:
-    """Attach a per-record sentiment score (batch or streaming DF)."""
+    """Attach a per-record lexicon polarity (batch or streaming DF);
+    NULL or empty text scores NULL (M1's empty-input rule)."""
+    # not at top: queries.ml imports this module while building ORACLE
+    from ..queries.ml import lexicon_polarity
+    t = F.col(text_col)
     return df.withColumn("sentiment_score",
-                         make_lexicon_score_udf()(F.col(text_col)))
+                         F.when(t != "", lexicon_polarity(t)[2]))
 
 
 # --- T7, heavyweight-model form (r12 verdict #8): the reference loads

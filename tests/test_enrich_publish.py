@@ -1,5 +1,6 @@
-"""T7 per-record pandas_udf enrichment (batch ≡ streaming) and S16
-publisher message wrapping."""
+"""T7 per-record enrichment (batch ≡ streaming; the lexicon score is the
+registry's, the model score a predict_batch_udf) and S16 publisher
+message wrapping."""
 
 import json
 
@@ -30,6 +31,24 @@ def test_enrichment_scores_batch(spark):
     assert out["SOL"] == -1.0
     assert out["FTM"] == 0.0
     assert out["SHIB"] is None
+
+
+def test_enrichment_scores_with_the_registry_lexicon(spark):
+    """The speed layer and the registry score text alike: the score is
+    lexicon_polarity's, so words outside its lexicon do not count,
+    matching is case-sensitive and on word boundaries, and NULL or
+    empty text scores NULL."""
+    from big_data_crypto_sentiment_spark.queries.ml import lexicon_polarity
+    texts = ["moon buy", "FAST slow", "big! down", "", None]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {r.id: r.sentiment_score
+           for r in enrich_with_sentiment(df).collect()}
+    want = {r.id: r.p
+            for r in df.select("id", lexicon_polarity()[2].alias("p"))
+                       .collect()}
+    assert want[3] == 0.0 and want[4] is None
+    assert got == {**want, 3: None}
+    assert got == {0: 0.0, 1: -1.0, 2: 1.0, 3: None, 4: None}
 
 
 def test_enrichment_streaming_matches_batch(spark, tmp_path):

@@ -18,12 +18,10 @@ from big_data_crypto_sentiment_spark.jobs.speed_layer import (
 )
 from big_data_crypto_sentiment_spark.jobs.train import main as train_main
 from big_data_crypto_sentiment_spark.queries._util import table
-from big_data_crypto_sentiment_spark.streaming import (
-    online_forecast,
-    replay_dir,
-    start_jsonl_sink,
-)
+from big_data_crypto_sentiment_spark.streaming.replay import replay_dir
+from big_data_crypto_sentiment_spark.streaming.sinks import start_jsonl_sink
 from big_data_crypto_sentiment_spark.streaming.stateful import (
+    online_forecast,
     reference_forecast_series,
 )
 

@@ -225,3 +225,36 @@ def test_every_package_def_is_referenced():
                                              ast.ClassDef)))
     unreferenced = sorted(n for n, k in defs.items() if names[n] <= k)
     assert not unreferenced, unreferenced
+
+
+def test_one_sentiment_lexicon():
+    """The sentiment lexicon has one definition: POS_WORDS and NEG_WORDS
+    are each bound once in the package, in queries/ml.py, and no package
+    source types a lexicon word inside a regex literal (word patterns
+    are built from the word lists by word_count and its SQL twin).
+    Checked on the source, not on the generated oracle SQL."""
+    import ast
+    import pathlib
+    import re
+
+    import big_data_crypto_sentiment_spark as pkg
+    from big_data_crypto_sentiment_spark.queries.ml import (
+        NEG_WORDS,
+        POS_WORDS,
+    )
+    root = pathlib.Path(pkg.__file__).parent
+    typed = re.compile(r"\\{1,2}b(?:%s)\\{1,2}b"
+                       % "|".join(POS_WORDS + NEG_WORDS))
+    binds, typed_lines = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        binds += [(rel, n.id) for n in ast.walk(ast.parse(src))
+                  if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+                  and n.id in ("POS_WORDS", "NEG_WORDS")]
+        typed_lines += [f"{rel}:{i}: {line.strip()}"
+                        for i, line in enumerate(src.splitlines(), 1)
+                        if typed.search(line)]
+    assert sorted(binds) == [("queries/ml.py", "NEG_WORDS"),
+                             ("queries/ml.py", "POS_WORDS")], binds
+    assert not typed_lines, typed_lines

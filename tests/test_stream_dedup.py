@@ -5,7 +5,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from big_data_crypto_sentiment_spark.streaming import dedupe_stream
+from big_data_crypto_sentiment_spark.streaming.windowed import dedupe_stream
 
 
 def _t(m, s=0):

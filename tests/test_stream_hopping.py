@@ -5,7 +5,7 @@ replayed rows."""
 
 from datetime import datetime, timedelta
 
-from big_data_crypto_sentiment_spark.streaming import hopping_window_counts
+from big_data_crypto_sentiment_spark.streaming.windowed import hopping_window_counts
 
 SCHEMA = "event_time timestamp, symbol string"
 T0 = datetime(2024, 1, 1, 10, 0, 0)

@@ -7,7 +7,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_crypto_sentiment_spark.streaming import sessionize_stream
+from big_data_crypto_sentiment_spark.streaming.windowed import sessionize_stream
 
 SCHEMA = "event_time timestamp, user_id long"
 T0 = datetime(2024, 1, 1, 10, 0, 0)

@@ -17,14 +17,16 @@ from big_data_crypto_sentiment_spark.queries.flagship import (
     prices_role,
     tweets_role,
 )
-from big_data_crypto_sentiment_spark.streaming import (
-    online_forecast,
+from big_data_crypto_sentiment_spark.streaming.replay import (
     replay_dir,
-    start_capture_sink,
-    start_jsonl_sink,
     write_replay_chunks,
 )
+from big_data_crypto_sentiment_spark.streaming.sinks import (
+    start_capture_sink,
+    start_jsonl_sink,
+)
 from big_data_crypto_sentiment_spark.streaming.stateful import (
+    online_forecast,
     reference_forecast_series,
 )
 
@@ -146,6 +148,23 @@ def test_append_mode_watermark_holds_back_open_windows(spark, replayed,
     # …and only from the tail of event time
     held_back_start = missing["event_timestamp"].min()
     assert held_back_start >= got["event_timestamp"].max()
+
+
+def test_stateful_import_loads_no_query_module():
+    """Every Python worker that unpickles the forecast function imports
+    streaming.stateful; in a fresh interpreter that import must not pull
+    in the query registry."""
+    import pathlib
+    import subprocess
+    import sys
+    code = ("import sys\n"
+            "import big_data_crypto_sentiment_spark.streaming.stateful\n"
+            "print(sorted(m for m in sys.modules if m.startswith("
+            "'big_data_crypto_sentiment_spark.queries')))")
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True,
+                         cwd=pathlib.Path(__file__).resolve().parents[1])
+    assert out.stdout.strip() == "[]"
 
 
 def test_stateful_online_forecast_matches_sequential_reference(
@@ -297,7 +316,7 @@ def test_stream_stream_join_parity_with_batch_bucketized(
     from big_data_crypto_sentiment_spark.operators.interval_join import (
         time_tolerance_join,
     )
-    from big_data_crypto_sentiment_spark.streaming import (
+    from big_data_crypto_sentiment_spark.streaming.windowed import (
         stream_stream_interval_join,
     )
     tol = "15 minutes"
@@ -339,7 +358,7 @@ def test_stream_stream_left_outer_emits_unmatched_after_watermark(
     from big_data_crypto_sentiment_spark.operators.interval_join import (
         time_tolerance_join,
     )
-    from big_data_crypto_sentiment_spark.streaming import (
+    from big_data_crypto_sentiment_spark.streaming.windowed import (
         stream_stream_interval_join,
     )
     t_stream, p_stream = replayed
@@ -396,7 +415,7 @@ def test_stream_stream_left_outer_full_set_matches_duckdb_twin(
 
     import duckdb
 
-    from big_data_crypto_sentiment_spark.streaming import (
+    from big_data_crypto_sentiment_spark.streaming.windowed import (
         stream_stream_interval_join,
     )
 
@@ -475,7 +494,7 @@ def test_stream_stream_full_outer_full_set_matches_duckdb_twin(
 
     import duckdb
 
-    from big_data_crypto_sentiment_spark.streaming import (
+    from big_data_crypto_sentiment_spark.streaming.windowed import (
         stream_stream_interval_join,
     )
 
